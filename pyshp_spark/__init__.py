@@ -22,6 +22,12 @@ Layout:
   operators/  DataFrame-level operators (spatial joins, dedup, ANN, text)
   plans/      salting planner, lineage checkpoint
   fixtures/   deterministic synthetic data generators (polygons, images)
+  worker_setup.py  once-per-Python-worker set-up (pins Spark's zip
+              archives against per-task import-cache invalidation)
 """
 
+from pyshp_spark.worker_setup import setup_worker as _setup_worker
+
 __version__ = "0.1.0"
+
+_setup_worker()

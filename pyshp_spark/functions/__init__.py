@@ -3,7 +3,6 @@ from pyshp_spark.functions.cells import (  # noqa: F401
     GRID,
     cell_id_expr,
     cell_id_sql,
-    cell_cover_udf,
     with_point_cell,
     tile_to_lonlat_cols,
     lonlat_to_tile_cols,

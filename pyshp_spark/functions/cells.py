@@ -4,9 +4,9 @@ The reference has no spatial index (its only pushdown is the per-record
 bbox prefix test, reference src/shapefile.py:1683-1687).  This module
 is the engine's scale path: points/tiles get an int64 cell id (pure
 Column math -> whole-stage codegen), polygons get a cell *cover*
-(array<long>, vectorized pandas UDF), and spatial joins become plain
-equi-joins on ``cell`` that Catalyst can broadcast / sort-merge / AQE-
-skew-split like any other join.
+(one row per cell, a JVM explode in operators/spatial.py), and
+spatial joins become plain equi-joins on ``cell`` that Catalyst can
+broadcast / sort-merge / AQE-skew-split like any other join.
 
 Two encodings:
 - grid cell: ``col + row * width`` — trivially SQL-expressible (the
@@ -23,10 +23,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 
 @dataclass(frozen=True)
@@ -134,21 +132,6 @@ def with_point_cell(df: DataFrame, x: str, y: str, grid: Grid = GRID,
             grid.cell_expr(F.col(x), F.col(y))
         ),
     )
-
-
-def cell_cover_udf(grid: Grid = GRID):
-    """pandas UDF: (xmin, ymin, xmax, ymax) -> array<long> bbox cell cover."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def cover(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
-              ymax: pd.Series) -> pd.Series:
-        out = [
-            grid.bbox_cover_np(a, b, c, d) if pd.notna(a) else np.empty(0, np.int64)
-            for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-        ]
-        return pd.Series(out)
-
-    return cover
 
 
 # -------------------------------------------------------- Morton codes ----

@@ -13,7 +13,7 @@ three-stage distributed plan:
   2. PREFILTER — bbox overlap as a pure Column expression
      (codegen'd; reference semantics sf.py:856-861, inclusive <=).
   3. REFINE — vectorized even-odd ray-cast over Arrow batches
-     (``mapInPandas``), parsing each distinct polygon WKB once per
+     (``mapInArrow``), parsing each distinct polygon WKB once per
      batch.  Bit-for-bit the reference's crossing test.
 
 Because a point maps to exactly one cell, a (point, polygon) pair
@@ -29,6 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StructType, VariantType,
+)
 from pyspark.sql.window import Window
 
 from pyshp_spark.functions.bbox import point_in_bbox_expr
@@ -97,16 +100,35 @@ def _points_with_cell(
         # hot spot is many rows at ONE exact coordinate, and a
         # coordinate-derived salt maps them all to a single (cell, salt)
         # partition — the salted join then still serializes the hot cell
-        # in one task (guide §2.5).  Hashing every point column spreads
+        # in one task (guide §2.5).  Hashing the point columns spreads
         # identical-coordinate rows across all k salts; the salt only
         # routes rows, so results are unchanged, and it stays
-        # DETERMINISTIC under task retry (no rand()).
+        # DETERMINISTIC under task retry (no rand()).  Only columns
+        # Spark can hash take part (a MapType payload fails analysis);
+        # x and y always can.  Rows that are full duplicates still share
+        # one salt — for that hot-key shape, dedup_coords=True refines
+        # each distinct coordinate once instead.
+        hashable = [
+            F.col(f.name) for f in points.schema.fields
+            if _spark_hashable(f.dataType)
+        ]
         out = out.withColumn(
             _P + "salt",
-            F.pmod(F.hash(*[F.col(c) for c in points.columns]),
-                   F.lit(salt_k)).cast("int"),
+            F.pmod(F.hash(*hashable), F.lit(salt_k)).cast("int"),
         )
     return out
+
+
+def _spark_hashable(dt: DataType) -> bool:
+    """Whether Spark's ``hash`` accepts the type: maps and variants,
+    also nested in arrays or structs, are rejected at analysis."""
+    if isinstance(dt, (MapType, VariantType)):
+        return False
+    if isinstance(dt, ArrayType):
+        return _spark_hashable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_spark_hashable(f.dataType) for f in dt.fields)
+    return True
 
 
 def _refine_pip(
@@ -126,7 +148,6 @@ def _refine_pip(
         f for f in df.schema.fields
         if (keep_wkb or f.name != "wkb") and f.name not in drop_cols
     ]
-    from pyspark.sql.types import StructType  # noqa: PLC0415
 
     out_schema = StructType(out_fields)
     out_cols = [f.name for f in out_fields]
@@ -589,7 +610,7 @@ class BroadcastPolygonIndex:
     cell -> polygon-id index (a handful of numpy buffers — each Python
     worker deserializes the broadcast in ~ms), broadcast once per
     session.
-    Every probe is a single ``mapInPandas`` over the points doing index
+    Every probe is a single ``mapInArrow`` over the points doing index
     lookup, bbox prune and ray-cast refine inside the worker, emitting
     ONLY an array of matching polygon ids per point — candidate pairs
     never cross the Arrow channel (at 45M candidates that transfer, not

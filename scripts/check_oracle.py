@@ -23,6 +23,7 @@ import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from driver_heap import driver_memory  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -75,7 +76,7 @@ def main():
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         # the gate COLLECTS full result sets to compare against DuckDB;
         # at the sf1.0 probe scale (22M+ pip rows) the default 1g
         # maxResultSize aborts the harness, not the engine

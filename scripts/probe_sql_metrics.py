@@ -17,6 +17,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 import bench  # noqa: E402
+from driver_heap import driver_memory  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 name = sys.argv[1]
@@ -31,7 +32,7 @@ spark = (
     .config("spark.sql.shuffle.partitions", "32")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.driver.memory", "16g")
+    .config("spark.driver.memory", driver_memory())
     .config("spark.ui.enabled", "true")
     .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
     .getOrCreate()

@@ -27,6 +27,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as em  # noqa: E402
+from driver_heap import driver_memory  # noqa: E402
 
 MOD = 1 << 61
 M1, M2 = 1099511628211, 2654435761
@@ -38,7 +39,7 @@ def main():
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
