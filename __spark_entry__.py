@@ -330,9 +330,6 @@ def q_pip_skew(spark, sf_dir):
     # pins the SALTED SORT-MERGE join path in the driver gate (every
     # other spatial entry auto-picks the broadcast index): hot cell
     # pre-split 8 ways + AQE as backstop, exact ray-cast refine.
-    # dedup_coords=True was A/B-measured HERE and rejected: at this
-    # ~25%-duplication factor the distinct + coordinate join-back cost
-    # more than the candidate-pair reduction saved (OPTIMIZATION_r07.md)
     pts = _pts_skewed(spark, sf_dir)
     dia = _diamond_wkb(_diamonds(spark, sf_dir))
     out = point_in_polygon_join(
@@ -363,7 +360,7 @@ def q_spatial_anti(spark, sf_dir):
 
 
 def q_knn(spark, sf_dir):
-    # deliberately exercises the cell-expansion path (no brute_threshold):
+    # deliberately exercises the cell-expansion path (not knn_brute):
     # it is the 100x-safe plan AND empirically faster here than the
     # broadcast crossJoin+window brute (5 s vs 40 s at sf0.1) — the gate
     # then value-checks it against the SQL brute oracle

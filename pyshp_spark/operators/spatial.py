@@ -5,11 +5,12 @@ scalar ray-cast (reference src/shapefile.py:856-914); joins over it
 would be O(N*M) single-threaded loops.  Here the same kernels become a
 three-stage distributed plan:
 
-  1. FILTER  — equi-join on int64 grid cells (polygon side carries an
-     exploded bbox cell cover, point side one cell).  Catalyst picks
-     broadcast-hash when the polygon side is small (we hint it), else
-     sort-merge with AQE skew splitting; optional salting spreads hot
-     cells explicitly.
+  1. FILTER  — int64 grid cells (polygon side carries an exploded
+     bbox cell cover, point side one cell).  When the polygon side
+     fits the broadcast guard, a broadcast CSR cell index answers the
+     lookup inside the refine pass and the points never shuffle;
+     otherwise a sort-merge equi-join on the cell with AQE skew
+     splitting, and optional salting (``salt_k``) spreads hot cells.
   2. PREFILTER — bbox overlap as a pure Column expression
      (codegen'd; reference semantics sf.py:856-861, inclusive <=).
   3. REFINE — vectorized even-odd ray-cast over Arrow batches
@@ -41,11 +42,27 @@ from pyshp_spark.kernels.wkb import wkb_rings
 
 _P = "__ps_"  # internal column prefix
 
-#: reserved polygon frame columns (geometry + bbox); every default
-#: polygon_cols derivation excludes exactly this set — keep the three
-#: join entry points and zonal_stats on ONE list so adding a reserved
-#: column can never silently change an aggregation grain
+#: reserved polygon frame columns (geometry + bbox); the default
+#: polygon_cols (``_polygon_attr_cols``) excludes exactly this set, so
+#: adding a reserved column can never silently change an aggregation
+#: grain
 POLYGON_META_COLS = ("wkb", "xmin", "ymin", "xmax", "ymax")
+
+#: broadcast guard for ``broadcast_polygons="auto"``: a polygon side
+#: past either bound takes the sort-merge path (read at call time)
+_MAX_BROADCAST_ROWS = 4_000_000
+_MAX_BROADCAST_BYTES = 1_500_000_000
+
+
+def _polygon_attr_cols(
+    polygons: DataFrame, polygon_cols: list[str] | None
+) -> list[str]:
+    """The polygon attribute columns a join carries: ``polygon_cols``
+    as given (``[]`` carries none), or by default every column except
+    the geometry and bbox."""
+    if polygon_cols is not None:
+        return list(polygon_cols)
+    return [c for c in polygons.columns if c not in POLYGON_META_COLS]
 
 
 def _explode_bbox_cover(
@@ -106,8 +123,7 @@ def _points_with_cell(
         # DETERMINISTIC under task retry (no rand()).  Only columns
         # Spark can hash take part (a MapType payload fails analysis);
         # x and y always can.  Rows that are full duplicates still share
-        # one salt — for that hot-key shape, dedup_coords=True refines
-        # each distinct coordinate once instead.
+        # one salt.
         hashable = [
             F.col(f.name) for f in points.schema.fields
             if _spark_hashable(f.dataType)
@@ -195,14 +211,9 @@ def _refine_pip(
     return df.mapInArrow(refine, schema=out_schema)
 
 
-def _resolve_broadcast(
-    polygons: DataFrame,
-    broadcast_polygons,
-    max_broadcast_rows: int,
-    max_broadcast_bytes: int = 1_500_000_000,
-) -> bool:
+def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
     """"auto" probes the build side with a LIMIT-bounded count (scans at
-    most max_broadcast_rows+1 rows, so cheap even on a huge table) and
+    most _MAX_BROADCAST_ROWS+1 rows, so cheap even on a huge table) and
     falls back to the shuffle path when it is too big to broadcast.
 
     The guard is byte-aware, not just row-count-aware: a few million
@@ -214,8 +225,8 @@ def _resolve_broadcast(
     next to the broadcast collect that would follow anyway."""
     if broadcast_polygons != "auto":
         return bool(broadcast_polygons)
-    n = polygons.limit(max_broadcast_rows + 1).count()
-    if n > max_broadcast_rows:
+    n = polygons.limit(_MAX_BROADCAST_ROWS + 1).count()
+    if n > _MAX_BROADCAST_ROWS:
         return False
     if n and "wkb" in polygons.columns:
         total_wkb = (
@@ -224,7 +235,7 @@ def _resolve_broadcast(
             .first()[0]
         ) or 0
         # 96 B/row slack for the bbox doubles + id attrs + pandas overhead
-        if total_wkb + n * 96.0 > max_broadcast_bytes:
+        if total_wkb + n * 96.0 > _MAX_BROADCAST_BYTES:
             return False
     return True
 
@@ -239,28 +250,29 @@ def point_in_polygon_join(
     salt_k: int | None = None,
     point_cols: list[str] | None = None,
     polygon_cols: list[str] | None = None,
-    max_broadcast_rows: int = 4_000_000,
-    max_broadcast_bytes: int = 1_500_000_000,
     point_out_cols: list[str] | None = None,
-    dedup_coords: bool = False,
 ) -> DataFrame:
     """Inner join: each point row paired with every polygon containing it.
 
-    ``polygons`` needs columns (wkb, xmin, ymin, xmax, ymax, ...).
-    Containment semantics = even-odd ray-cast over all rings, matching
-    the reference's organized exterior-minus-holes membership.
+    ``polygons`` needs columns (wkb, xmin, ymin, xmax, ymax, ...);
+    ``polygon_cols`` names the attributes carried to the output
+    (default: every other column; ``[]``: none).  Containment
+    semantics = even-odd ray-cast over all rings, matching the
+    reference's organized exterior-minus-holes membership.
 
-    Scale notes: the broadcast path is for dimension-sized polygon
-    sets — geometries are parsed ONCE (distributed, on the executors)
-    into flat edge arrays shipped as a broadcast variable, so the cell
-    equi-join carries only a dense int polygon id (no WKB bytes ever
-    cross Arrow on the fact side) and the probe side never shuffles.
-    ``broadcast_polygons="auto"`` (default) probes the build-side size
-    and picks broadcast vs sort-merge automatically; pass True/False to
-    force, and optionally ``salt_k`` to pre-split hot cells on the
-    shuffle path.  ``point_out_cols`` (subset of the point columns)
-    restricts which point columns reach the OUTPUT — coords consumed
-    only by the refine never travel back through Arrow.
+    Two execution paths.  When the polygon side fits the broadcast
+    guard, a :class:`BroadcastPolygonIndex` — geometries parsed ONCE on
+    the executors into flat edge arrays plus a CSR cell index, shipped
+    as a broadcast variable — answers every point in one Arrow pass;
+    the probe side never shuffles.  Otherwise a sort-merge cell
+    equi-join with AQE skew splitting feeds a ray-cast refine; there
+    ``salt_k`` pre-splits hot cells (the index path ignores it: it has
+    no shuffle to split).  ``broadcast_polygons="auto"`` (default)
+    reuses a cached index for the same polygon plan, else probes the
+    build-side size; pass True/False to force a path.
+    ``point_out_cols`` (subset of the point columns) restricts which
+    point columns reach the OUTPUT — coords consumed only by the refine
+    never travel back through Arrow.
 
     Sort-merge-path type contract: the deterministic polygon id hashes
     and window-partitions over (wkb, *polygon_cols), so on that path
@@ -268,82 +280,57 @@ def point_in_polygon_join(
     partition by (MapType, for one, is not) — an AnalysisException
     surfaces at plan time otherwise.  Project such columns away and
     re-attach them after the join, or use the broadcast path.
-
-    ``dedup_coords=True`` (shuffle/salted path only) collapses the
-    probe to DISTINCT (x, y) before the candidate join, refines only
-    distinct coordinates, and re-attaches the full point rows with a
-    JVM coordinate equi-join afterwards — the guide §2.5 hot-key
-    special case for probe sets where many rows share exact
-    coordinates (sensor pile-ups, default locations): a coordinate
-    carried by a million rows contributes its candidate pairs ONCE to
-    the join + Arrow refine instead of a million times, which both
-    kills the skewed candidate partition and shrinks the Python
-    boundary bytes.  Results are identical (the join-back restores
-    per-row multiplicity; Spark joins match NaN=NaN and drop NULL keys,
-    and neither NaN nor NULL coordinates can appear in the matched set
-    — exactly the rows the bbox filter already rejects).  Leave False
-    when probe coordinates are mostly unique: the distinct + join-back
-    then costs an extra shuffle for no pair reduction.
     """
-    pcols = point_cols or [c for c in points.columns]
-    gcols = polygon_cols or [
-        c for c in polygons.columns if c not in POLYGON_META_COLS
-    ]
+    return _pip(
+        points, polygons, "inner", x, y, grid, broadcast_polygons, salt_k,
+        point_cols, polygon_cols, point_out_cols,
+    )
+
+
+def _pip(
+    points: DataFrame,
+    polygons: DataFrame,
+    mode: str,
+    x: str,
+    y: str,
+    grid: Grid,
+    broadcast_polygons: bool | str,
+    salt_k: int | None,
+    point_cols: list[str] | None = None,
+    polygon_cols: list[str] | None = None,
+    point_out_cols: list[str] | None = None,
+) -> DataFrame:
+    """The one dispatch of the PIP join family; ``mode`` is "inner",
+    "semi" or "anti".  Semi and anti carry no polygon attributes.
+
+    One decision: the broadcast index, or the keyed sort-merge join.
+    The index answers all three modes in its single refine pass.  The
+    sort-merge path yields matched (point, polygon) pairs; semi/anti
+    then left_semi/left_anti join the points against the distinct
+    matched point-values with null-safe equality (a row carrying a
+    NULL in a non-coordinate column must still match its own matched
+    tuple), which also preserves left multiplicity."""
+    pcols = point_cols or list(points.columns)
     ocols = pcols if point_out_cols is None else point_out_cols
     bad = set(ocols) - set(pcols)
     if bad:
         raise ValueError(f"point_out_cols not in point_cols: {sorted(bad)}")
-    if not salt_k:
+    gcols = _polygon_attr_cols(polygons, polygon_cols) if mode == "inner" else []
+    idx = None
+    if broadcast_polygons == "auto":
         # an already-cached index answers the broadcast question for
         # free — only cache misses pay the size-probe jobs
-        if (
-            broadcast_polygons == "auto"
-            and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
-            and _has_cached_index(polygons, grid, gcols)
-        ) or _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
-        ):
-            return _pip_join_broadcast(
-                points, polygons, x, y, grid, pcols, gcols, ocols
-            )
-        broadcast_polygons = False  # probe said too big: sort-merge path
-    else:
-        # salted path: the probe only decides the broadcast HINT on the
-        # exploded build side
-        broadcast_polygons = _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
+        key = _index_cache_key(polygons, grid, gcols)
+        idx = None if key is None else _find_cached_index(key, gcols)
+    if idx is not None or _resolve_broadcast(polygons, broadcast_polygons):
+        idx = idx or _cached_polygon_index(polygons, grid, gcols)
+        return idx.join_points(
+            points, x=x, y=y, point_cols=pcols, mode=mode,
+            point_out_cols=ocols,
         )
-    build_src = polygons.select(*POLYGON_META_COLS, *gcols)
-    joinback_src = None
-    if dedup_coords:
-        # §2.5 hot-key collapse: candidate join + refine see each
-        # distinct coordinate once; full rows re-attach afterwards
-        joinback_src = points.select(*pcols)
-        points = joinback_src.select(F.col(x), F.col(y)).distinct()
-        pcols = [x, y]
-        refine_drop: set[str] = set()  # coords are the join-back key
-    else:
-        refine_drop = set(pcols) - set(ocols)
 
-    def _attach(refined: DataFrame) -> DataFrame:
-        if joinback_src is None:
-            return refined
-        return joinback_src.join(refined, on=[x, y]).select(*ocols, *gcols)
-
-    probe = _points_with_cell(points.select(*pcols), x, y, grid, salt_k)
-    join_keys = [_P + "cell"] + ([_P + "salt"] if salt_k else [])
-    if broadcast_polygons:
-        build = F.broadcast(_polygons_with_cells(build_src, grid, salt_k))
-        cand = probe.join(build, on=join_keys, how="inner").where(
-            point_in_bbox_expr(
-                F.col(x), F.col(y),
-                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            )
-        ).select(*pcols, *gcols, "wkb")
-        return _attach(_refine_pip(cand, x, y, drop_cols=refine_drop))
-
-    # shuffle path: the exploded build side replicates each polygon row
-    # x cover-cells x salt_k through the exchange — so ship only
+    # sort-merge path: the exploded build side replicates each polygon
+    # row x cover-cells x salt_k through the exchange — so ship only
     # (pid, bbox, attrs), never the WKB.  The geometry re-attaches to
     # the (much smaller) bbox-prefiltered candidate set with a plain
     # equi-join on the pid: unique key, so no skew, and AQE broadcasts
@@ -357,6 +344,7 @@ def point_in_polygon_join(
     # sort is over identical rows, so any tie order yields the same
     # result.  persist() shares the one window shuffle between the two
     # uses while staying lineage-recoverable.
+    build_src = polygons.select(*POLYGON_META_COLS, *gcols)
     dup_w = Window.partitionBy("wkb", *gcols).orderBy(F.lit(1))
     keyed = (
         build_src.withColumn(_P + "dup", F.row_number().over(dup_w))
@@ -367,6 +355,8 @@ def point_in_polygon_join(
     )
     _register_op_caches("pip_shuffle", [keyed])
     pid_keys = [_P + "pid", _P + "pid2"]
+    probe = _points_with_cell(points.select(*pcols), x, y, grid, salt_k)
+    join_keys = [_P + "cell"] + ([_P + "salt"] if salt_k else [])
     build = _polygons_with_cells(keyed.drop("wkb"), grid, salt_k)
     cand = probe.join(build, on=join_keys, how="inner").where(
         point_in_bbox_expr(
@@ -377,7 +367,14 @@ def point_in_polygon_join(
     cand = cand.join(
         keyed.select(*pid_keys, "wkb"), on=pid_keys, how="inner"
     ).select(*pcols, *gcols, "wkb")
-    return _attach(_refine_pip(cand, x, y, drop_cols=refine_drop))
+    if mode == "inner":
+        return _refine_pip(cand, x, y, drop_cols=set(pcols) - set(ocols))
+    matched = _refine_pip(cand, x, y).dropDuplicates(pcols)
+    out = points.join(
+        matched, on=_null_safe_cond(points, matched, pcols),
+        how="left_" + mode,
+    )
+    return out if point_out_cols is None else out.select(*ocols)
 
 
 _INDEX_CACHE: dict = {}
@@ -404,7 +401,7 @@ def clear_polygon_index_cache() -> None:
 
 
 def _index_cache_key(polygons: DataFrame, grid: Grid,
-                     polygon_cols: list[str] | None):
+                     polygon_cols: list[str]):
     """(app, plan-semantic-hash, grid, cols) cache key, or None when the
     semantic hash is unavailable (then nothing is cached)."""
     try:
@@ -412,7 +409,7 @@ def _index_cache_key(polygons: DataFrame, grid: Grid,
             polygons.sparkSession.sparkContext.applicationId,
             polygons._jdf.queryExecution().analyzed().semanticHash(),
             grid,
-            tuple(polygon_cols) if polygon_cols is not None else None,
+            tuple(polygon_cols),
         )
     except Exception:
         return None
@@ -426,7 +423,7 @@ def _find_cached_index(key, polygon_cols):
     identically.  Returns the entry (marked most-recently-used) or
     None."""
     idx = _INDEX_CACHE.get(key)
-    if idx is None and not (polygon_cols or []):
+    if idx is None and not polygon_cols:
         for k2 in _INDEX_CACHE:
             if k2[:3] == key[:3]:
                 key, idx = k2, _INDEX_CACHE[k2]
@@ -436,30 +433,8 @@ def _find_cached_index(key, polygon_cols):
     return idx
 
 
-_DEFAULT_GUARD = (4_000_000, 1_500_000_000)
-
-
-def _has_cached_index(polygons, grid, polygon_cols) -> bool:
-    """True when a usable broadcast index for this polygon plan is
-    already cached — the entry points consult this BEFORE running the
-    broadcast-size probe, so steady-state repeated joins against the
-    same dimension table skip the probe's two jobs (a LIMIT-bounded
-    count plus a sum(length(wkb)) scan that re-evaluates any geometry-
-    producing UDF over the whole build side) entirely.  Callers only
-    take this shortcut under the DEFAULT guard values: a per-call
-    tightened guard must keep forcing the probe (and its fallback)."""
-    key = _index_cache_key(polygons, grid, polygon_cols)
-    if key is None:
-        return False
-    if key in _INDEX_CACHE:
-        return True
-    if not (polygon_cols or []):
-        return any(k[:3] == key[:3] for k in _INDEX_CACHE)
-    return False
-
-
 def _cached_polygon_index(polygons: DataFrame, grid: Grid,
-                          polygon_cols: list[str] | None):
+                          polygon_cols: list[str]):
     """Session-scoped LRU over BroadcastPolygonIndex keyed by the
     polygon plan's semantic hash: repeated joins against the same
     dimension table (the steady-state workload shape) reuse the
@@ -621,10 +596,7 @@ class BroadcastPolygonIndex:
     def __init__(self, polygons: DataFrame, grid: Grid = GRID,
                  polygon_cols: list[str] | None = None):
         self.grid = grid
-        self.gcols = polygon_cols if polygon_cols is not None else [
-            c for c in polygons.columns
-            if c not in POLYGON_META_COLS
-        ]
+        self.gcols = _polygon_attr_cols(polygons, polygon_cols)
         self._gfields = {f.name: f for f in polygons.schema.fields}
         spark = polygons.sparkSession
         self.spark = spark
@@ -850,54 +822,24 @@ class BroadcastPolygonIndex:
         )
 
 
-def _pip_join_broadcast(points, polygons, x, y, grid, pcols, gcols, ocols=None):
-    return _cached_polygon_index(
-        polygons, grid, gcols
-    ).join_points(points, x=x, y=y, point_cols=pcols, point_out_cols=ocols)
-
-
 def spatial_semi_join(
     points, polygons, x="x", y="y", grid=GRID,
     broadcast_polygons: bool | str = "auto", salt_k: int | None = None,
-    max_broadcast_rows: int = 4_000_000,
-    max_broadcast_bytes: int = 1_500_000_000,
-    point_out_cols: list[str] | None = None, **kw,
+    point_out_cols: list[str] | None = None,
 ) -> DataFrame:
     """Rows of ``points`` that fall inside at least one polygon.
 
     Row-level semantics on BOTH paths: every input row inside some
     polygon appears exactly once (duplicate input rows preserved).  The
-    broadcast path answers from the SAME single refine pass as the
-    inner join (per-point match counts are a by-product) — no pair
-    explosion, no dedup shuffle.  The sort-merge fallback left_semi
-    joins the points against the distinct matched point-values with
-    null-safe equality (a row carrying a NULL in a non-coordinate
-    column must still match its own matched tuple), which also
-    preserves left multiplicity."""
-    pcols = points.columns
-    if not salt_k and (
-        (
-            broadcast_polygons == "auto"
-            and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
-            and _has_cached_index(polygons, grid, [])
-        )
-        or _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
-        )
-    ):
-        return _cached_polygon_index(polygons, grid, []).join_points(
-            points, x=x, y=y, mode="semi", point_out_cols=point_out_cols
-        )
-    matched = point_in_polygon_join(
-        points, polygons, x=x, y=y, grid=grid, polygon_cols=[],
-        broadcast_polygons=False, salt_k=salt_k, **kw
+    broadcast-index path answers from the SAME single refine pass as
+    the inner join (per-point match counts are a by-product) — no pair
+    explosion, no dedup shuffle.  The sort-merge path (``salt_k``
+    applies there only) left_semi joins the points against the
+    distinct matched point-values with null-safe equality."""
+    return _pip(
+        points, polygons, "semi", x, y, grid, broadcast_polygons, salt_k,
+        point_out_cols=point_out_cols,
     )
-    matched_vals = matched.select(*pcols).dropDuplicates(pcols)
-    out = points.join(
-        matched_vals, on=_null_safe_cond(points, matched_vals, pcols),
-        how="left_semi",
-    )
-    return out if point_out_cols is None else out.select(*point_out_cols)
 
 
 def _null_safe_cond(left: DataFrame, right: DataFrame, cols: list[str]) -> Column:
@@ -913,42 +855,21 @@ def _null_safe_cond(left: DataFrame, right: DataFrame, cols: list[str]) -> Colum
 def spatial_anti_join(
     points, polygons, x="x", y="y", grid=GRID,
     broadcast_polygons: bool | str = "auto", salt_k: int | None = None,
-    max_broadcast_rows: int = 4_000_000,
-    max_broadcast_bytes: int = 1_500_000_000,
-    point_out_cols: list[str] | None = None, **kw,
+    point_out_cols: list[str] | None = None,
 ) -> DataFrame:
     """Rows of ``points`` outside every polygon.
 
     Row-level semantics on BOTH paths (duplicate input rows preserved).
-    Broadcast path: emitted directly from the single refine pass
+    Broadcast-index path: emitted directly from the single refine pass
     (``per_point == 0`` rows) — one scan, zero shuffles, no second PIP
-    pipeline.  Sort-merge fallback: left_anti against the distinct
-    matched point-values with null-safe equality (plain equality would
-    wrongly KEEP a matched row whose non-coordinate column is NULL)."""
-    pcols = points.columns
-    if not salt_k and (
-        (
-            broadcast_polygons == "auto"
-            and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
-            and _has_cached_index(polygons, grid, [])
-        )
-        or _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
-        )
-    ):
-        return _cached_polygon_index(polygons, grid, []).join_points(
-            points, x=x, y=y, mode="anti", point_out_cols=point_out_cols
-        )
-    matched = point_in_polygon_join(
-        points, polygons, x=x, y=y, grid=grid, polygon_cols=[],
-        broadcast_polygons=False, salt_k=salt_k, **kw
+    pipeline.  Sort-merge path (``salt_k`` applies there only):
+    left_anti against the distinct matched point-values with null-safe
+    equality (plain equality would wrongly KEEP a matched row whose
+    non-coordinate column is NULL)."""
+    return _pip(
+        points, polygons, "anti", x, y, grid, broadcast_polygons, salt_k,
+        point_out_cols=point_out_cols,
     )
-    matched_vals = matched.select(*pcols).dropDuplicates(pcols)
-    out = points.join(
-        matched_vals, on=_null_safe_cond(points, matched_vals, pcols),
-        how="left_anti",
-    )
-    return out if point_out_cols is None else out.select(*point_out_cols)
 
 
 def tile_assignment(
@@ -992,10 +913,7 @@ def tile_assignment(
             .withColumn("__txmax", lon1)
             .withColumn("__tymax", lat1)
         )
-        gcols = polygon_cols or [
-            c for c in polygons.columns
-            if c not in POLYGON_META_COLS
-        ]
+        gcols = _polygon_attr_cols(polygons, polygon_cols)
         build = _polygons_with_cells(
             polygons.select("xmin", "ymin", "xmax", "ymax", *gcols), grid, None
         )
@@ -1067,6 +985,14 @@ def bbox_overlap_join(
 # ------------------------------------------------------------------ kNN ----
 
 
+def _dist2(qx: str, qy: str, tx: str, ty: str) -> Column:
+    """Squared Euclidean distance between the (qx, qy) and (tx, ty)
+    columns (no sqrt -> exact float parity with SQL oracles)."""
+    dx = F.col(qx) - F.col(tx)
+    dy = F.col(qy) - F.col(ty)
+    return dx * dx + dy * dy
+
+
 def knn_brute(
     queries: DataFrame,
     targets: DataFrame,
@@ -1086,9 +1012,7 @@ def knn_brute(
     tcols = target_cols or [c for c in targets.columns]
     t = targets.select(*[F.col(c).alias("__t_" + c) for c in tcols])
     joined = queries.crossJoin(F.broadcast(t)).withColumn(
-        "dist2",
-        (F.col(qx) - F.col("__t_" + tx)) * (F.col(qx) - F.col("__t_" + tx))
-        + (F.col(qy) - F.col("__t_" + ty)) * (F.col(qy) - F.col("__t_" + ty)),
+        "dist2", _dist2(qx, qy, "__t_" + tx, "__t_" + ty)
     )
     order = [F.col("dist2")] + (
         [F.col("__t_" + tie_break)] if tie_break else []
@@ -1116,8 +1040,6 @@ def knn_join(
     target_cols: list[str] | None = None,
     tie_break: str | None = None,
     max_rounds: int = 6,
-    brute_threshold: int | None = None,
-    allow_cartesian_fallback: bool = False,
 ) -> DataFrame:
     """Exact kNN via expanding cell-neighborhood search.
 
@@ -1137,16 +1059,13 @@ def knn_join(
     broadcast size guard (cheap: the straggler set is tiny).  Past the
     guard, ONE extra widened ring (radius 2^max_rounds) runs first,
     and if queries STILL remain it raises loudly (raise ``max_rounds``
-    or use a finer grid) instead of running a cluster-killer — unless
-    ``allow_cartesian_fallback=True``, which opts back in to the
-    bounded distributed scan (stragglers x full target table) for
-    callers who prefer correctness-over-cost.
+    or use a finer grid) instead of running a distributed cartesian
+    scan.  Callers who know the target side is dimension-sized should
+    call :func:`knn_brute` directly.
 
-    ``brute_threshold`` is opt-in: when set, a target set at or below
-    that many rows skips the rounds and runs the broadcast brute path
-    (identical output).  The default (None) never runs the extra
-    count() job — callers who know the target side is dimension-sized
-    should call :func:`knn_brute` directly.
+    ``query_id`` must be unique per distinct query row: the top-k
+    window partitions on it, so two distinct rows sharing an id are
+    ranked together (duplicate neighbors, fewer than k per row).
 
     Note: exact-duplicate query rows and target rows distinct-collapse
     ONCE at entry (target rows must be distinct on ``target_cols`` —
@@ -1155,15 +1074,10 @@ def knn_join(
     (consecutive rings cover disjoint cell sets), so the fold needs no
     per-round pair-level dropDuplicates — that was one extra exchange
     over the merged top-k+candidates EVERY round (guide §2.4; only the
-    brute fallbacks, whose cross-join regenerates pairs the rings
-    already found, still dedup their one fold).
+    brute fallback, whose cross-join regenerates pairs the rings
+    already found, still dedups its one fold).
     """
     tcols = target_cols or [c for c in targets.columns]
-    if brute_threshold is not None and targets.count() <= brute_threshold:
-        return knn_brute(
-            queries, targets, k, qx=qx, qy=qy, tx=tx, ty=ty,
-            query_id=query_id, target_cols=tcols, tie_break=tie_break,
-        )
     tgt = targets.withColumn(_P + "tcell", grid.cell_expr(F.col(tx), F.col(ty)))
     tgt = tgt.select(
         _P + "tcell", *[F.col(c).alias("__t_" + c) for c in tcols]
@@ -1198,9 +1112,7 @@ def knn_join(
             + (F.col(_P + "qrow") + F.col(_P + "dr")) * F.lit(grid.width),
         )
         cand = q.join(tgt, on=_P + "tcell", how="inner").withColumn(
-            "dist2",
-            (F.col(qx) - F.col("__t_" + tx)) * (F.col(qx) - F.col("__t_" + tx))
-            + (F.col(qy) - F.col("__t_" + ty)) * (F.col(qy) - F.col("__t_" + ty)),
+            "dist2", _dist2(qx, qy, "__t_" + tx, "__t_" + ty)
         )
         return cand.drop(
             _P + "tcell", _P + "qcol", _P + "qrow", _P + "dc", _P + "dr"
@@ -1212,8 +1124,8 @@ def knn_join(
         (dist2, tie_break) order — identical to windowing the full
         candidate history because top-k is a fold under a total order.
         Ring folds need no dedup (queries/targets distinct at entry +
-        disjoint ring cells -> unique pairs); the brute FALLBACK folds
-        pass dedup=True because their cross-join re-generates pairs the
+        disjoint ring cells -> unique pairs); the brute FALLBACK fold
+        passes dedup=True because its cross-join re-generates pairs the
         rings already put into the running top-k."""
         merged = cand if topk is None else topk.drop("__rk").unionByName(cand)
         if dedup:
@@ -1257,7 +1169,7 @@ def knn_join(
         # plan yields the correct result without the round machinery —
         # except past the broadcast guard, where the fallback below
         # keeps the bounded-ring/raise contract
-        if _resolve_broadcast(targets, "auto", 4_000_000):
+        if _resolve_broadcast(targets, "auto"):
             for df in cached:
                 df.unpersist()
             return knn_brute(
@@ -1272,44 +1184,26 @@ def knn_join(
     if n_rem:
         # straggler fallback: a broadcast brute scan when the target
         # side fits the guard (cheap — the straggler set is tiny).
-        # Past the guard the default is ONE extra widened ring, then a
-        # loud failure (an unguarded distributed cartesian is a
-        # cluster-killer); allow_cartesian_fallback=True opts back in
-        # to the bounded distributed scan instead of the error.
-        if _resolve_broadcast(targets, "auto", 4_000_000):
+        # Past the guard: ONE extra widened ring, then a loud failure
+        # (an unguarded distributed cartesian is a cluster-killer).
+        if _resolve_broadcast(targets, "auto"):
             # reuse the deduped cached target frame — no second scan
             t = F.broadcast(tgt.drop(_P + "tcell"))
             extra = remaining.crossJoin(t).withColumn(
-                "dist2",
-                (F.col(qx) - F.col("__t_" + tx))
-                * (F.col(qx) - F.col("__t_" + tx))
-                + (F.col(qy) - F.col("__t_" + ty))
-                * (F.col(qy) - F.col("__t_" + ty)),
+                "dist2", _dist2(qx, qy, "__t_" + tx, "__t_" + ty)
             )
             topk = fold_topk(topk, extra, dedup=True)
         else:
             topk, remaining, n_rem = advance(topk, remaining, max_rounds)
             if n_rem:
-                if not allow_cartesian_fallback:
-                    for df in cached:
-                        df.unpersist()
-                    raise RuntimeError(
-                        "knn_join: queries remain unresolved after "
-                        f"{max_rounds}+1 cell-ring rounds and the target "
-                        "side is too large to broadcast for the brute "
-                        "fallback — raise max_rounds, use a finer grid, or "
-                        "pass allow_cartesian_fallback=True to accept the "
-                        "bounded distributed scan"
-                    )
-                t = tgt.drop(_P + "tcell")
-                extra = remaining.crossJoin(t).withColumn(
-                    "dist2",
-                    (F.col(qx) - F.col("__t_" + tx))
-                    * (F.col(qx) - F.col("__t_" + tx))
-                    + (F.col(qy) - F.col("__t_" + ty))
-                    * (F.col(qy) - F.col("__t_" + ty)),
+                for df in cached:
+                    df.unpersist()
+                raise RuntimeError(
+                    "knn_join: queries remain unresolved after "
+                    f"{max_rounds}+1 cell-ring rounds and the target "
+                    "side is too large to broadcast for the brute "
+                    "fallback — raise max_rounds or use a finer grid"
                 )
-                topk = fold_topk(topk, extra, dedup=True)
         # the fallback fold is lazy: materialize the (queries*k-sized)
         # result so the round caches can be released.  persist + count
         # (NOT localCheckpoint): blocks stay lineage-recoverable.
@@ -1441,18 +1335,15 @@ def zonal_stats(
     reduction of a tile-georeferenced image corpus (e.g. mean decoded
     brightness or caption length per admin polygon).
 
-    Plan shape = the PIP join's (broadcast-index / salted sort-merge,
-    chosen by the same auto logic) followed by ONE hash aggregation on
-    the polygon key with map-side partial aggs — the join output never
-    materializes anywhere, Catalyst pipelines refine straight into the
-    partial agg.  Output: (*polygon_cols, n_points, <c>_sum, <c>_min,
-    <c>_max, <c>_avg per value column).
+    Plan shape = :func:`point_in_polygon_join`'s (broadcast index, or
+    sort-merge salted by a ``salt_k`` in ``join_kwargs``; same choice)
+    followed by ONE hash aggregation on the polygon key with map-side
+    partial aggs — the join output never materializes anywhere,
+    Catalyst pipelines refine straight into the partial agg.  Output:
+    (*polygon_cols, n_points, <c>_sum, <c>_min, <c>_max, <c>_avg per
+    value column); ``polygon_cols`` defaults as in the join.
     """
-    gcols = polygon_cols or [
-        c
-        for c in polygons.columns
-        if c not in POLYGON_META_COLS
-    ]
+    gcols = _polygon_attr_cols(polygons, polygon_cols)
     # coords are refine INPUTS only — the aggregation never reads them,
     # so they are excluded from the refine output (point_out_cols) and
     # never travel back through the Arrow channel

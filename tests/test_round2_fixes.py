@@ -216,9 +216,11 @@ def test_anti_join_single_pass_no_second_join(spark):
     assert "Join" not in plan
 
 
-def test_pip_broadcast_auto_guard_falls_back(spark):
-    """Oversized build side (max_broadcast_rows=1) must pick the
+def test_pip_broadcast_auto_guard_falls_back(spark, monkeypatch):
+    """Oversized build side (row guard of 1) must pick the
     sort-merge/cell-join plan, with identical results."""
+    import pyshp_spark.operators.spatial as sp  # noqa: PLC0415
+
     polys = _mini_polys(spark)
     pts = spark.createDataFrame(
         pd.DataFrame({"pid": [0, 1, 2], "x": [10.0, 30.0, 90.0],
@@ -226,12 +228,12 @@ def test_pip_broadcast_auto_guard_falls_back(spark):
     )
     grid = Grid(x0=0.0, y0=0.0, dx=4.0, dy=4.0, width=1 << 10)
     bc = point_in_polygon_join(pts, polys, grid=grid, polygon_cols=["oid"])
-    fb = point_in_polygon_join(
-        pts, polys, grid=grid, polygon_cols=["oid"], max_broadcast_rows=1
-    )
-    assert sorted((r.pid, r.oid) for r in bc.collect()) == sorted(
-        (r.pid, r.oid) for r in fb.collect()
-    )
+    want = sorted((r.pid, r.oid) for r in bc.collect())
+    # a cached index answers "auto" without the size probe: start cold
+    sp.clear_polygon_index_cache()
+    monkeypatch.setattr(sp, "_MAX_BROADCAST_ROWS", 1)
+    fb = point_in_polygon_join(pts, polys, grid=grid, polygon_cols=["oid"])
+    assert sorted((r.pid, r.oid) for r in fb.collect()) == want
     plan = fb._jdf.queryExecution().executedPlan().toString()
     assert "__ps_cell" in plan  # cell equi-join path, not driver broadcast
 

@@ -94,19 +94,6 @@ def test_geometry_only_request_reuses_attr_index(spark):
     assert sorted(got_anti + got_semi) == sorted(r.pid for r in pts.collect())
 
 
-def test_tightened_guard_still_forces_fallback_past_cache(spark):
-    """A cached index must NOT override a caller-tightened broadcast
-    guard: max_broadcast_rows=1 picks the cell-join path regardless."""
-    sp.clear_polygon_index_cache()
-    polys, pts = _polys(spark), _pts(spark)
-    point_in_polygon_join(pts, polys, grid=GRID4, polygon_cols=["oid"]).count()
-    fb = point_in_polygon_join(
-        pts, polys, grid=GRID4, polygon_cols=["oid"], max_broadcast_rows=1
-    )
-    plan = fb._jdf.queryExecution().executedPlan().toString()
-    assert "__ps_cell" in plan
-
-
 def test_semi_anti_point_out_cols_trim(spark):
     sp.clear_polygon_index_cache()
     polys, pts = _polys(spark), _pts(spark)
@@ -132,34 +119,6 @@ def test_semi_anti_point_out_cols_trim(spark):
         )
         assert sorted(r.pid for r in semi.collect()) == sorted(
             r.pid for r in fulls.collect()
-        )
-
-
-def test_dedup_coords_identical_results(spark):
-    """dedup_coords collapses duplicate probe coordinates before the
-    candidate join and re-attaches rows by coordinate equi-join — the
-    output (including per-duplicate-row multiplicity) must be
-    bit-identical on both shuffle paths (plain and salted)."""
-    sp.clear_polygon_index_cache()
-    polys = _polys(spark)
-    # duplicate-heavy probe: many rows piled on one hot coordinate,
-    # plus full-duplicate rows and a NaN/NULL-coordinate row
-    rows = [(i, 10.0, 10.0) for i in range(50)]
-    rows += [(100, 30.0, 30.0), (100, 30.0, 30.0), (101, 90.0, 90.0),
-             (102, float("nan"), 5.0), (103, None, 5.0)]
-    pts = spark.createDataFrame(rows, "pid long, x double, y double")
-    for salt in (None, 4):
-        base = point_in_polygon_join(
-            pts, polys, grid=GRID4, polygon_cols=["oid"],
-            broadcast_polygons=False, salt_k=salt,
-        )
-        dd = point_in_polygon_join(
-            pts, polys, grid=GRID4, polygon_cols=["oid"],
-            broadcast_polygons=False, salt_k=salt, dedup_coords=True,
-        )
-        assert dd.columns == base.columns
-        assert sorted(map(tuple, base.collect())) == sorted(
-            map(tuple, dd.collect())
         )
 
 

@@ -1,5 +1,8 @@
-"""The salted PIP paths hash only the point columns Spark can hash, so a
-MapType payload no longer fails analysis and results stay unchanged."""
+"""The salted sort-merge PIP path hashes only the point columns Spark
+can hash, so a MapType payload does not fail analysis and results stay
+unchanged.  The broadcast-index path ignores ``salt_k`` (it never
+shuffles the points), so there the salted call must equal the unsalted
+one too."""
 
 import numpy as np
 from pyspark.sql import Row

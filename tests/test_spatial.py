@@ -110,7 +110,8 @@ class TestPipJoin:
         assert len(got) > 0
 
     def test_sort_merge_and_salted_paths_agree(self, pts_df, poly_df, oracle_pairs):
-        for kw in [dict(broadcast_polygons=False), dict(salt_k=4)]:
+        for kw in [dict(broadcast_polygons=False),
+                   dict(broadcast_polygons=False, salt_k=4)]:
             out = point_in_polygon_join(
                 pts_df, poly_df, x="lon", y="lat", polygon_cols=["oid"], **kw
             )
@@ -152,7 +153,8 @@ class TestPipJoin:
 
 
 class TestBroadcastGuard:
-    def test_byte_aware_guard_falls_back_to_sort_merge(self, spark):
+    def test_byte_aware_guard_falls_back_to_sort_merge(self, spark, monkeypatch):
+        import pyshp_spark.operators.spatial as sp  # noqa: PLC0415
         from pyshp_spark.operators.spatial import _resolve_broadcast  # noqa: PLC0415
 
         import pandas as pd  # noqa: PLC0415
@@ -167,14 +169,13 @@ class TestBroadcastGuard:
             )
         )
         # 8 rows pass any row guard, but 8 x 200 kB > 1 MB byte budget
-        assert _resolve_broadcast(big, "auto", 4_000_000,
-                                  max_broadcast_bytes=1_000_000) is False
-        # same frame under a roomy byte budget broadcasts
-        assert _resolve_broadcast(big, "auto", 4_000_000,
-                                  max_broadcast_bytes=10_000_000) is True
+        monkeypatch.setattr(sp, "_MAX_BROADCAST_BYTES", 1_000_000)
+        assert _resolve_broadcast(big, "auto") is False
         # explicit override still wins
-        assert _resolve_broadcast(big, True, 4_000_000,
-                                  max_broadcast_bytes=1_000_000) is True
+        assert _resolve_broadcast(big, True) is True
+        # same frame under a roomy byte budget broadcasts
+        monkeypatch.setattr(sp, "_MAX_BROADCAST_BYTES", 10_000_000)
+        assert _resolve_broadcast(big, "auto") is True
 
 
 class TestTileAssignment:
@@ -263,7 +264,6 @@ class TestKnn:
         cell = knn_join(
             q, t, k=5, query_id="query_id",
             target_cols=["target_id", "x", "y"], tie_break="target_id",
-            brute_threshold=0,  # force the cell-expansion path
         )
         b = {(r.query_id, r.target_id, r.knn_rank) for r in brute.collect()}
         c = {(r.query_id, r.target_id, r.knn_rank) for r in cell.collect()}
