@@ -360,10 +360,11 @@ def q_spatial_anti(spark, sf_dir):
 
 
 def q_knn(spark, sf_dir):
-    # deliberately exercises the cell-expansion path (not knn_brute):
-    # it is the 100x-safe plan AND empirically faster here than the
-    # broadcast crossJoin+window brute (5 s vs 40 s at sf0.1) — the gate
-    # then value-checks it against the SQL brute oracle
+    # deliberately exercises knn_join's cell-expansion search (not
+    # knn_brute, whose broadcast crossJoin+window took 40 s at sf0.1);
+    # the diamonds fit the broadcast guard, so it runs on the cached
+    # target index — the gate then value-checks it against the SQL
+    # brute oracle
     q = _qpts(spark, sf_dir)
     t = _diamonds(spark, sf_dir).select("oid", F.col("cx").alias("x"), F.col("cy").alias("y"))
     out = knn_join(

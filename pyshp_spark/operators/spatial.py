@@ -23,7 +23,6 @@ appears at most once after the cell join — no dedup pass is needed.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Iterator
 
 import numpy as np
@@ -36,9 +35,10 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from pyshp_spark.functions.bbox import point_in_bbox_expr
-from pyshp_spark.functions.cells import GRID, Grid
+from pyshp_spark.functions.cells import GRID, Grid, missing_coord_expr
 from pyshp_spark.kernels.rings import pip_pairs, pip_pairs_flat, rings_to_edges
 from pyshp_spark.kernels.wkb import wkb_rings
+from pyshp_spark.session_conf import arrow_enabled
 
 _P = "__ps_"  # internal column prefix
 
@@ -389,9 +389,10 @@ from pyshp_spark.operators.opcache import (  # noqa: F401
 
 
 def clear_polygon_index_cache() -> None:
-    """Drop all cached broadcast polygon indexes (call after mutating
-    files underneath a path an index was built from — the cache keys on
-    the query PLAN, not the data)."""
+    """Drop all cached broadcast indexes, the polygon indexes of the PIP
+    joins and the target indexes of :func:`knn_join` alike (call after
+    mutating files underneath a path an index was built from — the
+    cache keys on the query PLAN, not the data)."""
     while _INDEX_CACHE:
         _, old = _INDEX_CACHE.popitem()
         try:
@@ -443,20 +444,25 @@ def _cached_polygon_index(polygons: DataFrame, grid: Grid,
     files underneath a read path are rewritten in place, call
     :func:`clear_polygon_index_cache`."""
     key = _index_cache_key(polygons, grid, polygon_cols)
-    if key is None:
-        return BroadcastPolygonIndex(polygons, grid=grid, polygon_cols=polygon_cols)
-    idx = _find_cached_index(key, polygon_cols)
+    idx = None if key is None else _find_cached_index(key, polygon_cols)
     if idx is None:
         idx = BroadcastPolygonIndex(polygons, grid=grid, polygon_cols=polygon_cols)
+        _cache_put(key, idx)
+    return idx
+
+
+def _cache_put(key, idx) -> None:
+    """Insert ``idx`` as the most-recently-used entry (a None key caches
+    nothing) and evict past ``_INDEX_CACHE_MAX``, releasing each evicted
+    entry's broadcast."""
+    if key is not None:
         _INDEX_CACHE[key] = idx
     while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
-        oldest = next(iter(_INDEX_CACHE))
-        old = _INDEX_CACHE.pop(oldest)
+        old = _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
         try:
             old.bc.unpersist()
         except Exception:
             pass
-    return idx
 
 
 def _parse_polygons_distributed(
@@ -547,29 +553,24 @@ def _parse_polygons_distributed(
     # the collect must take the Arrow path: the default row-pickled
     # toPandas is ~50x slower at the broadcast guard ceiling (hundreds
     # of thousands of binary-blob rows).
-    with _arrow_enabled(polygons.sparkSession):
+    with arrow_enabled(polygons.sparkSession):
         return parsed.toPandas()
 
 
-@contextmanager
-def _arrow_enabled(sess):
-    """Force the Arrow JVM<->Python path around a driver transfer
-    (toPandas / createDataFrame-from-pandas) and restore whatever the
-    session had — the default row-pickled path is ~50x slower at the
-    broadcast guard ceiling."""
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = sess.conf.get(key)
-    except Exception:
-        prev = None
-    try:
-        sess.conf.set(key, "true")
-        yield
-    finally:
-        if prev is not None:
-            sess.conf.set(key, prev)
-        else:
-            sess.conf.unset(key)
+def _csr(cells: np.ndarray):
+    """CSR over int64 cell ids: ``(order, uniq_cells, offsets)``, where
+    ``order`` sorts the rows by cell (stable) and the rows in cell
+    ``uniq_cells[i]`` are ``order[offsets[i]:offsets[i + 1]]``."""
+    order = np.argsort(cells, kind="stable")
+    sorted_cells = cells[order]
+    # uniques via the diff mask — np.unique would re-SORT the
+    # already-sorted array (the polygon build's single hottest step at
+    # the guard ceiling)
+    uniq_mask = np.empty(len(sorted_cells), dtype=bool)
+    uniq_mask[:1] = True
+    np.not_equal(sorted_cells[1:], sorted_cells[:-1], out=uniq_mask[1:])
+    offsets = np.append(np.flatnonzero(uniq_mask), len(sorted_cells))
+    return order, sorted_cells[uniq_mask], offsets
 
 
 class BroadcastPolygonIndex:
@@ -625,25 +626,11 @@ class BroadcastPolygonIndex:
             (len(b) // 8 for b in cover_blobs), dtype=np.int64, count=n
         )
         cover_cell = np.frombuffer(b"".join(cover_blobs), dtype=np.int64)
-        cover_pid = np.repeat(np.arange(n, dtype=np.int32), cover_counts)
-        order = np.argsort(cover_cell, kind="stable")
-        sorted_cells = cover_cell[order]
         # int32 pids halve the broadcast's fattest buffer (valid: the
         # row guard caps the build side well under 2^31 rows)
+        cover_pid = np.repeat(np.arange(n, dtype=np.int32), cover_counts)
+        order, uniq_cells, cell_offsets = _csr(cover_cell)
         sorted_pids = cover_pid[order]
-        # uniques via the diff mask — np.unique would re-SORT the
-        # already-sorted array (the build's single hottest step at the
-        # guard ceiling)
-        if len(sorted_cells):
-            uniq_mask = np.empty(len(sorted_cells), dtype=bool)
-            uniq_mask[0] = True
-            np.not_equal(sorted_cells[1:], sorted_cells[:-1], out=uniq_mask[1:])
-            uniq_cells = sorted_cells[uniq_mask]
-            cell_starts = np.flatnonzero(uniq_mask)
-        else:
-            uniq_cells = sorted_cells
-            cell_starts = np.empty(0, dtype=np.int64)
-        cell_offsets = np.concatenate([cell_starts, [len(sorted_cells)]])
         self.bc = spark.sparkContext.broadcast(
             (all_edges, edge_offsets, bbox_arr, uniq_cells, cell_offsets,
              sorted_pids)
@@ -665,7 +652,7 @@ class BroadcastPolygonIndex:
             # same Arrow-path rule as the index-build collect: a
             # row-pickled createDataFrame of a guard-ceiling attrs
             # table would dominate the first probe's wall
-            with _arrow_enabled(self.spark):
+            with arrow_enabled(self.spark):
                 self._gtable = self.spark.createDataFrame(
                     gpdf, schema=gschema
                 )
@@ -1041,49 +1028,269 @@ def knn_join(
     tie_break: str | None = None,
     max_rounds: int = 6,
 ) -> DataFrame:
-    """Exact kNN via expanding cell-neighborhood search.
+    """Exact kNN: each distinct query row with its ``k`` nearest
+    targets, ranked 1..k (``knn_rank``) by (``dist2``, ``tie_break``).
 
-    Round r joins unresolved queries against targets within Chebyshev
-    cell radius 2^r, keeps a RUNNING per-query top-k (each round's new
-    candidates fold into the previous round's top-k frame — the window
-    input is O(queries*k + new candidates), never the whole candidate
-    history), and declares a query resolved when its k-th candidate
-    distance is <= the guaranteed covered distance radius*min(dx,dy)
-    (any nearer target must lie in an already-searched cell).  The
-    driver runs exactly ONE action per round (the unresolved count,
-    which also materializes that round's top-k cache); each round's
-    top-k and unresolved-query frames are persisted and the previous
-    round's released, so peak storage is O(1) rounds.  Stragglers left
-    after ``max_rounds`` (empty regions / degenerate grids) fall back
-    to a broadcast brute scan when the target side passes the
-    broadcast size guard (cheap: the straggler set is tiny).  Past the
-    guard, ONE extra widened ring (radius 2^max_rounds) runs first,
-    and if queries STILL remain it raises loudly (raise ``max_rounds``
-    or use a finer grid) instead of running a distributed cartesian
-    scan.  Callers who know the target side is dimension-sized should
-    call :func:`knn_brute` directly.
+    Two paths.  When the target side fits the broadcast guard, a
+    build-once broadcast index (:class:`_KnnIndex`, cached like the
+    polygon indexes) answers every call with ONE lazy ``mapInArrow``
+    pass over the queries: no Spark job until an action, no persist.
+    Inside each Arrow batch, round r searches the cells within Chebyshev
+    radius 2^r of the query's cell and resolves a query once its k-th
+    distance is <= the covered radius 2^r*min(dx, dy) (any nearer target
+    lies in a searched cell); queries still open after ``max_rounds``
+    (empty regions, degenerate grids) get an exact scan over all
+    targets.  A cached index answers the broadcast question; a miss
+    pays the size probe and the build.
 
-    ``query_id`` must be unique per distinct query row: the top-k
-    window partitions on it, so two distinct rows sharing an id are
-    ranked together (duplicate neighbors, fewer than k per row).
+    Past the guard, the scale-safe round loop: round r joins the
+    unresolved queries against the targets in the radius-2^r cell ring,
+    folds a running per-query top-k (window input O(queries*k + new
+    candidates)), and runs ONE action per round (the unresolved count);
+    each round's frames are persisted and the previous round's
+    released.  After ``max_rounds`` ONE extra widened ring (radius
+    2^max_rounds) runs, and if queries STILL remain it raises (raise
+    ``max_rounds`` or use a finer grid) instead of running a distributed
+    cartesian scan.  Its result stays persisted until
+    ``release_operator_caches("knn_join")``.
 
-    Note: exact-duplicate query rows and target rows distinct-collapse
-    ONCE at entry (target rows must be distinct on ``target_cols`` —
-    pass an id column — or duplicate targets will collapse); ring
-    candidates are then unique (query, target) pairs BY CONSTRUCTION
-    (consecutive rings cover disjoint cell sets), so the fold needs no
-    per-round pair-level dropDuplicates — that was one extra exchange
-    over the merged top-k+candidates EVERY round (guide §2.4; only the
-    brute fallback, whose cross-join regenerates pairs the rings
-    already found, still dedups its one fold).
+    Output: the query columns, ``target_cols`` (``t_<c>`` where a query
+    column has the name), ``dist2`` (squared Euclidean, no sqrt ->
+    exact float parity with SQL oracles; a double on the index path)
+    and ``knn_rank``.
+
+    ``query_id`` must be unique per distinct query row: the round
+    loop's top-k window partitions on it, so two distinct rows sharing
+    an id are ranked together (duplicate neighbors, fewer than k per
+    row).
+
+    Exact-duplicate query rows and target rows collapse ONCE at entry
+    (target rows must be distinct on ``target_cols`` — pass an id
+    column — or duplicate targets collapse).  A target with a NULL
+    coordinate is never a neighbor, nor, on the index path, one with a
+    NaN.  On the index path a query with a NULL coordinate gets the
+    first k targets in ``tie_break`` order with a NULL ``dist2``, as
+    :func:`knn_brute` ranks it.
     """
-    tcols = target_cols or [c for c in targets.columns]
+    tcols = target_cols or list(targets.columns)
+    cols = tcols + [c for c in (tx, ty) if c not in tcols]
+    base = _index_cache_key(targets, grid, cols)
+    # the leading "knn" keeps the polygon lookup's geometry-only
+    # fallback (k2[:3] == key[:3]) from ever matching this entry
+    key = None if base is None else ("knn", *base, tx, ty, tie_break)
+    idx = None if key is None else _find_cached_index(key, cols)
+    if idx is None and _resolve_broadcast(targets, "auto"):
+        idx = _KnnIndex(targets, grid, cols, tx, ty, tie_break)
+        _cache_put(key, idx)
+    if idx is not None:
+        return idx.join(queries, k, qx, qy, tcols, max_rounds)
+    return _knn_rounds(
+        queries, targets, k, grid, qx, qy, tx, ty, query_id, tcols,
+        tie_break, max_rounds,
+    )
+
+
+#: candidate (query, target) pairs per top-k chunk of the kNN kernel:
+#: bounds a worker's temporaries, whole queries per chunk
+_KNN_CHUNK_PAIRS = 1 << 21
+#: queries per kNN kernel slice (Arrow batches run to 131072 rows; the
+#: per-query cell-row ranges grow with the search radius)
+_KNN_SLICE = 16384
+
+
+class _KnnIndex:
+    """Build-once broadcast kNN index over a target side that fits the
+    broadcast guard.
+
+    The distinct targets whose coordinates are both present are
+    collected once, ordered by ``tie_break`` ascending with nulls first
+    — Spark's own sort — so a target's row position is its tie code and
+    ranking by (dist2, position) is the window order (dist2,
+    tie_break).  One broadcast carries the coordinates, a CSR cell ->
+    target index and the target columns as Arrow IPC bytes; each
+    :meth:`join` is one lazy ``mapInArrow`` pass over the queries that
+    emits the output rows directly (``take`` on both sides, no
+    join-back)."""
+
+    def __init__(self, targets: DataFrame, grid: Grid, cols: list[str],
+                 tx: str, ty: str, tie_break: str | None):
+        import pyarrow as pa  # noqa: PLC0415
+
+        self.grid = grid
+        self.fields = {f.name: f for f in targets.schema.fields}
+        t = targets.select(*cols).where(~missing_coord_expr(tx, ty)).dropDuplicates()
+        if tie_break:
+            t = t.orderBy(F.col(tie_break).asc_nulls_first())
+        table = t.toArrow().combine_chunks()
+        x = np.asarray(table.column(tx).to_numpy(), dtype=np.float64)
+        y = np.asarray(table.column(ty).to_numpy(), dtype=np.float64)
+        order, cells, offsets = _csr(grid.cell_np(x, y))
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, table.schema) as w:
+            w.write_table(table)
+        self.bc = targets.sparkSession.sparkContext.broadcast(
+            (x, y, cells, offsets, order, sink.getvalue().to_pybytes())
+        )
+
+    def join(self, queries: DataFrame, k: int, qx: str, qy: str,
+             tcols: list[str], max_rounds: int) -> DataFrame:
+        from pyspark.sql.types import (  # noqa: PLC0415
+            DoubleType, IntegerType, StructField, StructType,
+        )
+
+        qfields = queries.schema.fields
+        qcols = [f.name for f in qfields]
+        tfields = [
+            StructField(c if c not in qcols else "t_" + c,
+                        self.fields[c].dataType, self.fields[c].nullable)
+            for c in tcols
+        ]
+        schema = StructType(
+            qfields + tfields + [
+                StructField("dist2", DoubleType()),
+                StructField("knn_rank", IntegerType(), False),
+            ]
+        )
+        names = schema.fieldNames()
+        qx_i, qy_i = qcols.index(qx), qcols.index(qy)
+        bc, grid = self.bc, self.grid
+
+        def knn(batches):
+            import pyarrow as pa  # noqa: PLC0415
+
+            *state, ipc = bc.value
+            tgt = pa.ipc.open_stream(ipc).read_all().select(tcols)
+            for rb in batches:
+                a, b = rb.column(qx_i), rb.column(qy_i)
+                px = np.asarray(a.to_numpy(zero_copy_only=False), dtype=np.float64)
+                py = np.asarray(b.to_numpy(zero_copy_only=False), dtype=np.float64)
+                parts = []
+                for s in range(0, rb.num_rows, _KNN_SLICE):
+                    qi, ti, d2, rk = _knn_search(
+                        state, px[s : s + _KNN_SLICE], py[s : s + _KNN_SLICE],
+                        k, grid, max_rounds,
+                    )
+                    parts.append((qi + s, ti, d2, rk))
+                qi, ti, d2, rk = _knn_cat(parts)
+                if not len(qi):
+                    continue
+                # Spark's dist2 is NULL, not NaN, for a NULL coordinate
+                null = (a.is_null().to_numpy(zero_copy_only=False)
+                        | b.is_null().to_numpy(zero_copy_only=False))
+                out = pa.Table.from_arrays(
+                    [
+                        *rb.take(qi).columns,
+                        *tgt.take(ti).columns,
+                        pa.array(d2, mask=null[qi]),
+                        pa.array(rk + 1, type=pa.int32()),
+                    ],
+                    names=names,
+                )
+                yield from out.to_batches()
+
+        return queries.dropDuplicates().mapInArrow(knn, schema=schema)
+
+
+def _knn_cat(parts):
+    """Concatenate (query, target, dist2, rank) row tuples."""
+    if not parts:
+        e = np.empty(0, np.int64)
+        return e, e, np.empty(0, np.float64), e
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _knn_search(state, qx, qy, k: int, grid: Grid, max_rounds: int):
+    """kNN of one query slice against a :class:`_KnnIndex` state:
+    (query position, target position, dist2, 0-based rank) rows.
+
+    Round r searches the square of cells at Chebyshev radius 2^r around
+    each query's cell — one contiguous range of the cell-sorted targets
+    per row of cells — and resolves the queries whose k-th distance is
+    within the covered radius 2^r*min(dx, dy).  The rest, and queries
+    with a missing coordinate, get an exact scan over all targets."""
+    _, _, cells, offsets, order = state
+    valid = ~(np.isnan(qx) | np.isnan(qy))
+    col = np.floor((np.where(valid, qx, grid.x0) - grid.x0) / grid.dx).astype(np.int64)
+    row = np.floor((np.where(valid, qy, grid.y0) - grid.y0) / grid.dy).astype(np.int64)
+    todo = np.flatnonzero(valid)
+    out = []
+    for r in range(max_rounds):
+        rad = 2**r
+        # past half the grid width the row ranges would overlap
+        if not len(todo) or 2 * rad >= grid.width:
+            break
+        lo = (row[todo, None] + np.arange(-rad, rad + 1)) * grid.width + (
+            col[todo, None] - rad
+        )
+        starts = offsets[np.searchsorted(cells, lo)]
+        ends = offsets[np.searchsorted(cells, lo + 2 * rad, side="right")]
+        qi, ti, d2, rk = _knn_topk(state, qx, qy, todo, starts, ends, k)
+        kth = np.full(len(todo), np.inf)
+        at = rk == k - 1
+        kth[np.searchsorted(todo, qi[at])] = d2[at]
+        done = kth <= (rad * min(grid.dx, grid.dy)) ** 2
+        keep = done[np.searchsorted(todo, qi)]
+        out.append((qi[keep], ti[keep], d2[keep], rk[keep]))
+        todo = todo[~done]
+    todo = np.union1d(todo, np.flatnonzero(~valid))
+    if len(todo):
+        everything = np.zeros((len(todo), 1), np.int64)
+        out.append(_knn_topk(
+            state, qx, qy, todo, everything, everything + len(order), k
+        ))
+    return _knn_cat(out)
+
+
+def _knn_topk(state, qx, qy, q, starts, ends, k: int):
+    """Top-k of each query ``q[i]`` over the cell-sorted targets in its
+    disjoint ranges ``starts[i, j]:ends[i, j]``, ranked by (dist2,
+    target position): the kept (query, target, dist2, 0-based rank)
+    rows.  Runs in chunks of whole queries of about
+    ``_KNN_CHUNK_PAIRS`` candidate pairs."""
+    tx, ty, _, _, order = state
+    counts = ends - starts
+    cum = np.cumsum(counts.sum(axis=1))
+    parts = []
+    lo = 0
+    while lo < len(q):
+        base = cum[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(cum, base + _KNN_CHUNK_PAIRS, "right")))
+        c = counts[lo:hi].ravel()
+        n = int(c.sum())
+        if n:
+            pos = np.repeat(starts[lo:hi].ravel() - (np.cumsum(c) - c), c) + np.arange(n)
+            qi = np.repeat(np.repeat(q[lo:hi], counts.shape[1]), c)
+            ti = order[pos]
+            # dx*dx + dy*dy in float64: bit-equal to Spark's and the SQL
+            # oracles' dist2
+            dx = qx[qi] - tx[ti]
+            dy = qy[qi] - ty[ti]
+            d2 = dx * dx + dy * dy
+            o = np.lexsort((ti, d2, qi))
+            qi, ti, d2 = qi[o], ti[o], d2[o]
+            first = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
+            rank = np.arange(n) - np.repeat(first, np.diff(np.r_[first, n]))
+            top = rank < k
+            parts.append((qi[top], ti[top], d2[top], rank[top]))
+        lo = hi
+    return _knn_cat(parts)
+
+
+def _knn_rounds(
+    queries: DataFrame, targets: DataFrame, k: int, grid: Grid,
+    qx: str, qy: str, tx: str, ty: str, query_id: str, tcols: list[str],
+    tie_break: str | None, max_rounds: int,
+) -> DataFrame:
+    """:func:`knn_join`'s round loop, for a target side past the
+    broadcast guard.  Ring candidates are unique (query, target) pairs
+    BY CONSTRUCTION — queries and targets are distinct at entry and
+    consecutive rings cover disjoint cell sets — so the fold needs no
+    per-round pair-level dropDuplicates."""
     tgt = targets.withColumn(_P + "tcell", grid.cell_expr(F.col(tx), F.col(ty)))
     tgt = tgt.select(
         _P + "tcell", *[F.col(c).alias("__t_" + c) for c in tcols]
     ).dropDuplicates().cache()
     cached = [tgt]
-    dedup_keys = [query_id] + ["__t_" + c for c in tcols]
     order = [F.col("dist2")] + ([F.col("__t_" + tie_break)] if tie_break else [])
     w = Window.partitionBy(query_id).orderBy(*order)
     qcols = queries.columns
@@ -1118,18 +1325,12 @@ def knn_join(
             _P + "tcell", _P + "qcol", _P + "qrow", _P + "dc", _P + "dr"
         )
 
-    def fold_topk(topk, cand, dedup: bool = False) -> DataFrame:
+    def fold_topk(topk, cand) -> DataFrame:
         """Running top-k: merge the previous top-k rows with this
         round's candidates and keep per-query rank <= k under the
         (dist2, tie_break) order — identical to windowing the full
-        candidate history because top-k is a fold under a total order.
-        Ring folds need no dedup (queries/targets distinct at entry +
-        disjoint ring cells -> unique pairs); the brute FALLBACK fold
-        passes dedup=True because its cross-join re-generates pairs the
-        rings already put into the running top-k."""
+        candidate history because top-k is a fold under a total order."""
         merged = cand if topk is None else topk.drop("__rk").unionByName(cand)
-        if dedup:
-            merged = merged.dropDuplicates(dedup_keys)
         return (
             merged.withColumn("__rk", F.row_number().over(w))
             .where(F.col("__rk") <= k)
@@ -1163,61 +1364,26 @@ def knn_join(
         if not n_rem:
             break
         topk, remaining, n_rem = advance(topk, remaining, r)
-
-    if topk is None:
-        # max_rounds == 0 with a possibly-empty query set: the brute
-        # plan yields the correct result without the round machinery —
-        # except past the broadcast guard, where the fallback below
-        # keeps the bounded-ring/raise contract
-        if _resolve_broadcast(targets, "auto"):
+    if n_rem:
+        # ONE extra widened ring, then a loud failure (an unguarded
+        # distributed cartesian is a cluster-killer)
+        topk, remaining, n_rem = advance(topk, remaining, max_rounds)
+        if n_rem:
             for df in cached:
                 df.unpersist()
-            return knn_brute(
-                queries, targets, k, qx=qx, qy=qy, tx=tx, ty=ty,
-                query_id=query_id, target_cols=tcols, tie_break=tie_break,
+            raise RuntimeError(
+                "knn_join: queries remain unresolved after "
+                f"{max_rounds}+1 cell-ring rounds and the target "
+                "side is too large to broadcast for the brute "
+                "fallback — raise max_rounds or use a finer grid"
             )
 
+    # the last round's persisted top-k IS the answer — already
+    # materialized by that round's count, so release every other cache
+    # and return the select over it
     renames = [F.col("__t_" + c).alias(c if c not in qcols else "t_" + c)
                for c in tcols]
-    out_cols = [*qcols, *renames, "dist2", F.col("__rk").alias("knn_rank")]
-
-    if n_rem:
-        # straggler fallback: a broadcast brute scan when the target
-        # side fits the guard (cheap — the straggler set is tiny).
-        # Past the guard: ONE extra widened ring, then a loud failure
-        # (an unguarded distributed cartesian is a cluster-killer).
-        if _resolve_broadcast(targets, "auto"):
-            # reuse the deduped cached target frame — no second scan
-            t = F.broadcast(tgt.drop(_P + "tcell"))
-            extra = remaining.crossJoin(t).withColumn(
-                "dist2", _dist2(qx, qy, "__t_" + tx, "__t_" + ty)
-            )
-            topk = fold_topk(topk, extra, dedup=True)
-        else:
-            topk, remaining, n_rem = advance(topk, remaining, max_rounds)
-            if n_rem:
-                for df in cached:
-                    df.unpersist()
-                raise RuntimeError(
-                    "knn_join: queries remain unresolved after "
-                    f"{max_rounds}+1 cell-ring rounds and the target "
-                    "side is too large to broadcast for the brute "
-                    "fallback — raise max_rounds or use a finer grid"
-                )
-        # the fallback fold is lazy: materialize the (queries*k-sized)
-        # result so the round caches can be released.  persist + count
-        # (NOT localCheckpoint): blocks stay lineage-recoverable.
-        out = topk.select(*out_cols).persist()
-        out.count()
-        for df in cached:
-            df.unpersist()
-        _register_op_caches("knn_join", [out])
-        return out
-
-    # no fallback: the last round's persisted top-k IS the answer —
-    # already materialized by that round's count, so release every
-    # other cache and return the select over it
-    out = topk.select(*out_cols)
+    out = topk.select(*qcols, *renames, "dist2", F.col("__rk").alias("knn_rank"))
     for df in cached:
         if df is not topk:
             df.unpersist()

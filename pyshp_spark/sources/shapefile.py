@@ -38,6 +38,7 @@ import pandas as pd
 
 from pyshp_spark.kernels import wkb as _wkb
 from pyshp_spark.kernels.rings import organize_polygon_rings
+from pyshp_spark.session_conf import arrow_enabled
 
 # shape type constants (public ESRI spec / reference sf.py:65-79)
 NULL = 0
@@ -554,6 +555,15 @@ def read_url_shapefile(url: str, bbox=None, fields=None) -> pd.DataFrame:
     return shapefile_to_pandas(shp, dbf, bbox=bbox, fields=fields)
 
 
+def _sample_schema(spark, sample: pd.DataFrame):
+    """A layer's Spark schema from its first rows, inferred under Arrow:
+    on a 2D layer the z, m and part_types columns are all None, which
+    Arrow types as null but the row-pickled inference rejects
+    (CANNOT_DETERMINE_TYPE)."""
+    with arrow_enabled(spark):
+        return spark.createDataFrame(sample.head(10)).schema
+
+
 def read_shapefile_urls(spark, urls: list[str], bbox=None, fields=None):
     """Distributed URL ingest: one task per URL, fetched and parsed ON
     THE EXECUTORS (the driver never touches the bytes) — the scale path
@@ -563,7 +573,7 @@ def read_shapefile_urls(spark, urls: list[str], bbox=None, fields=None):
         raise ValueError("no urls")
     sample = read_url_shapefile(urls[0], bbox=bbox, fields=fields)
     sample.insert(0, "src", urls[0])
-    schema = spark.createDataFrame(sample.head(10)).schema
+    schema = _sample_schema(spark, sample)
 
     urls_df = spark.createDataFrame(
         [(u,) for u in urls], "url string"
@@ -612,7 +622,7 @@ def read_shapefiles(spark, path: str, bbox=None, fields=None):
             dbf0 = f.read()
     sample = shapefile_to_pandas(shp0, dbf0, bbox=bbox, fields=fields)
     sample.insert(0, "src", pairs[0][0])
-    schema = spark.createDataFrame(sample.head(10)).schema
+    schema = _sample_schema(spark, sample)
 
     paths_df = spark.createDataFrame(
         [(s, d) for s, d in pairs], "shp_path string, dbf_path string"

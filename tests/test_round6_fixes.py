@@ -151,8 +151,10 @@ class TestKnnFallbackBounds:
     ):
         import pyshp_spark.operators.spatial as sp
 
-        # simulate a fact-sized target side: the brute fallback is
-        # forbidden, so only the extra widened ring can resolve
+        # simulate a fact-sized target side: the index path is
+        # forbidden, so only the extra widened ring can resolve (a
+        # cached index would answer before the patched guard is asked)
+        sp.clear_polygon_index_cache()
         monkeypatch.setattr(sp, "_resolve_broadcast", lambda *a, **k: False)
         queries = spark.createDataFrame([Row(query_id=0, x=0.0, y=0.0)])
         # target sits ~3 cells away: radius 1, 2 miss; the extra
@@ -169,6 +171,7 @@ class TestKnnFallbackBounds:
         import pyshp_spark.operators.spatial as sp
 
         # simulate a fact-sized target side without materializing 4M rows
+        sp.clear_polygon_index_cache()
         monkeypatch.setattr(sp, "_resolve_broadcast", lambda *a, **k: False)
         queries = spark.createDataFrame([Row(query_id=0, x=0.0, y=0.0)])
         targets = spark.createDataFrame(

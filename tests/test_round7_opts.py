@@ -6,8 +6,9 @@
    built WITH attribute columns instead of building a second one.
 2. point_out_cols on spatial_semi_join / spatial_anti_join trims the
    output columns without changing row content on both paths.
-3. knn_join's running top-k fold releases every per-round cache except
-   the one backing the returned frame.
+3. knn_join's running top-k fold (the round loop, past the broadcast
+   guard) releases every per-round cache except the one backing the
+   returned frame.
 """
 
 from __future__ import annotations
@@ -390,7 +391,11 @@ class TestBandStoreCompactionCollapse:
         assert kept.count() == 0
 
 
-def test_knn_fold_releases_round_caches(spark):
+def test_knn_fold_releases_round_caches(spark, monkeypatch):
+    # the round loop runs only past the broadcast guard: clear the
+    # index cache (a hit would bypass the patch) and force it
+    sp.clear_polygon_index_cache()
+    monkeypatch.setattr(sp, "_resolve_broadcast", lambda *a, **k: False)
     rng = np.random.default_rng(11)
     q = spark.createDataFrame(pd.DataFrame({
         "query_id": range(20),

@@ -120,3 +120,24 @@ class TestSparkIngest:
         (d / "poly2.shp").write_bytes(shp)
         (d / "poly2.dbf").write_bytes(dbf)
         assert read_shapefiles(spark, str(d)).count() == 2 * N
+
+    def test_read_shapefiles_with_arrow_off(self, spark, tmp_path):
+        """A 2D polygon layer's z, m and part_types columns are all
+        None; the schema inference must not depend on the session's
+        Arrow setting."""
+        from pyshp_spark.sources.shapefile import read_shapefiles
+
+        for ext, buf in zip(("shp", "shx", "dbf"), fixture_shapefile_bytes(n=20)):
+            (tmp_path / f"layer.{ext}").write_bytes(buf)
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        prev = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "true")
+            on = read_shapefiles(spark, str(tmp_path))
+            spark.conf.set(key, "false")
+            off = read_shapefiles(spark, str(tmp_path))
+            assert off.count() == 20
+            assert spark.conf.get(key) == "false"
+        finally:
+            spark.conf.set(key, prev)
+        assert off.schema == on.schema
