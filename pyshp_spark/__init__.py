@@ -7,7 +7,7 @@ Spark-first:
 - shapefile geometry *semantics* (points / polylines / polygons with
   CW-exterior/CCW-hole rings; reference src/shapefile.py:65-114, 816-1102)
   ingested into DataFrames of WKB + bbox columns,
-- grid/Morton cell covers for filter-refine spatial joins,
+- grid cell covers for filter-refine spatial joins,
 - vectorized Arrow/pandas UDF kernels (no per-row Python),
 - point-in-polygon / kNN / raster-tile assignment joins,
 - training-data pipeline operators (dedup, similarity search, text analysis,

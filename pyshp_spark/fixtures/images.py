@@ -34,14 +34,6 @@ def lonlat_to_tile(lon, lat, zoom=ZOOM):
     return np.floor(x).astype(np.int64), np.floor(y).astype(np.int64)
 
 
-def tilefrac_to_lonlat(tx, ty, fx, fy, zoom=ZOOM):
-    """Tile + in-tile fraction -> lon/lat (slippy math)."""
-    n = 2.0**zoom
-    lon = (np.asarray(tx) + np.asarray(fx)) / n * 360.0 - 180.0
-    lat = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * (np.asarray(ty) + np.asarray(fy)) / n))))
-    return lon, lat
-
-
 def images_fixture(n: int = 1000, seed: int = 42, png_every: int = 10) -> pd.DataFrame:
     rng = np.random.default_rng(seed)
     x0, y0, x1, y1 = BBOX

@@ -1,34 +1,14 @@
-"""Bounding-box predicates as pure Column expressions.
+"""Bounding-box predicate as a pure Column expression.
 
-The reference's bbox kernels (reference src/shapefile.py:856-869 —
-``bbox_overlap`` with <= comparisons, ``bbox_contains`` strict <) become
-whole-stage-codegen'd Column expressions: no UDF, fully pushable to
+The reference's ``bbox_overlap`` kernel (reference src/shapefile.py:856-869,
+inclusive <= comparisons) becomes, for the point-vs-bbox case the joins
+use, a whole-stage-codegen'd Column expression: no UDF, fully pushable to
 Parquet min/max row-group skipping once bbox lives in top-level columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-
-
-def bbox_overlap_expr(
-    lxmin: Column, lymin: Column, lxmax: Column, lymax: Column,
-    rxmin: Column, rymin: Column, rxmax: Column, rymax: Column,
-) -> Column:
-    """Reference semantics: inclusive <= on every comparison."""
-    return (
-        (lxmin <= rxmax) & (rxmin <= lxmax) & (lymin <= rymax) & (rymin <= lymax)
-    )
-
-
-def bbox_contains_expr(
-    oxmin: Column, oymin: Column, oxmax: Column, oymax: Column,
-    ixmin: Column, iymin: Column, ixmax: Column, iymax: Column,
-) -> Column:
-    """Outer strictly contains inner (strict <, hole-assignment parity)."""
-    return (
-        (oxmin < ixmin) & (ixmax < oxmax) & (oymin < iymin) & (iymax < oymax)
-    )
 
 
 def point_in_bbox_expr(

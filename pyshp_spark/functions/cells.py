@@ -1,4 +1,4 @@
-"""Spatial cell index: grid cells, Morton codes, covers, tile math.
+"""Spatial cell index: grid cells, covers, tile math.
 
 The reference has no spatial index (its only pushdown is the per-record
 bbox prefix test, reference src/shapefile.py:1683-1687).  This module
@@ -8,11 +8,8 @@ Column math -> whole-stage codegen), polygons get a cell *cover*
 spatial joins become plain equi-joins on ``cell`` that Catalyst can
 broadcast / sort-merge / AQE-skew-split like any other join.
 
-Two encodings:
-- grid cell: ``col + row * width`` — trivially SQL-expressible (the
-  DuckDB oracle runs the same formula), used for correctness contracts;
-- Morton (z-order) code of the same (col, row) — bit-interleave via
-  Column shift/mask ops, better range-partition locality at scale.
+The cell id is ``col + row * width`` — trivially SQL-expressible (the
+DuckDB oracle runs the same formula), used for correctness contracts.
 
 Tile math (Web-Mercator slippy tiles) is pure Column trig, matching the
 usual OSM formulas.
@@ -23,7 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -56,14 +53,6 @@ class Grid:
     def cell_expr(self, x: Column, y: Column) -> Column:
         return self.col_expr(x) + self.row_expr(y) * F.lit(self.width)
 
-    def cell_sql(self, x: str, y: str) -> str:
-        """Identical formula as ANSI SQL (DuckDB oracle parity)."""
-        return (
-            f"(CAST(floor(({x} - ({self.x0!r})) / ({self.dx!r})) AS BIGINT)"
-            f" + CAST(floor(({y} - ({self.y0!r})) / ({self.dy!r})) AS BIGINT)"
-            f" * {self.width})"
-        )
-
     # -- numpy (UDF-side) --------------------------------------------------
     def cell_np(self, x: np.ndarray, y: np.ndarray) -> np.ndarray:
         cx = np.floor((np.asarray(x) - self.x0) / self.dx).astype(np.int64)
@@ -81,14 +70,6 @@ class Grid:
         rows = np.arange(r0, r1 + 1, dtype=np.int64)
         return (cols[None, :] + rows[:, None] * self.width).ravel()
 
-    def neighbors_np(self, cell: int, ring: int = 1) -> np.ndarray:
-        """Cells within `ring` steps (Chebyshev) of `cell` — kNN expansion."""
-        c = cell % self.width
-        r = cell // self.width
-        cols = np.arange(c - ring, c + ring + 1, dtype=np.int64)
-        rows = np.arange(r - ring, r + ring + 1, dtype=np.int64)
-        return (cols[None, :] + rows[:, None] * self.width).ravel()
-
 
 # default grid used by fixture-scale tests: polygon fixture extent
 from pyshp_spark.fixtures.polygons import BBOX as _FIX_BBOX  # noqa: E402
@@ -96,21 +77,13 @@ from pyshp_spark.fixtures.polygons import BBOX as _FIX_BBOX  # noqa: E402
 GRID = Grid.for_extent(*_FIX_BBOX, cells_per_axis=64)
 
 
-def cell_id_expr(x: Column, y: Column, grid: Grid = GRID) -> Column:
-    return grid.cell_expr(x, y)
-
-
-def cell_id_sql(x: str, y: str, grid: Grid = GRID) -> str:
-    return grid.cell_sql(x, y)
-
-
 def missing_coord_expr(*cols: str) -> Column:
     """TRUE when any coordinate column is NULL or NaN — the engine's
     two encodings for missing geometry.  isNull() alone misses NaN,
     and floor(NaN) cast to long fabricates a real value (0 non-ANSI,
     an error under ANSI); any PERSISTED key derived from coordinates
-    must gate on this.  Shared by the cell and Z-order layout writers
-    (plans/layout.py) and :func:`with_point_cell`."""
+    must gate on this.  Shared by the cell layout writer
+    (plans/layout.py) and the kNN index build (operators/spatial.py)."""
     if not cols:
         raise ValueError("missing_coord_expr needs at least one column")
     cond = None
@@ -118,59 +91,6 @@ def missing_coord_expr(*cols: str) -> Column:
         this = F.col(c).isNull() | F.isnan(F.col(c).cast("double"))
         cond = this if cond is None else (cond | this)
     return cond
-
-
-def with_point_cell(df: DataFrame, x: str, y: str, grid: Grid = GRID,
-                    out: str = "cell") -> DataFrame:
-    """Attach the grid cell id; missing (NULL/NaN) coordinates yield a
-    NULL cell rather than a fabricated one.  The raw formula stays in
-    Grid.cell_expr/cell_sql — the SQL mirror cannot even express the
-    unguarded NaN behavior (CAST(NaN AS BIGINT) errors in ANSI SQL)."""
-    return df.withColumn(
-        out,
-        F.when(missing_coord_expr(x, y), F.lit(None)).otherwise(
-            grid.cell_expr(F.col(x), F.col(y))
-        ),
-    )
-
-
-# -------------------------------------------------------- Morton codes ----
-
-def _spread_bits32(v: Column) -> Column:
-    """Interleave zeros between the low 32 bits of v (magic-number spread),
-    all in Column bitwise ops (JVM-side, codegen'd).  NOTE: must use
-    Column.bitwiseOR — Python's `|` on Columns is LOGICAL or, which
-    fails analysis on integer types."""
-    v = v.bitwiseAND(F.lit(0xFFFFFFFF))
-    v = v.bitwiseOR(F.shiftleft(v, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    v = v.bitwiseOR(F.shiftleft(v, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    v = v.bitwiseOR(F.shiftleft(v, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    v = v.bitwiseOR(F.shiftleft(v, 2)).bitwiseAND(F.lit(0x3333333333333333))
-    v = v.bitwiseOR(F.shiftleft(v, 1)).bitwiseAND(F.lit(0x5555555555555555))
-    return v
-
-
-def morton_expr(col: Column, row: Column) -> Column:
-    """Z-order code from non-negative (col, row) — locality-preserving
-    alternative cell id for range partitioning at scale."""
-    return _spread_bits32(col).bitwiseOR(
-        F.shiftleft(_spread_bits32(row), 1)
-    )
-
-
-def morton_np(col: np.ndarray, row: np.ndarray) -> np.ndarray:
-    def spread(v):
-        v = v.astype(np.uint64) & np.uint64(0xFFFFFFFF)
-        v = (v | (v << np.uint64(16))) & np.uint64(0x0000FFFF0000FFFF)
-        v = (v | (v << np.uint64(8))) & np.uint64(0x00FF00FF00FF00FF)
-        v = (v | (v << np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        v = (v | (v << np.uint64(2))) & np.uint64(0x3333333333333333)
-        v = (v | (v << np.uint64(1))) & np.uint64(0x5555555555555555)
-        return v
-
-    return (spread(np.asarray(col)) | (spread(np.asarray(row)) << np.uint64(1))).astype(
-        np.int64
-    )
 
 
 # ------------------------------------------------------------ tile math ----
@@ -186,14 +106,3 @@ def tile_to_lonlat_cols(tx: Column, ty: Column, zoom: Column,
     lon = xf / n * F.lit(360.0) - F.lit(180.0)
     lat = F.degrees(F.atan(F.sinh(F.lit(float(np.pi)) * (F.lit(1.0) - F.lit(2.0) * yf / n))))
     return lon, lat
-
-
-def lonlat_to_tile_cols(lon: Column, lat: Column, zoom: Column
-                        ) -> tuple[Column, Column]:
-    n = F.pow(F.lit(2.0), zoom.cast("double"))
-    tx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n).cast("long")
-    lat_rad = F.radians(lat)
-    ty = F.floor(
-        (F.lit(1.0) - F.asinh(F.tan(lat_rad)) / F.lit(float(np.pi))) / F.lit(2.0) * n
-    ).cast("long")
-    return tx, ty

@@ -1,11 +1,10 @@
-"""GeoJSON export/import — ``__geo_interface__`` equivalence surface.
+"""GeoJSON export — ``__geo_interface__`` equivalence surface.
 
 Export reproduces the reference's ``Shape.__geo_interface__`` mapping
 (reference src/shapefile.py:1380-1491): Point/MultiPoint/LineString/
 MultiLineString picked by shape type + part count, polygons organized
 into exterior+holes (done at ingest here, same algorithm), empty shapes
-export empty coordinates.  Import mirrors ``Shape._from_geojson``
-(sf.py:1493-1557): exteriors re-wound to CW, holes to CCW.
+export empty coordinates.
 
 The export UDF emits canonical JSON strings (sorted keys) so join
 outputs can be equality-checked against the reference oracle.
@@ -17,11 +16,9 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from pyshp_spark.kernels.rings import is_cw
 from pyshp_spark.kernels.wkb import (
     WKB_LINESTRING,
     WKB_MULTILINESTRING,
@@ -92,52 +89,3 @@ def geojson_udf():
         )
 
     return gj
-
-
-def with_geojson(df: DataFrame, out: str = "geojson") -> DataFrame:
-    return df.withColumn(out, geojson_udf()(F.col("wkb"), F.col("shape_type")))
-
-
-def feature_collection(rows: list[dict]) -> dict:
-    """Rows of {geometry: dict, properties: dict} -> FeatureCollection
-    (reference Shapes/ShapeRecords __geo_interface__, sf.py:2658-2692)."""
-    return {
-        "type": "FeatureCollection",
-        "features": [
-            {
-                "type": "Feature",
-                "geometry": r["geometry"],
-                "properties": r.get("properties", {}),
-            }
-            for r in rows
-        ],
-    }
-
-
-def rings_from_geojson(geoj: dict) -> tuple[int, list[np.ndarray]]:
-    """GeoJSON geometry -> (shapefile shape type, rings/lines list) with
-    the reference's import re-winding (sf.py:1493-1557): polygon
-    exterior forced CW, holes forced CCW."""
-    t = geoj["type"]
-    coords = geoj.get("coordinates", [])
-    if t == "Point":
-        return 1, [np.asarray([coords], dtype=np.float64)] if coords else []
-    if t == "MultiPoint":
-        return 8, [np.asarray(coords, dtype=np.float64)] if coords else []
-    if t == "LineString":
-        return 3, [np.asarray(coords, dtype=np.float64)] if coords else []
-    if t == "MultiLineString":
-        return 3, [np.asarray(c, dtype=np.float64) for c in coords]
-    if t in ("Polygon", "MultiPolygon"):
-        polys = [coords] if t == "Polygon" else coords
-        rings = []
-        for poly in polys:
-            for i, ring in enumerate(poly):
-                a = np.asarray(ring, dtype=np.float64)
-                if len(a):
-                    want_cw = i == 0
-                    if is_cw(a) != want_cw:
-                        a = a[::-1].copy()
-                rings.append(a)
-        return 5, rings
-    raise ValueError(f"unsupported GeoJSON type {t}")

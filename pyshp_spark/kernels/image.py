@@ -1,4 +1,4 @@
-"""Tiny image codec + metrics kernels (stdlib zlib + numpy only).
+"""Tiny image codec + perceptual-hash kernel (stdlib zlib + numpy only).
 
 The sandbox has no image libraries, so the engine carries a minimal
 PNG encoder/decoder (8-bit RGB, filter 0/1/2 only) and a raw RGB
@@ -7,7 +7,8 @@ column in, decoded ndarray batches out, PSNR/pHash verified — while
 exotic formats raise NotImplementedError (clearly-marked stub).
 
 Used by the per-row image invariant from BASELINE.json input_hint:
-decoded-pixel allclose (PSNR >= 40 dB) + caption equality.
+decoded-pixel allclose (PSNR >= 40 dB, measured by the tests' oracle)
++ caption equality.
 """
 
 from __future__ import annotations
@@ -103,16 +104,6 @@ def decode_image(buf: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     raise NotImplementedError(f"stub codec: image format {fmt!r} not supported")
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB; inf for identical images."""
-    a = np.asarray(a, dtype=np.float64)
-    b = np.asarray(b, dtype=np.float64)
-    mse = float(np.mean((a - b) ** 2))
-    if mse == 0.0:
-        return float("inf")
-    return 10.0 * np.log10(255.0**2 / mse)
-
-
 def average_hash(rgb: np.ndarray) -> int:
     """64-bit average hash: grayscale -> 8x8 block means -> mean
     threshold -> row-major bit pack.  Deterministic pHash stand-in for
@@ -133,7 +124,3 @@ def average_hash(rgb: np.ndarray) -> int:
         v = (v << 1) | int(bit)
     # interpret as signed 64-bit so it fits Spark LongType
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")

@@ -41,12 +41,6 @@ def exact_dedup(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataF
     )
 
 
-def exact_dedup_filter(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """The corpus with only the canonical row per duplicate group kept."""
-    keep = exact_dedup(df, key, text).select(F.col("keeper_id").alias(key))
-    return df.join(keep, on=key, how="left_semi")
-
-
 # ----------------------------------------------------- n-gram Jaccard ----
 
 
@@ -316,30 +310,6 @@ def shingles(text: str, width: int = 3) -> set[bytes]:
     if len(toks) < width:
         return {" ".join(toks).encode()} if toks else set()
     return {" ".join(toks[i : i + width]).encode() for i in range(len(toks) - width + 1)}
-
-
-def minhash_signature_py(text: str, num_perm: int = 64, width: int = 3,
-                         seed: int = 1) -> np.ndarray:
-    """Single-doc oracle-side signature: per-token :func:`_hash64`,
-    window-combined into shingle hashes (odd-multiplier sum mod 2^64,
-    see :func:`_shingle_mults`), then affine perms mod the Mersenne
-    prime 2^61-1 with numpy's uint64 wrap-around on the multiply-add."""
-    a, b = _minhash_params(num_perm, seed)
-    mults = _shingle_mults(width)
-    toks = [t for t in ("" if text is None else text).lower().split() if t]
-    if not toks:
-        return np.zeros(num_perm, dtype=np.int64)
-    th = [_hash64(t.encode()) for t in toks]
-    if len(th) < width:
-        sh = [sum(th[j] * mults[j] for j in range(len(th))) % _U64]
-    else:
-        sh = [
-            sum(th[i + j] * mults[j] for j in range(width)) % _U64
-            for i in range(len(th) - width + 1)
-        ]
-    base = np.array(sh, dtype=np.uint64)
-    vals = (a[None, :] * base[:, None] + b[None, :]) % np.uint64(_MERSENNE)
-    return vals.min(axis=0).astype(np.int64)
 
 
 def _shingle_mults(width: int) -> list[int]:
@@ -996,21 +966,6 @@ def hamming_band_exprs(col, max_hamming: int) -> list:
         exprs.append(e)
         shift += w
     return exprs
-
-
-def simhash64_py(text: str) -> int:
-    toks = [t for t in ("" if text is None else text).lower().split() if t]
-    if not toks:
-        return 0
-    h64 = np.array([_hash64(t.encode()) for t in toks], dtype=np.uint64)
-    bits = ((h64[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-        np.int64
-    )
-    v = np.where(bits.sum(axis=0) * 2 >= len(toks), 1, 0)
-    out = 0
-    for i in range(64):
-        out |= int(v[i]) << i
-    return out - (1 << 64) if out >= (1 << 63) else out
 
 
 def simhash_udf():

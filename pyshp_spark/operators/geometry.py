@@ -16,7 +16,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -146,17 +145,6 @@ def explode_coordinates(
             yield pd.DataFrame(d)[out_names]
 
     return df.select(*in_cols).mapInPandas(explode, schema=schema)
-
-
-def project_2d(df: DataFrame) -> DataFrame:
-    """points_2D analog: the geometry table without z/m columns."""
-    return df.drop("z", "m")
-
-
-def shape_at(df: DataFrame, oid: int) -> DataFrame:
-    """Random access by oid (reference Reader.shape(i), sf.py:4090-4107)
-    — a filter the optimizer turns into a pruned scan."""
-    return df.where(F.col("oid") == oid)
 
 
 def with_ring_sample(

@@ -2,8 +2,8 @@
 
 Media rows are opaque ``binary`` columns with typed metadata (images:
 w, h, fmt per the BASELINE.json input_hint schema; audio: sr, channels,
-fmt).  Decode / feature-extract / resize / frame-sample / chunk run as
-Arrow-batched ``mapInPandas`` transforms.  Real codecs in this
+fmt).  Decode / feature-extract / frame-sample run as Arrow-batched
+``mapInPandas`` transforms.  Real codecs in this
 container: raw RGB + minimal PNG (kernels/image.py), the deterministic
 'rawvideo' concatenated-frame container, and pcm16 audio (numpy int16);
 everything else raises NotImplementedError (clearly-marked stub, per
@@ -80,49 +80,6 @@ def with_image_stats(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
             yield out
 
     return df.mapInPandas(stats, schema=schema)
-
-
-def resize_nearest(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize every decodable image to (out_w, out_h);
-    output keeps the input_hint schema with fmt='raw' bytes."""
-    fields = [
-        f if f.name != "bytes" else StructField("bytes", BinaryType())
-        for f in df.schema.fields
-    ]
-    schema = StructType(fields)
-    names = [f.name for f in fields]
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = None
-        for pdf in batches:
-            new_bytes = []
-            new_w = []
-            new_h = []
-            new_fmt = []
-            for buf, w, h, fmt in zip(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]):
-                try:
-                    rgb = decode_image(bytes(buf), int(w), int(h), str(fmt))
-                except (NotImplementedError, ValueError):
-                    new_bytes.append(None)
-                    new_w.append(int(w))
-                    new_h.append(int(h))
-                    new_fmt.append(str(fmt))
-                    continue
-                yi = (np.arange(out_h) * rgb.shape[0] // out_h).astype(int)
-                xi = (np.arange(out_w) * rgb.shape[1] // out_w).astype(int)
-                small = rgb[yi][:, xi]
-                new_bytes.append(small.tobytes())
-                new_w.append(out_w)
-                new_h.append(out_h)
-                new_fmt.append("raw")
-            out = pdf.copy()
-            out["bytes"] = new_bytes
-            out["w"] = np.array(new_w, dtype=np.int32)
-            out["h"] = np.array(new_h, dtype=np.int32)
-            out["fmt"] = new_fmt
-            yield out[names]
-
-    return df.mapInPandas(resize, schema=schema)
 
 
 def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
@@ -226,55 +183,6 @@ def with_audio_stats(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
             yield out
 
     return df.mapInPandas(stats, schema=schema)
-
-
-def audio_chunk(df: DataFrame, chunk_s: float) -> DataFrame:
-    """Explode long audio into fixed-duration chunks (the ASR-pipeline
-    unit of work): one output row per chunk with ``chunk_idx:long`` and
-    re-sliced pcm16 bytes (final partial chunk kept).  fmt='pcm16'
-    decodes for real; other formats raise (codec stub)."""
-    if chunk_s <= 0:
-        raise ValueError(f"chunk_s must be > 0, got {chunk_s}")
-    fields = [
-        f if f.name != "bytes" else StructField("bytes", BinaryType())
-        for f in df.schema.fields
-    ] + [StructField("chunk_idx", LongType())]
-    schema = StructType(fields)
-    names = [f.name for f in df.schema.fields]
-
-    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                d = dict(zip(names, row))
-                if str(d["fmt"]) != "pcm16":
-                    raise NotImplementedError(
-                        f"stub: no codec for audio format {d['fmt']!r}; "
-                        "only pcm16 decodes in this environment"
-                    )
-                # corrupt-tolerant like with_audio_stats / frame_sample:
-                # null bytes or junk sr/channels -> zero chunks, not a
-                # job-killing TypeError; empty buffers emit zero chunks
-                try:
-                    if d["bytes"] is None:
-                        continue
-                    sr, ch = int(d["sr"]), max(int(d["channels"]), 1)
-                    if sr <= 0:
-                        continue
-                    buf = bytes(d["bytes"])
-                except (TypeError, ValueError):
-                    continue
-                # floor of one frame: chunk_s*sr < 1 must not produce a
-                # zero range step
-                stride = max(int(chunk_s * sr), 1) * ch * 2  # bytes/chunk
-                for ci, s in enumerate(range(0, len(buf), stride)):
-                    out = dict(d)
-                    out["bytes"] = buf[s : s + stride]
-                    out["chunk_idx"] = ci
-                    rows.append(out)
-            yield pd.DataFrame(rows, columns=names + ["chunk_idx"])
-
-    return df.mapInPandas(chunk, schema=schema)
 
 
 def phash_dedup_pairs(df: DataFrame, max_hamming: int = 6,

@@ -49,10 +49,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _fold_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """(n, d) x (m, d) -> (n, m) dot products accumulated dimension by
     dimension — the exact left-fold addition order of ``dot_expr``'s
@@ -74,7 +70,7 @@ def _fold_norms(m: np.ndarray) -> np.ndarray:
 def cosine_pair_udf():
     """RAW (unrounded) cosine over PAIR ROWS (two array columns),
     vectorized per Arrow batch with the exact fold accumulation order
-    of ``cosine_expr`` — bit-identical to the Column-expression dot, so
+    of ``dot_expr`` — bit-identical to the Column-expression dot, so
     swapping it into a rerank removes ~3*d interpreted Catalyst lambda
     calls per pair without touching values.  Callers apply
     ``F.round(col, 6)`` JVM-side, so rounding semantics (Java
@@ -210,8 +206,8 @@ def _cosine_topk_expr(
     queries, corpus, k, query_id, query_vec, corpus_id, corpus_vec
 ) -> DataFrame:
     # norms are computed ONCE per row (not per pair): cosine is then a
-    # single dot per pair — float-identical to cosine_expr because the
-    # per-pair expression dot/(sqrt(da)*sqrt(db)) is unchanged, the
+    # single dot per pair — float-identical to a per-pair
+    # dot/(sqrt(da)*sqrt(db)) because that expression is unchanged, the
     # factors are just evaluated earlier
     q = F.broadcast(
         queries.select(

@@ -876,6 +876,9 @@ def tile_assignment(
     center point (exact ray-cast semantics).
     mode="bbox": tile assigned to every polygon whose bbox overlaps the
     tile's lon/lat bbox (pure Column math + cell join, no UDF refine).
+
+    Extra keywords go to :func:`point_in_polygon_join` in "center" mode;
+    "bbox" mode runs no PIP join and raises ``TypeError`` on any.
     """
     from pyshp_spark.functions.cells import tile_to_lonlat_cols  # noqa: PLC0415
 
@@ -890,6 +893,11 @@ def tile_assignment(
         )
         return out.drop("__cx", "__cy")
     if mode == "bbox":
+        if kw:
+            raise TypeError(
+                f"tile_assignment(mode='bbox') takes no PIP-join keywords; "
+                f"got {', '.join(sorted(kw))}"
+            )
         lon0, lat1 = tile_to_lonlat_cols(F.col(tx), F.col(ty), F.col(zoom))
         lon1, lat0 = tile_to_lonlat_cols(
             F.col(tx) + F.lit(1), F.col(ty) + F.lit(1), F.col(zoom)
@@ -1071,7 +1079,14 @@ def knn_join(
     NaN.  On the index path a query with a NULL coordinate gets the
     first k targets in ``tie_break`` order with a NULL ``dist2``, as
     :func:`knn_brute` ranks it.
+
+    ``k < 1`` and ``max_rounds < 0`` raise ``ValueError`` before any
+    Spark job runs.
     """
+    if k < 1:
+        raise ValueError(f"knn_join needs k >= 1, got {k}")
+    if max_rounds < 0:
+        raise ValueError(f"knn_join needs max_rounds >= 0, got {max_rounds}")
     tcols = target_cols or list(targets.columns)
     cols = tcols + [c for c in (tx, ty) if c not in tcols]
     base = _index_cache_key(targets, grid, cols)
@@ -1388,13 +1403,6 @@ def _knn_rounds(
         if df is not topk:
             df.unpersist()
     _register_op_caches("knn_join", [topk])
-    return out
-
-
-def _union_all(dfs: list[DataFrame]) -> DataFrame:
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
     return out
 
 

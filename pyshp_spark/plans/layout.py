@@ -82,8 +82,8 @@ def with_cell(
     a real id, and a PERSISTED bucketing key must not invent one.
     Grid.cell_expr itself keeps the raw cast semantics — its transient
     join-path uses eliminate NaN candidates in the exact refine, and
-    the SQL mirror (cell_sql) must stay formula-identical for the
-    oracle gates."""
+    the oracle gates' SQL mirrors spell out the same unguarded
+    formula."""
     from pyshp_spark.functions.cells import missing_coord_expr
 
     raw = grid.cell_expr(F.col(x), F.col(y))
@@ -91,61 +91,3 @@ def with_cell(
         cell_col,
         F.when(missing_coord_expr(x, y), F.lit(None)).otherwise(raw),
     )
-
-
-def save_zorder_layout(
-    df: DataFrame,
-    path: str,
-    x: str = "x",
-    y: str = "y",
-    grid=None,
-    num_files: int | None = None,
-    morton_col: str = "__z",
-    keep_morton: bool = False,
-) -> None:
-    """Write fact rows Z-ORDER clustered: Morton-code the grid cell,
-    repartitionByRange on it (disjoint, balanced code ranges per output
-    file via reservoir-sampled bounds) and sort within each partition —
-    so every parquet file covers a tight, non-overlapping Z range and
-    spatially-local reads (a bbox's cell cover is a handful of short
-    Z intervals) skip most files on min/max stats alone.
-
-    This is the layout that makes repeated regional scans of a
-    10^12-row tile table cheap; at real scale it is exactly Iceberg's
-    sort-order/z-order clustering, expressed here as plain parquet
-    because the Iceberg jars are not in this sandbox.  Pass
-    ``keep_morton=True`` to persist the code column (lets readers add
-    ``WHERE __z BETWEEN ...`` ranges explicitly; the same pruning works
-    implicitly through the x/y min-max stats either way, since sorting
-    by Z also clusters x and y)."""
-    from pyshp_spark.functions.cells import (
-        GRID, missing_coord_expr, morton_expr,
-    )
-
-    g = grid or GRID
-    # morton_expr is documented for non-negative inputs: coordinates
-    # left/below the grid origin yield negative col/row that the 32-bit
-    # mask would wrap, scrambling Z-order locality (layout quality, not
-    # data loss).  Clamp to morton's [0, 2^32) domain so out-of-grid
-    # rows cluster at the nearest grid edge instead of wrapping — but
-    # only for NON-NULL coordinates: least/greatest skip NULLs, so an
-    # unguarded clamp would fabricate a max-corner code for NULL-coord
-    # rows instead of propagating NULL (they belong in the NULL range
-    # partition, and a persisted morton_col must not invent a key).
-    hi = F.lit((1 << 32) - 1)
-    col = F.greatest(F.lit(0), F.least(g.col_expr(F.col(x)), hi))
-    row = F.greatest(F.lit(0), F.least(g.row_expr(F.col(y)), hi))
-    code = F.when(
-        missing_coord_expr(x, y), F.lit(None)
-    ).otherwise(morton_expr(col, row))
-    out = df.withColumn(morton_col, code)
-    parts = [F.col(morton_col)]
-    ranged = (
-        out.repartitionByRange(num_files, *parts)
-        if num_files
-        else out.repartitionByRange(*parts)
-    )
-    ranged = ranged.sortWithinPartitions(morton_col)
-    if not keep_morton:
-        ranged = ranged.drop(morton_col)
-    ranged.write.mode("overwrite").parquet(path)

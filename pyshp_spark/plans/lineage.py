@@ -23,7 +23,6 @@ distributed engine.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -155,10 +154,3 @@ def run_with_lineage(
             },
         )
     return spark.read.parquet(os.path.join(ckpt.out_dir, "bucket=*"))
-
-
-def write_manifest(checkpoint_dir: str, meta: dict) -> None:
-    tmp = os.path.join(checkpoint_dir, ".manifest.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2)
-    os.replace(tmp, os.path.join(checkpoint_dir, "manifest.json"))

@@ -59,9 +59,9 @@ def streaming_exact_dedup(
     (state-store-backed ``dropDuplicatesWithinWatermark``, so state is
     bounded — a key's entry expires once the watermark passes it).
 
-    The streaming twin of ``operators.dedup.exact_dedup_filter``: at
-    10^12-row ingest the batch dedup becomes this operator on the bus,
-    and only the first copy of a document reaches the lake."""
+    The streaming twin of ``operators.dedup.exact_dedup``: at 10^12-row
+    ingest the batch dedup becomes this operator on the bus, and only
+    the first copy of a document reaches the lake."""
     if not stream.isStreaming:
         raise ValueError("stream must be a streaming DataFrame")
     return (
@@ -69,88 +69,6 @@ def streaming_exact_dedup(
         .withWatermark(ts, watermark)
         .dropDuplicatesWithinWatermark(["norm_text"])
         .drop("norm_text")
-    )
-
-
-def streaming_cell_running_stats(
-    stream: DataFrame,
-    x: str = "x",
-    y: str = "y",
-    grid: Grid = GRID,
-    timeout_ms: int | None = None,
-) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-cell
-    RUNNING totals maintained across micro-batches — row count and the
-    cell's observed point extent (running bbox union, the streaming twin
-    of the batch A1 extent aggregate).  Each update emits the cell's new
-    cumulative row; optional processing-time timeout expires idle cells
-    so state stays bounded.
-
-    This is the custom-state path the built-in windowed aggregate can't
-    express: the state is an accumulator over ALL time (no window), and
-    the per-batch update logic is arbitrary Python over Arrow batches.
-    """
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-    from pyspark.sql.types import (  # noqa: PLC0415
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType([
-        StructField("cell", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("xmin", DoubleType()),
-        StructField("ymin", DoubleType()),
-        StructField("xmax", DoubleType()),
-        StructField("ymax", DoubleType()),
-    ])
-    state_schema = StructType([
-        StructField("n_rows", LongType()),
-        StructField("xmin", DoubleType()),
-        StructField("ymin", DoubleType()),
-        StructField("xmax", DoubleType()),
-        StructField("ymax", DoubleType()),
-    ])
-
-    def update(key, pdfs, state: "GroupState"):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, xmn, ymn, xmx, ymx = (
-            state.get if state.exists else (0, None, None, None, None)
-        )
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            bx0, bx1 = float(pdf[x].min()), float(pdf[x].max())
-            by0, by1 = float(pdf[y].min()), float(pdf[y].max())
-            xmn = bx0 if xmn is None else min(xmn, bx0)
-            ymn = by0 if ymn is None else min(ymn, by0)
-            xmx = bx1 if xmx is None else max(xmx, bx1)
-            ymx = by1 if ymx is None else max(ymx, by1)
-        state.update((n, xmn, ymn, xmx, ymx))
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {"cell": [key[0]], "n_rows": [n], "xmin": [xmn], "ymin": [ymn],
-             "xmax": [xmx], "ymax": [ymx]}
-        )
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    keyed = stream.withColumn("cell", grid.cell_expr(F.col(x), F.col(y)))
-    return keyed.groupBy("cell").applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
     )
 
 
@@ -229,60 +147,4 @@ def streaming_interval_join(
     return interval_join(
         stream, F.broadcast(intervals), ts=ts, start=start, end=end,
         bucket_s=bucket_s,
-    )
-
-
-def streaming_tile_pyramid(
-    stream: DataFrame,
-    tx: str = "tile_x",
-    ty: str = "tile_y",
-    ts: str = "ts",
-    zoom_max: int = 6,
-    zoom_min: int = 0,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Streaming twin of operators/spatial.tile_pyramid: watermarked
-    per-event-time-window tile counts at EVERY zoom level — the live
-    ingest density map of a tile-georeferenced image stream.
-
-    Each event explodes to its (zoom_max - zoom_min + 1) quadtree
-    ancestors BEFORE the windowed aggregation, so one state-store
-    aggregation maintains all zoom levels at once (state rows are
-    bounded by the watermark x distinct-parent-tile count; the ancestor
-    fan-out is a constant ~7 for a 6-level pyramid and map-side
-    partial aggs absorb it before the shuffle).  Late rows beyond the
-    watermark drop consistently across all levels — a parent can never
-    disagree with its children."""
-    if zoom_min > zoom_max:
-        raise ValueError("zoom_min must be <= zoom_max")
-    # user column names resolve via F.col (never interpolated into SQL
-    # text — a hyphenated or reserved-word column must work like it
-    # does in the batch twin); only the internal aliases ride F.expr
-    base = stream.withColumn("__tx0", F.col(tx).cast("long")).withColumn(
-        "__ty0", F.col(ty).cast("long")
-    )
-    levels = [
-        F.struct(
-            F.lit(z).cast("int").alias("zoom"),
-            F.expr(f"__tx0 div {2 ** (zoom_max - z)}").alias("tx"),
-            F.expr(f"__ty0 div {2 ** (zoom_max - z)}").alias("ty"),
-        )
-        for z in range(zoom_max, zoom_min - 1, -1)
-    ]
-    return (
-        base.withColumn("__lvl", F.explode(F.array(*levels)))
-        .withWatermark(ts, watermark)
-        .groupBy(
-            F.window(F.col(ts), window).alias("win"),
-            F.col("__lvl.zoom").alias("zoom"),
-            F.col("__lvl.tx").alias("tx"),
-            F.col("__lvl.ty").alias("ty"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "zoom", "tx", "ty", "n",
-        )
     )

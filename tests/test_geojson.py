@@ -3,16 +3,11 @@
 import io
 import json
 
-import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from pyshp_spark.fixtures.polygons import fixture_shapefile_bytes
-from pyshp_spark.functions.geojson import (
-    geo_interface_from_wkb,
-    rings_from_geojson,
-    with_geojson,
-)
-from pyshp_spark.kernels.rings import is_cw
+from pyshp_spark.functions.geojson import geo_interface_from_wkb, geojson_udf
 from pyshp_spark.sources.shapefile import parse_shp_bytes
 
 N = 60
@@ -66,29 +61,7 @@ class TestGeoInterface:
             ]
         )
         df = spark.createDataFrame(pdf, schema=schema)
-        out = {r.oid: r.geojson for r in with_geojson(df).collect()}
+        gj = geojson_udf()(F.col("wkb"), F.col("shape_type"))
+        out = {r.oid: r.geojson for r in df.withColumn("geojson", gj).collect()}
         for i, shape in enumerate(reader.iterShapes()):
             assert json.loads(out[i]) == _canon(shape.__geo_interface__)
-
-
-class TestFromGeojson:
-    def test_rewind_on_import(self, ref_shapefile):
-        # CCW exterior + CW hole get re-wound (reference sf.py:1493-1557)
-        geoj = {
-            "type": "Polygon",
-            "coordinates": [
-                [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],  # CCW ext
-                [[2, 2], [2, 4], [4, 4], [4, 2], [2, 2]],  # CW hole
-            ],
-        }
-        stype, rings = rings_from_geojson(geoj)
-        assert stype == 5
-        assert is_cw(rings[0]) and not is_cw(rings[1])
-        ref = ref_shapefile.Shape._from_geojson(geoj)
-        bounds = list(ref.parts) + [len(ref.points)]
-        ref_rings = [
-            np.asarray(ref.points[bounds[i] : bounds[i + 1]])
-            for i in range(len(ref.parts))
-        ]
-        for a, b in zip(rings, ref_rings):
-            np.testing.assert_array_equal(np.asarray(a), b)

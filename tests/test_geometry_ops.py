@@ -14,7 +14,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pyshp_spark.operators.geometry import explode_coordinates, project_2d, shape_at
+from pyshp_spark.operators.geometry import explode_coordinates
 from pyshp_spark.sources.shapefile import parse_shp_bytes
 from pyshp_spark.sources.shp_writer import write_shp
 
@@ -86,11 +86,3 @@ class TestExplodeCoordinates:
         df = spark.createDataFrame(pdf, schema=SCHEMA)
         rows = explode_coordinates(df).collect()
         assert all(r.z == 0.0 for r in rows)
-
-    def test_project_2d_and_shape_at(self, spark):
-        shp, _ = write_shp([(1, (3.0, 4.0)), (1, (5.0, 6.0))])
-        pdf = parse_shp_bytes(shp)[["oid", "wkb", "z", "m"]]
-        df = spark.createDataFrame(pdf, schema=SCHEMA)
-        assert "z" not in project_2d(df).columns
-        got = shape_at(df, 1).collect()
-        assert len(got) == 1 and got[0].oid == 1

@@ -9,8 +9,9 @@ the other cases cover exact-duplicate rows, queries in an empty region
 target count, an empty query frame, targets or queries with a NULL
 coordinate, and a query whose first square holds only a neighbor
 beyond the covered radius (the stop rule must widen the search).  The
-last tests pin the index path's laziness, agreement with the round
-loop, and the index cache's key separation.
+last tests pin the index path's laziness, the argument checks on both
+paths, agreement with the round loop, and the index cache's key
+separation.
 """
 
 import numpy as np
@@ -197,6 +198,35 @@ def test_warm_call_starts_no_job_and_persists_nothing(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert out.count() == 30
     assert sc._jsc.sc().getPersistentRDDs().size() <= persisted
+
+
+@pytest.mark.parametrize("path", ["index", "rounds"])
+@pytest.mark.parametrize(
+    "bad, msg",
+    [({"k": 0}, "k >= 1"), ({"k": -1}, "k >= 1"),
+     ({"k": 3, "max_rounds": -1}, "max_rounds >= 0")],
+    ids=["k_zero", "k_negative", "max_rounds_negative"],
+)
+def test_bad_k_or_max_rounds_raise_before_any_job(spark, monkeypatch, path,
+                                                  bad, msg):
+    # a cold cache: without the argument check the index path would
+    # probe and build (and then return rows), the round loop would run
+    # its rounds and raise the wrong error
+    sc = spark.sparkContext
+    q, t = _centre_queries(spark), _targets(spark)
+    sp.clear_polygon_index_cache()
+    if path == "rounds":
+        monkeypatch.setattr(sp, "_resolve_broadcast", lambda *a, **k: False)
+    group = f"knn-bad-args-{path}-{sorted(bad.items())}"
+    sc.setJobGroup(group, "knn_join argument check")
+    try:
+        with pytest.raises(ValueError, match=msg):
+            knn_join(q, t, grid=GRID, target_cols=["tid", "x", "y", "tie"],
+                     tie_break="tie", **bad)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sp._INDEX_CACHE
 
 
 def test_round_loop_matches_index(spark, monkeypatch):

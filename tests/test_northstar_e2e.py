@@ -26,10 +26,12 @@ from pyshp_spark.fixtures.images import images_fixture
 from pyshp_spark.fixtures.polygons import fixture_shapefile_bytes
 from pyshp_spark.functions.cells import GRID
 from pyshp_spark.functions.geojson import geo_interface_from_wkb
-from pyshp_spark.kernels.image import decode_image, psnr
+from pyshp_spark.kernels.image import decode_image
 from pyshp_spark.operators.spatial import point_in_polygon_join
 from pyshp_spark.plans.lineage import LineageCheckpoint, run_with_lineage
 from pyshp_spark.sources.shapefile import parse_shp_bytes
+
+from oracles import psnr
 
 N_POLY = 50
 N_IMG = 250

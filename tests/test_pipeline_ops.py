@@ -10,20 +10,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyshp_spark.fixtures.images import images_fixture
-from pyshp_spark.kernels.image import decode_image, psnr
+from pyshp_spark.kernels.image import decode_image
 from pyshp_spark.operators.dedup import (
     exact_dedup,
     minhash_dedup_pairs,
-    minhash_signature_py,
     minhash_udf,
     shingles,
-    simhash64_py,
     simhash_dedup_pairs,
     token_jaccard_pairs,
 )
 from pyshp_spark.operators.multimodal import (
     phash_dedup_pairs,
-    resize_nearest,
     with_image_stats,
 )
 from pyshp_spark.operators.similarity import (
@@ -37,6 +34,8 @@ from pyshp_spark.operators.text import (
     with_lang_id,
     with_text_quality,
 )
+
+from oracles import minhash_signature_py, psnr, simhash64_py
 
 WORDS = (
     "the quick brown fox jumps over lazy dog and runs through green fields "
@@ -284,14 +283,6 @@ class TestMultimodal:
             want = ref_rng.integers(0, 256, size=(row.h, row.w, 3), dtype=np.uint8)
             assert psnr(rgb, want) == float("inf")  # lossless codec
 
-    def test_resize(self, spark):
-        pdf = images_fixture(n=12, seed=3)
-        df = spark.createDataFrame(pdf)
-        out = resize_nearest(df, 8, 8).collect()
-        for r in out:
-            assert (r.w, r.h, r.fmt) == (8, 8, "raw")
-            assert len(bytes(r.bytes)) == 8 * 8 * 3
-
     def test_phash_pairs_on_duplicates(self, spark):
         pdf = images_fixture(n=30, seed=3)
         dup = pdf.head(2).copy()
@@ -369,28 +360,6 @@ class TestVideoAudio:
         assert abs(a0.rms - 0.5 / np.sqrt(2)) < 1e-3
         assert 0.49 < a0.peak <= 0.5
         assert rows["a1"].rms is None  # stubbed format -> null stats
-
-    def test_audio_chunk(self, spark):
-        from pyshp_spark.operators.multimodal import audio_chunk  # noqa: PLC0415
-
-        sr = 8000
-        buf = self._sine_pcm16(sr, 2.5)  # 2.5 s -> chunks of 1 s: 3 rows
-        pdf = pd.DataFrame(
-            {
-                "audio_id": ["a0"], "bytes": [buf],
-                "sr": np.array([sr], dtype=np.int32),
-                "channels": np.array([1], dtype=np.int32), "fmt": ["pcm16"],
-            }
-        )
-        out = sorted(
-            audio_chunk(spark.createDataFrame(pdf), chunk_s=1.0).collect(),
-            key=lambda r: r.chunk_idx,
-        )
-        assert [r.chunk_idx for r in out] == [0, 1, 2]
-        assert len(bytes(out[0].bytes)) == sr * 2  # 1 s of int16 mono
-        assert len(bytes(out[2].bytes)) == sr  # final partial 0.5 s
-        assert b"".join(bytes(r.bytes) for r in out) == buf
-
 
 class TestIvfAnn:
     def test_ivf_recall_and_exactness_within_probed_lists(self, spark):

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyshp_spark.functions.cells import GRID, Grid
-from pyshp_spark.operators.dedup import simhash64_py, simhash_dedup_pairs
+from pyshp_spark.operators.dedup import simhash_dedup_pairs
 from pyshp_spark.operators.spatial import (
     bbox_overlap_join,
     knn_brute,
@@ -30,6 +30,8 @@ from pyshp_spark.sources.shapefile import (
     parse_shp_bytes,
 )
 from pyshp_spark.sources.shp_writer import _encode_dbf_value, write_dbf, write_shp
+
+from oracles import simhash64_py
 
 
 # ------------------------------------------------------- MULTIPATCH ----

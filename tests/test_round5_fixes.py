@@ -949,179 +949,6 @@ class TestZonalStats:
         )
 
 
-class TestStreamingTilePyramid:
-    def test_all_levels_consistent(self, spark, tmp_path):
-        """Streamed per-window pyramid counts must equal the batch
-        tile_pyramid over the same closed-window rows, at every zoom."""
-        import numpy as np  # noqa: PLC0415
-        from pyspark.sql.types import (  # noqa: PLC0415
-            IntegerType,
-            StructField,
-            StructType,
-            TimestampType,
-        )
-
-        from pyshp_spark.operators.spatial import tile_pyramid  # noqa: PLC0415
-        from pyshp_spark.streaming.pip_stream import (  # noqa: PLC0415
-            streaming_tile_pyramid,
-        )
-
-        rng = np.random.default_rng(17)
-        pdf = pd.DataFrame(
-            {
-                "tile_x": rng.integers(0, 64, 500).astype("int32"),
-                "tile_y": rng.integers(0, 64, 500).astype("int32"),
-                "ts": pd.Timestamp("2026-01-01 00:00:30"),
-            }
-        )
-        src = tmp_path / "in"
-        src.mkdir()
-        pdf.to_parquet(src / "p.parquet")
-        schema = StructType(
-            [
-                StructField("tile_x", IntegerType()),
-                StructField("tile_y", IntegerType()),
-                StructField("ts", TimestampType()),
-            ]
-        )
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        pyr = streaming_tile_pyramid(stream, zoom_max=6, zoom_min=0)
-        q = (
-            pyr.writeStream.format("memory")
-            .queryName("tilepyr")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            late = pdf.copy()
-            late["ts"] = pd.Timestamp("2026-01-01 00:10:00")
-            late.to_parquet(src / "p2.parquet")
-            q.processAllAvailable()
-            got = (
-                spark.sql(
-                    "SELECT zoom, tx, ty, n FROM tilepyr "
-                    "WHERE win_start = '2026-01-01 00:00:00'"
-                )
-                .toPandas()
-                .sort_values(["zoom", "tx", "ty"])
-                .reset_index(drop=True)
-            )
-        finally:
-            q.stop()
-        want = (
-            tile_pyramid(
-                spark.createDataFrame(pdf[["tile_x", "tile_y"]]),
-                zoom_max=6,
-                zoom_min=0,
-            )
-            .toPandas()
-            .sort_values(["zoom", "tx", "ty"])
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(
-            got.astype({"n": "int64"}), want.astype({"n": "int64"})
-        )
-
-
-class TestZorderLayout:
-    def test_files_cover_disjoint_tight_ranges(self, spark, tmp_path):
-        """Z-order written files must hold disjoint morton ranges, and
-        a small-bbox read must prune most files via min/max stats."""
-        import glob  # noqa: PLC0415
-
-        import numpy as np  # noqa: PLC0415
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        from pyshp_spark.functions.cells import Grid  # noqa: PLC0415
-        from pyshp_spark.plans.layout import save_zorder_layout  # noqa: PLC0415
-
-        rng = np.random.default_rng(23)
-        pdf = pd.DataFrame(
-            {
-                "pid": range(20_000),
-                "x": rng.uniform(0, 1000, 20_000),
-                "y": rng.uniform(0, 1000, 20_000),
-            }
-        )
-        grid = Grid(x0=0.0, y0=0.0, dx=7.8125, dy=7.8125, width=1 << 20)
-        path = str(tmp_path / "zord")
-        save_zorder_layout(
-            spark.createDataFrame(pdf), path, grid=grid, num_files=16,
-            keep_morton=True,
-        )
-        files = sorted(glob.glob(f"{path}/part-*.parquet"))
-        assert len(files) >= 8
-        ranges = []
-        for f in files:
-            md = pq.read_metadata(f)
-            lo = min(
-                md.row_group(i).column(
-                    md.schema.names.index("__z")
-                ).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(
-                    md.schema.names.index("__z")
-                ).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            ranges.append((lo, hi))
-        ranges.sort()
-        for (l1, h1), (l2, h2) in zip(ranges, ranges[1:]):
-            assert h1 <= l2, "file Z ranges must be disjoint"
-        # spatial locality: files' x-ranges are tight, so a small bbox
-        # overlaps only a minority of files on x stats alone
-        hit = 0
-        for f in files:
-            md = pq.read_metadata(f)
-            xi = md.schema.names.index("x")
-            xlo = min(
-                md.row_group(i).column(xi).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            xhi = max(
-                md.row_group(i).column(xi).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            if xlo <= 130.0 and xhi >= 100.0:
-                hit += 1
-        assert hit <= len(files) // 2, (hit, len(files))
-        # no rows lost
-        assert spark.read.parquet(path).count() == 20_000
-
-
-class TestMortonExprParity:
-    def test_column_expr_matches_numpy(self, spark):
-        """morton_expr (Column bitwise ops) must equal morton_np — the
-        Column version previously used Python `|`/`&` which are LOGICAL
-        operators on Columns and failed analysis on integers, so it had
-        never produced a value."""
-        import numpy as np  # noqa: PLC0415
-
-        from pyshp_spark.functions.cells import (  # noqa: PLC0415
-            morton_expr,
-            morton_np,
-        )
-
-        rng = np.random.default_rng(31)
-        pdf = pd.DataFrame(
-            {
-                "c": rng.integers(0, 1 << 20, 2000),
-                "r": rng.integers(0, 1 << 20, 2000),
-            }
-        )
-        got = (
-            spark.createDataFrame(pdf)
-            .select(morton_expr(F.col("c"), F.col("r")).alias("z"))
-            .toPandas()
-            .z.to_numpy()
-        )
-        want = morton_np(pdf.c.to_numpy(), pdf.r.to_numpy())
-        assert (got == want).all()
-
-
 class TestReviewRegressions2:
     def test_prefilter_null_keys_parity(self, spark):
         """NULL keys hash to NULL under knuth; they sort FIRST in the

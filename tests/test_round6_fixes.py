@@ -11,11 +11,9 @@
 4. point_out_cols trims refine output width (zonal_stats coords never
    return through Arrow).
 5. with_ring_sample keeps NULL-wkb rows (NULL sample coords).
-6. save_zorder_layout clamps negative grid col/row before Morton
-   encoding (no 32-bit wrap scrambling locality).
-7. Streaming near-dup compaction recovers orphaned staging dirs at
+6. Streaming near-dup compaction recovers orphaned staging dirs at
    EVERY batch start, whatever the cadence.
-8. assign_holes_distributed == reference organize_polygon_rings on the
+7. assign_holes_distributed == reference organize_polygon_rings on the
    golden pathology cases AND the real multipart blockgroups corpus.
 """
 
@@ -241,24 +239,6 @@ def test_with_ring_sample_keeps_null_wkb_rows(spark):
     assert len(out) == 2
     assert by_pid[2] == (None, None)
     assert by_pid[1][0] is not None
-
-
-def test_zorder_clamps_negative_cols(spark, tmp_path):
-    from pyshp_spark.plans.layout import save_zorder_layout
-
-    rows = [Row(x=float(x), y=float(y), v=1)
-            for x, y in [(-50.0, -50.0), (1.0, 1.0), (9.0, 9.0), (-3.0, 4.0)]]
-    df = spark.createDataFrame(rows)
-    path = str(tmp_path / "zorder")
-    save_zorder_layout(
-        df, path, grid=GRID4, num_files=2, keep_morton=True
-    )
-    back = spark.read.parquet(path)
-    zs = [r["__z"] for r in back.select("__z").collect()]
-    # negative coords clamp to the grid edge (z = 0), never wrap to
-    # huge codes that would scramble the file-range clustering
-    assert min(zs) == 0 and all(z >= 0 for z in zs)
-    assert back.count() == 4
 
 
 class TestCompactionRecovery:

@@ -4,12 +4,10 @@
    zero-ring WKB (POLYGON EMPTY) — NULL outputs, like NULL wkb.
 2. assign_holes_distributed surfaces zero-ring rows as orphans
    (row accounting holds for every input row).
-3. save_zorder_layout keeps NULL morton codes for NULL-coordinate
-   rows (least/greatest skip NULLs — no fabricated max-corner key).
-4. Streaming near-dup keeper resolution survives a state store with
+3. Streaming near-dup keeper resolution survives a state store with
    MIXED schemas (keeper-less legacy partitions + keeper-full ones):
    mergeSchema + coalesce(keeper, id) — no dangling keeper pointers.
-5. check_oracle's rotation slice does not persist its cursor at pick
+4. check_oracle's rotation slice does not persist its cursor at pick
    time (a crashed rotation re-runs its slice).
 """
 
@@ -88,23 +86,6 @@ class TestZeroRingWkb:
         assert got[0] == ("exterior", 0)
         assert got[1] == ("hole", 0)
         assert got[2] == ("orphan", None)
-
-
-def test_zorder_null_coords_keep_null_morton(spark, tmp_path):
-    from pyshp_spark.plans.layout import save_zorder_layout
-
-    rows = [Row(rid=1, x=1.0, y=1.0), Row(rid=2, x=None, y=5.0),
-            Row(rid=3, x=9.0, y=None), Row(rid=4, x=-50.0, y=-50.0),
-            # NaN is the ingest encoding for missing geometry and
-            # bypasses isNull(): it must not fabricate a grid-origin key
-            Row(rid=5, x=float("nan"), y=2.0)]
-    path = str(tmp_path / "zorder_null")
-    save_zorder_layout(spark.createDataFrame(rows), path,
-                       num_files=2, keep_morton=True)
-    back = {r["rid"]: r["__z"] for r in spark.read.parquet(path).collect()}
-    assert back[2] is None and back[3] is None and back[5] is None
-    # non-NULL rows still get real (clamped, non-fabricated) codes
-    assert back[1] is not None and back[4] is not None
 
 
 class TestMixedSchemaKeeperResolution:
@@ -295,7 +276,7 @@ class TestPinnedTextsSchema:
 
 
 def test_with_cell_nan_coords_yield_null_cell(spark):
-    from pyshp_spark.functions.cells import GRID, with_point_cell
+    from pyshp_spark.functions.cells import GRID
     from pyshp_spark.plans.layout import with_cell
 
     rows = [Row(rid=1, x=1.0, y=1.0), Row(rid=2, x=float("nan"), y=2.0),
@@ -303,10 +284,6 @@ def test_with_cell_nan_coords_yield_null_cell(spark):
     df = spark.createDataFrame(rows)
     out = {r["rid"]: r["cell"] for r in with_cell(df, GRID).collect()}
     assert out[2] is None and out[3] is None and out[1] is not None
-    # the public cells-module twin must agree on missing coordinates
-    out2 = {r["rid"]: r["cell"]
-            for r in with_point_cell(df, "x", "y").collect()}
-    assert out2[2] is None and out2[3] is None and out2[1] is not None
 
 
 class TestRingSampleEdges:

@@ -182,7 +182,7 @@ class TestTileAssignment:
     def test_center_mode_matches_pointwise_oracle(
         self, spark, pts_df, poly_df, ref_shapefile, img_pdf
     ):
-        from pyshp_spark.fixtures.images import tilefrac_to_lonlat  # noqa: PLC0415
+        from oracles import tilefrac_to_lonlat  # noqa: PLC0415
         import io  # noqa: PLC0415
 
         tiles = pts_df.select("tile_x", "tile_y", "zoom").dropDuplicates()
@@ -227,6 +227,12 @@ class TestTileAssignment:
         c = {(r.tile_x, r.tile_y, r.oid) for r in center.collect()}
         b = {(r.tile_x, r.tile_y, r.oid) for r in bbox.collect()}
         assert c <= b
+
+    def test_bbox_mode_rejects_pip_keywords(self, pts_df, poly_df):
+        tiles = pts_df.select("tile_x", "tile_y", "zoom")
+        with pytest.raises(TypeError, match="broadcast_polygons, salt_k"):
+            tile_assignment(tiles, poly_df, mode="bbox", polygon_cols=["oid"],
+                            salt_k=4, broadcast_polygons=False)
 
 
 class TestKnn:

@@ -178,57 +178,6 @@ class TestStreamingDedup:
         assert ids["alpha"] == 1  # FIRST arrival survives
 
 
-class TestStreamingRunningStats:
-    def test_state_accumulates_across_micro_batches(self, spark, tmp_path):
-        import pandas as pd
-
-        from pyshp_spark.functions.cells import Grid
-        from pyshp_spark.streaming.pip_stream import streaming_cell_running_stats
-
-        src = tmp_path / "stats_in"
-        src.mkdir()
-        grid = Grid(x0=0.0, y0=0.0, dx=10.0, dy=10.0, width=1 << 10)
-        # two files = two micro-batches (maxFilesPerTrigger=1); cell(5,5)
-        # appears in both so its state must ACCUMULATE
-        pd.DataFrame({"x": [5.0, 6.0, 15.0], "y": [5.0, 7.0, 5.0]}).to_parquet(
-            src / "b1.parquet"
-        )
-        pd.DataFrame({"x": [7.0, 25.0], "y": [3.0, 25.0]}).to_parquet(
-            src / "b2.parquet"
-        )
-        stream = (
-            spark.readStream.schema("x double, y double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        out = streaming_cell_running_stats(stream, grid=grid)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("running_stats")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(
-            "SELECT * FROM running_stats"
-        ).collect()
-        # last emission per cell = cumulative totals
-        latest = {}
-        for r in rows:
-            latest[r.cell] = max(latest.get(r.cell, 0), r.n_rows)
-        cell00 = grid.cell_np([5.0], [5.0])[0]
-        cell10 = grid.cell_np([15.0], [5.0])[0]
-        cell22 = grid.cell_np([25.0], [25.0])[0]
-        assert latest[cell00] == 3  # 2 from batch 1 + 1 from batch 2
-        assert latest[cell10] == 1
-        assert latest[cell22] == 1
-        # running extent of the hot cell covers points from BOTH batches
-        hot = [r for r in rows if r.cell == cell00 and r.n_rows == 3][0]
-        assert (hot.xmin, hot.xmax) == (5.0, 7.0)
-        assert (hot.ymin, hot.ymax) == (3.0, 7.0)
-
-
 class TestStreamingNearDup:
     def test_neardup_filter_across_micro_batches(self, spark, tmp_path):
         """First arrival of each near-dup CLUSTER wins, across batches:
