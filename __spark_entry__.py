@@ -327,9 +327,10 @@ FROM lineitem
 
 
 def q_pip_skew(spark, sf_dir):
-    # pins the SALTED SORT-MERGE join path in the driver gate (every
-    # other spatial entry auto-picks the broadcast index): hot cell
-    # pre-split 8 ways + AQE as backstop, exact ray-cast refine.
+    # pins the SALTED PARTITIONED PIP path in the oracle gate (every
+    # other spatial entry auto-picks the broadcast index): one cogroup
+    # by (cell, salt) bucket, the hot cell spread over 8 buckets, the
+    # index path's exact ray-cast kernel per bucket.
     pts = _pts_skewed(spark, sf_dir)
     dia = _diamond_wkb(_diamonds(spark, sf_dir))
     out = point_in_polygon_join(

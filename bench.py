@@ -63,8 +63,8 @@ def workload_map():
         # q11 = LSH-blocked embedding near-dup (the scalable variant)
         "q10_minhash_pairs": em.q_minhash_pairs,
         "q11_embedding_dedup": em.q_embedding_dedup,
-        # q12 = the salted sort-merge PIP path under adversarial skew
-        # (~25% of probe rows in ONE grid cell, salt_k=8 + AQE backstop)
+        # q12 = the salted partitioned PIP path under adversarial skew
+        # (~25% of probe rows in ONE grid cell, spread by salt_k=8)
         "q12_pip_skew": em.q_pip_skew,
         # round-4 temporal family over the events table
         "q13_sessionize": em.q_sessionize,

@@ -1,8 +1,8 @@
 """Operator-internal cache generations.
 
-Several operators persist small shared subtrees (the shuffle-path PIP
-join's keyed frame, assign_holes_distributed's three subtrees,
-knn_join's result, stratified_sample_n's prefilter frames).  Those
+Several operators persist small shared subtrees
+(assign_holes_distributed's three subtrees, knn_join's round-loop
+result, stratified_sample_n's prefilter frames).  Those
 caches used to live until session GC, so an ETL loop calling an
 operator N times accumulated N cached frames.  Each operator now
 registers its persisted frames as ONE generation: the next call
@@ -20,10 +20,10 @@ _OP_CACHES: dict[str, list] = {}
 
 def release_operator_caches(op: str | None = None) -> None:
     """Unpersist the cached frames backing the most recent result of
-    ``op`` (``"pip_shuffle"``, ``"assign_holes"``, ``"knn_join"``,
-    ``"stratified_sample"``), or of every operator when None.  Safe to
-    call at any time — released results recompute through plain
-    lineage."""
+    ``op`` (``"assign_holes"``, ``"knn_join"``, ``"stratified_sample"``),
+    or of every operator when None; an op holding nothing, such as the
+    PIP join's retired ``"pip_shuffle"``, is a no-op.  Safe to call at
+    any time — released results recompute through plain lineage."""
     ops = [op] if op is not None else list(_OP_CACHES)
     for o in ops:
         for f in _OP_CACHES.pop(o, []):
@@ -50,8 +50,8 @@ def register_op_caches(op: str, frames) -> None:
     dedups persist() calls by canonicalized plan, so the new frame
     shares the old frame's cache entry — unpersisting it would evict
     the new frame's own data and force the shared subtree to recompute
-    once per downstream branch (a repeated identical call, e.g. a
-    benchmark loop, would get slower instead of reusing the cache)."""
+    once per downstream branch (a repeated identical call would get
+    slower instead of reusing the cache)."""
     new_frames = [f for f in frames if f is not None]
     new_keys = {h for f in new_frames if (h := _sem_hash(f)) is not None}
     for f in _OP_CACHES.pop(op, []):

@@ -1,14 +1,14 @@
 """Skew diagnosis + salting planner.
 
 Dense multipart polygons (blockgroups-style) concentrate many points in
-few cells; on the sort-merge join path those cells become straggler
-reducers.  The planner measures the cell histogram with a cheap
-pre-pass aggregation (map-side partial combine — one small shuffle) and
-picks a salt factor from the hot-cell/median ratio; the PIP join then
-splits hot cells into ``salt_k`` replicas (see
-operators/spatial.point_in_polygon_join(salt_k=...)).  AQE skew-join
-splitting (spark.sql.adaptive.skewJoin.enabled) remains the runtime
-backstop for skew the pre-pass missed.
+few cells; on the partitioned PIP path each of those cells is one
+cogroup bucket, a straggler Python call.  The planner measures the
+cell histogram with a cheap pre-pass aggregation (map-side partial
+combine — one small shuffle) and picks a salt factor from the
+hot-cell/median ratio; the PIP join then
+splits hot cells into ``salt_k`` buckets (see
+operators/spatial.point_in_polygon_join(salt_k=...)).  A cogroup gets
+no AQE skew split, so the salt is the only remedy for a hot cell.
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ def skew_stats(points: DataFrame, x: str = "x", y: str = "y",
 def plan_salt_k(points: DataFrame, x: str = "x", y: str = "y",
                 grid: Grid = GRID, target_ratio: float = 4.0,
                 max_k: int = 16) -> int | None:
-    """Salt factor for the sort-merge PIP join: None when the hottest
+    """Salt factor for the partitioned PIP join: None when the hottest
     cell is within ``target_ratio`` of the mean (no salting needed),
     else the power-of-two k that brings the hot cell under the target,
     capped at ``max_k`` (each polygon cover row is replicated k times —

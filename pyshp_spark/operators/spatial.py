@@ -5,20 +5,21 @@ scalar ray-cast (reference src/shapefile.py:856-914); joins over it
 would be O(N*M) single-threaded loops.  Here the same kernels become a
 three-stage distributed plan:
 
-  1. FILTER  — int64 grid cells (polygon side carries an exploded
-     bbox cell cover, point side one cell).  When the polygon side
-     fits the broadcast guard, a broadcast CSR cell index answers the
-     lookup inside the refine pass and the points never shuffle;
-     otherwise a sort-merge equi-join on the cell with AQE skew
-     splitting, and optional salting (``salt_k``) spreads hot cells.
-  2. PREFILTER — bbox overlap as a pure Column expression
-     (codegen'd; reference semantics sf.py:856-861, inclusive <=).
-  3. REFINE — vectorized even-odd ray-cast over Arrow batches
-     (``mapInArrow``), parsing each distinct polygon WKB once per
-     batch.  Bit-for-bit the reference's crossing test.
+  1. FILTER  — int64 grid cells (polygon side carries a bbox cell
+     cover, point side one cell), looked up in a CSR cell -> polygon
+     index.  When the polygon side fits the broadcast guard the index
+     is one broadcast and the points never shuffle; otherwise points
+     and parsed polygons are cogrouped by a bucket of their (cell,
+     salt) key and each bucket builds its own index, with optional
+     salting (``salt_k``) spreading hot cells over buckets.
+  2. PREFILTER — bbox overlap in numpy (reference semantics
+     sf.py:856-861, inclusive <=).
+  3. REFINE — vectorized even-odd ray-cast over the flat edge arrays
+     parsed once per polygon.  Bit-for-bit the reference's crossing
+     test.
 
 Because a point maps to exactly one cell, a (point, polygon) pair
-appears at most once after the cell join — no dedup pass is needed.
+appears at most once after the cell lookup — no dedup pass is needed.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from pyshp_spark.functions.bbox import point_in_bbox_expr
 from pyshp_spark.functions.cells import GRID, Grid, missing_coord_expr
 from pyshp_spark.kernels.rings import pip_pairs, pip_pairs_flat, rings_to_edges
 from pyshp_spark.kernels.wkb import wkb_rings
@@ -47,11 +47,18 @@ _P = "__ps_"  # internal column prefix
 #: adding a reserved column can never silently change an aggregation
 #: grain
 POLYGON_META_COLS = ("wkb", "xmin", "ymin", "xmax", "ymax")
+_BBOX_COLS = POLYGON_META_COLS[1:]
 
 #: broadcast guard for ``broadcast_polygons="auto"``: a polygon side
-#: past either bound takes the sort-merge path (read at call time)
+#: past either bound takes the partitioned path (read at call time)
 _MAX_BROADCAST_ROWS = 4_000_000
 _MAX_BROADCAST_BYTES = 1_500_000_000
+
+#: cogroup buckets per shuffle partition on the partitioned PIP path;
+#: each bucket is one Python call and one more copy of the edges of
+#: every polygon it touches (on the salted hot-spot benchmark, 4 cores,
+#: 1 beat 2, 4 and 8 on Python time at a slightly higher task skew)
+_BUCKETS_PER_PARTITION = 1
 
 
 def _polygon_attr_cols(
@@ -96,18 +103,6 @@ def _explode_bbox_cover(
     )
 
 
-def _polygons_with_cells(
-    polygons: DataFrame, grid: Grid, salt_k: int | None
-) -> DataFrame:
-    """Explode each polygon row into one row per cover cell (and salt)."""
-    out = _explode_bbox_cover(polygons, grid)
-    if salt_k:
-        out = out.withColumn(
-            _P + "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_k - 1)))
-        )
-    return out
-
-
 def _points_with_cell(
     points: DataFrame, x: str, y: str, grid: Grid, salt_k: int | None
 ) -> DataFrame:
@@ -116,8 +111,8 @@ def _points_with_cell(
         # salt over the WHOLE point row, not just (x, y): the archetypal
         # hot spot is many rows at ONE exact coordinate, and a
         # coordinate-derived salt maps them all to a single (cell, salt)
-        # partition — the salted join then still serializes the hot cell
-        # in one task (guide §2.5).  Hashing the point columns spreads
+        # bucket — the cogroup then still serializes the hot cell in
+        # one Python call (guide §2.5).  Hashing the point columns spreads
         # identical-coordinate rows across all k salts; the salt only
         # routes rows, so results are unchanged, and it stays
         # DETERMINISTIC under task retry (no rand()).  Only columns
@@ -175,9 +170,8 @@ def _refine_pip(
     def refine(batches):
         # mapInArrow, not mapInPandas: a pandas conversion materializes
         # one Python bytes object PER CANDIDATE ROW for the wkb column
-        # (pair-scale, the dominant boundary cost of the shuffle-path
-        # plan); Arrow keeps the binary column as one contiguous buffer,
-        # dictionary_encode dedups it at C speed, and only the DISTINCT
+        # (pair-scale); Arrow keeps the binary column as one contiguous
+        # buffer, dictionary_encode dedups it at C speed, and only the DISTINCT
         # wkbs per batch ever become Python objects
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.compute as pc  # noqa: PLC0415
@@ -214,7 +208,7 @@ def _refine_pip(
 def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
     """"auto" probes the build side with a LIMIT-bounded count (scans at
     most _MAX_BROADCAST_ROWS+1 rows, so cheap even on a huge table) and
-    falls back to the shuffle path when it is too big to broadcast.
+    falls back to the partitioned path when it is too big to broadcast.
 
     The guard is byte-aware, not just row-count-aware: a few million
     rows of small diamonds broadcast fine, but the same row count of
@@ -224,7 +218,7 @@ def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
     large rows sitting past the probed prefix, and this scan is cheap
     next to the broadcast collect that would follow anyway."""
     if broadcast_polygons != "auto":
-        return bool(broadcast_polygons)
+        return broadcast_polygons
     n = polygons.limit(_MAX_BROADCAST_ROWS + 1).count()
     if n > _MAX_BROADCAST_ROWS:
         return False
@@ -260,26 +254,22 @@ def point_in_polygon_join(
     semantics = even-odd ray-cast over all rings, matching the
     reference's organized exterior-minus-holes membership.
 
-    Two execution paths.  When the polygon side fits the broadcast
-    guard, a :class:`BroadcastPolygonIndex` — geometries parsed ONCE on
-    the executors into flat edge arrays plus a CSR cell index, shipped
-    as a broadcast variable — answers every point in one Arrow pass;
-    the probe side never shuffles.  Otherwise a sort-merge cell
-    equi-join with AQE skew splitting feeds a ray-cast refine; there
-    ``salt_k`` pre-splits hot cells (the index path ignores it: it has
-    no shuffle to split).  ``broadcast_polygons="auto"`` (default)
-    reuses a cached index for the same polygon plan, else probes the
-    build-side size; pass True/False to force a path.
-    ``point_out_cols`` (subset of the point columns) restricts which
-    point columns reach the OUTPUT — coords consumed only by the refine
-    never travel back through Arrow.
-
-    Sort-merge-path type contract: the deterministic polygon id hashes
-    and window-partitions over (wkb, *polygon_cols), so on that path
-    every ``polygon_cols`` column must be a type Spark can hash and
-    partition by (MapType, for one, is not) — an AnalysisException
-    surfaces at plan time otherwise.  Project such columns away and
-    re-attach them after the join, or use the broadcast path.
+    Two execution paths, one kernel.  When the polygon side fits the
+    broadcast guard, a :class:`BroadcastPolygonIndex` — geometries
+    parsed ONCE on the executors into flat edge arrays plus a CSR cell
+    index, shipped as a broadcast variable — answers every point in one
+    Arrow pass; the probe side never shuffles.  Otherwise points and
+    parsed polygons are cogrouped by a bucket of their (cell, salt) key
+    and each bucket runs the same kernel over its own index.  A bucket
+    loads whole and gets no AQE skew split, so there ``salt_k`` is the
+    hot-cell remedy: without it a hot cell is one bucket (the index
+    path ignores it).  ``broadcast_polygons="auto"`` (default) reuses a
+    cached index for the same polygon plan, else probes the build-side
+    size; pass True/False to force a path.  ``point_out_cols`` (subset
+    of the point columns) restricts which point columns reach the
+    OUTPUT — coords consumed only by the refine never travel back
+    through Arrow.  Any other ``broadcast_polygons``, or a ``salt_k``
+    not None or an int >= 1, raises ``ValueError`` before any job.
     """
     return _pip(
         points, polygons, "inner", x, y, grid, broadcast_polygons, salt_k,
@@ -303,13 +293,21 @@ def _pip(
     """The one dispatch of the PIP join family; ``mode`` is "inner",
     "semi" or "anti".  Semi and anti carry no polygon attributes.
 
-    One decision: the broadcast index, or the keyed sort-merge join.
-    The index answers all three modes in its single refine pass.  The
-    sort-merge path yields matched (point, polygon) pairs; semi/anti
-    then left_semi/left_anti join the points against the distinct
-    matched point-values with null-safe equality (a row carrying a
-    NULL in a non-coordinate column must still match its own matched
-    tuple), which also preserves left multiplicity."""
+    One decision: the broadcast index, or its partition-local copy;
+    both run one kernel (:func:`_probe_index`), and semi/anti keep each
+    point row by its match count (input multiplicity kept).  The copy
+    keys each point by ``cell * K + salt`` (K = salt_k or 1) and
+    cogroups it by ``pmod(key, B)`` (B = shuffle partitions x
+    ``_BUCKETS_PER_PARTITION``) with one parsed polygon row per bucket
+    its keys touch: edges cross the exchange once per bucket, never per
+    candidate pair, and the WKB never.  Each polygon row is its own
+    index entry (duplicates keep their multiplicity); a NULL cell lands
+    in the NULL bucket, which has no polygons, so only anti emits it."""
+    if not (isinstance(broadcast_polygons, bool) or broadcast_polygons == "auto"):
+        raise ValueError("broadcast_polygons must be True, False or 'auto', "
+                         f"got {broadcast_polygons!r}")
+    if salt_k is not None and not (isinstance(salt_k, int) and salt_k >= 1):
+        raise ValueError(f"salt_k must be None or an int >= 1, got {salt_k!r}")
     pcols = point_cols or list(points.columns)
     ocols = pcols if point_out_cols is None else point_out_cols
     bad = set(ocols) - set(pcols)
@@ -329,52 +327,51 @@ def _pip(
             point_out_cols=ocols,
         )
 
-    # sort-merge path: the exploded build side replicates each polygon
-    # row x cover-cells x salt_k through the exchange — so ship only
-    # (pid, bbox, attrs), never the WKB.  The geometry re-attaches to
-    # the (much smaller) bbox-prefiltered candidate set with a plain
-    # equi-join on the pid: unique key, so no skew, and AQE broadcasts
-    # the dimension side when it fits.  The pid is a DETERMINISTIC
-    # function of row content — (xxhash64, murmur3) over (wkb, attrs,
-    # duplicate-rank), 96 collision bits — so an executor lost mid-query
-    # recomputes identical ids through plain lineage: no localCheckpoint
-    # (whose blocks are unrecoverable on a real cluster) and no eager
-    # job at plan-construction time.  The duplicate-rank window keeps
-    # fully-identical polygon rows distinct (join multiplicity); its
-    # sort is over identical rows, so any tie order yields the same
-    # result.  persist() shares the one window shuffle between the two
-    # uses while staying lineage-recoverable.
-    build_src = polygons.select(*POLYGON_META_COLS, *gcols)
-    dup_w = Window.partitionBy("wkb", *gcols).orderBy(F.lit(1))
-    keyed = (
-        build_src.withColumn(_P + "dup", F.row_number().over(dup_w))
-        .withColumn(_P + "pid", F.xxhash64("wkb", *gcols, _P + "dup"))
-        .withColumn(_P + "pid2", F.hash("wkb", *gcols, _P + "dup"))
-        .drop(_P + "dup")
-        .persist()
+    k = salt_k or 1
+    nb = _BUCKETS_PER_PARTITION * int(
+        points.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    _register_op_caches("pip_shuffle", [keyed])
-    pid_keys = [_P + "pid", _P + "pid2"]
-    probe = _points_with_cell(points.select(*pcols), x, y, grid, salt_k)
-    join_keys = [_P + "cell"] + ([_P + "salt"] if salt_k else [])
-    build = _polygons_with_cells(keyed.drop("wkb"), grid, salt_k)
-    cand = probe.join(build, on=join_keys, how="inner").where(
-        point_in_bbox_expr(
-            F.col(x), F.col(y),
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        )
-    ).select(*pcols, *gcols, *pid_keys)
-    cand = cand.join(
-        keyed.select(*pid_keys, "wkb"), on=pid_keys, how="inner"
-    ).select(*pcols, *gcols, "wkb")
-    if mode == "inner":
-        return _refine_pip(cand, x, y, drop_cols=set(pcols) - set(ocols))
-    matched = _refine_pip(cand, x, y).dropDuplicates(pcols)
-    out = points.join(
-        matched, on=_null_safe_cond(points, matched, pcols),
-        how="left_" + mode,
+    key_col, bucket_col = _P + "key", _P + "bucket"
+    cell = F.col(_P + "cell")
+    probe = (
+        _points_with_cell(points.select(*pcols), x, y, grid, salt_k)
+        .withColumn(key_col, cell * k + F.col(_P + "salt") if salt_k else cell)
+        .withColumn(bucket_col, F.pmod(key_col, F.lit(nb)))
+        .select(*pcols, key_col, bucket_col)
     )
-    return out if point_out_cols is None else out.select(*ocols)
+    build = _parse_polygons_distributed(
+        polygons.select(*POLYGON_META_COLS, *gcols), grid, (k, nb)
+    )
+    schema = StructType(
+        [probe.schema[c] for c in ocols] + [build.schema[g] for g in gcols]
+    )
+
+    def pip_bucket(pts, pols):
+        import pyarrow as pa  # noqa: PLC0415
+
+        point_idx = pair_pids = _EMPTY_I64
+        if pts.num_rows and pols.num_rows:
+            state = _index_state(
+                pols.column(_P + "edges").to_pylist(),
+                pols.column(_P + "keys").to_pylist(),
+                np.column_stack([pols.column(c).to_numpy() for c in _BBOX_COLS]),
+            )
+            point_idx, pair_pids = _probe_index(
+                state, *(pts.column(c).to_numpy() for c in (key_col, x, y))
+            )
+        base = pts.select(ocols)
+        if mode == "inner":
+            return pa.Table.from_arrays(
+                base.take(point_idx).columns
+                + pols.select(gcols).take(pair_pids).columns,
+                names=schema.names,
+            )
+        hit = np.bincount(point_idx, minlength=pts.num_rows) > 0
+        return base.filter(pa.array(hit if mode == "semi" else ~hit))
+
+    return probe.groupBy(bucket_col).cogroup(
+        build.groupBy(bucket_col)
+    ).applyInArrow(pip_bucket, schema=schema)
 
 
 _INDEX_CACHE: dict = {}
@@ -466,46 +463,40 @@ def _cache_put(key, idx) -> None:
 
 
 def _parse_polygons_distributed(
-    polygons: DataFrame, grid: Grid
-) -> pd.DataFrame:
-    """Executor-side WKB -> flat-buffer parse for the broadcast index
-    build: each polygon row comes back as (bbox, attrs, edge-bytes,
-    cover-bytes) so the driver never runs per-row Python over geometry.
-
-    Edge bytes are C-order float64 (E, 4) rows; cover bytes int64 cell
+    polygons: DataFrame, grid: Grid, buckets: tuple[int, int] | None = None,
+) -> DataFrame:
+    """Executor-side WKB -> flat-buffer parse, lazy: each polygon row
+    comes back as (bbox, attrs, edge-bytes, cover-bytes).  Edge bytes are C-order float64 (E, 4) rows; cover bytes int64 cell
     ids.  Duplicate WKB values are factorized per Arrow batch and parsed
     once.  Null WKB / NaN bbox rows (NULL shapes from ingest) yield
-    empty buffers — they can contain no point."""
-    from pyspark.sql.types import BinaryType, StructField, StructType  # noqa: PLC0415
+    empty buffers — they can contain no point.  With ``buckets=(k,
+    nb)`` each row instead splits into one row per bucket of its keys
+    ``cell * k + salt`` (salt < k), carrying ``__ps_bucket`` =
+    pmod(key, nb) and that bucket's keys as ``__ps_keys``."""
+    from pyspark.sql.types import (  # noqa: PLC0415
+        BinaryType, LongType, StructField, StructType,
+    )
 
     keep = [f for f in polygons.schema.fields if f.name != "wkb"]
-    out_schema = StructType(
-        keep
-        + [
-            StructField(_P + "edges", BinaryType()),
-            StructField(_P + "cover", BinaryType()),
-        ]
-    )
+    blobs = ["edges", "cover"] if buckets is None else ["edges", "keys"]
+    out_schema = StructType(keep + [StructField(_P + b, BinaryType()) for b in blobs])
+    if buckets is not None:
+        out_schema = out_schema.add(_P + "bucket", LongType())
     keep_names = [f.name for f in keep]
     empty = b""
 
     # a dimension table often arrives as ONE scan partition (small file
     # counts, single row groups); the parse is the expensive part, so
     # spread it across the cluster — the one-time WKB shuffle is
-    # dimension-sized and buys core-count parallelism
-    sc = polygons.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if polygons.rdd.getNumPartitions() < max(2, target // 2):
+    # dimension-sized and buys core-count parallelism (not on the
+    # partitioned path, whose exchanges never carry the WKB)
+    target = polygons.sparkSession.sparkContext.defaultParallelism
+    if buckets is None and polygons.rdd.getNumPartitions() < max(2, target // 2):
         polygons = polygons.repartition(target)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf[keep_names].copy()
-            if len(pdf) == 0:
-                out[_P + "edges"] = pd.Series([], dtype=object)
-                out[_P + "cover"] = pd.Series([], dtype=object)
-                yield out
-                continue
             codes, uniques = pd.factorize(pdf["wkb"])
             uniq_blobs = [
                 rings_to_edges(wkb_rings(bytes(w))).tobytes() for w in uniques
@@ -513,9 +504,7 @@ def _parse_polygons_distributed(
             out[_P + "edges"] = [
                 uniq_blobs[c] if c >= 0 else empty for c in codes
             ]
-            bb = pdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy(
-                dtype=np.float64
-            )
+            bb = pdf[list(_BBOX_COLS)].to_numpy(dtype=np.float64)
             bad = np.isnan(bb).any(axis=1)
             # cover cells for the WHOLE batch in one vectorized pass
             # (the per-row bbox_cover_np call cost ~11us of numpy setup
@@ -543,18 +532,52 @@ def _parse_polygons_distributed(
                 )
             else:
                 cells = np.empty(0, dtype=np.int64)
+            if buckets is not None:
+                yield _bucket_rows(out, cells, counts, *buckets)
+                continue
             out[_P + "cover"] = [
                 cells[s:e].tobytes() if e > s else empty
                 for s, e in zip(starts, ends)
             ]
             yield out
 
-    parsed = polygons.mapInPandas(parse, schema=out_schema)
-    # the collect must take the Arrow path: the default row-pickled
-    # toPandas is ~50x slower at the broadcast guard ceiling (hundreds
-    # of thousands of binary-blob rows).
-    with arrow_enabled(polygons.sparkSession):
-        return parsed.toPandas()
+    return polygons.mapInPandas(parse, schema=out_schema)
+
+
+def _bucket_rows(out: pd.DataFrame, cells, counts, k: int, nb: int):
+    """Row i of ``out`` (cover: ``counts[i]`` of ``cells``) once per
+    bucket ``key % nb`` (Spark's pmod) of its keys ``cell * k + salt``,
+    with the bucket and that bucket's keys as int64 bytes."""
+    keys = (cells[:, None] * k + np.arange(k)).ravel()
+    group = np.repeat(np.arange(len(out)) * nb, counts * k) + keys % nb
+    order = np.argsort(group, kind="stable")
+    keys, group = keys[order], group[order]
+    first = np.flatnonzero(np.diff(group, prepend=-1))
+    res = out.iloc[group[first] // nb].reset_index(drop=True)
+    res[_P + "bucket"] = group[first] % nb
+    res[_P + "keys"] = pd.Series(
+        [a.tobytes() for a in np.split(keys, first[1:])] if len(keys) else [],
+        dtype=object,
+    )
+    return res
+
+
+def _index_state(edge_blobs: list, key_blobs: list, bboxes: np.ndarray):
+    """The PIP kernel's index state from per-polygon edge and int64 key
+    blobs (cover cells, or one bucket's (cell, salt) keys) and bboxes:
+    bytes-join + frombuffer, no per-polygon Python work."""
+    n = len(edge_blobs)
+    edge_counts = np.fromiter((len(b) // 32 for b in edge_blobs), np.int64, n)
+    all_edges = np.frombuffer(b"".join(edge_blobs), dtype=np.float64).reshape(-1, 4)
+    edge_offsets = np.concatenate([[0], np.cumsum(edge_counts)])
+    key_counts = np.fromiter((len(b) // 8 for b in key_blobs), np.int64, n)
+    keys = np.frombuffer(b"".join(key_blobs), dtype=np.int64)
+    # int32 pids halve the broadcast's fattest buffer (valid: the
+    # row guard caps the build side well under 2^31 rows)
+    key_pids = np.repeat(np.arange(n, dtype=np.int32), key_counts)
+    order, uniq_keys, key_offsets = _csr(keys)
+    return (all_edges, edge_offsets, bboxes, uniq_keys, key_offsets,
+            key_pids[order])
 
 
 def _csr(cells: np.ndarray):
@@ -571,6 +594,66 @@ def _csr(cells: np.ndarray):
     np.not_equal(sorted_cells[1:], sorted_cells[:-1], out=uniq_mask[1:])
     offsets = np.append(np.flatnonzero(uniq_mask), len(sorted_cells))
     return order, sorted_cells[uniq_mask], offsets
+
+
+_EMPTY_I64 = np.empty(0, dtype=np.int64)
+#: points per index-probe slice: keeps every temporary ~L2-resident
+_PROBE_SLICE = 8192
+
+
+def _probe_index(state, cells, px, py):
+    """The PIP kernel of both paths: ``(point_idx, pid)`` matches of
+    points in ``cells`` against an :func:`_index_state`, ascending in
+    point position, one cache-sized slice at a time."""
+    idx_parts = []
+    pid_parts = []
+    for s in range(0, len(cells), _PROBE_SLICE):
+        e = s + _PROBE_SLICE
+        pi, pp = _refine_slice(state, cells[s:e], px[s:e], py[s:e])
+        idx_parts.append(pi + s)
+        pid_parts.append(pp)
+    if not idx_parts:
+        return _EMPTY_I64, _EMPTY_I64
+    return np.concatenate(idx_parts), np.concatenate(pid_parts)
+
+
+def _refine_slice(state, cells, px, py):
+    """(point_idx, pid) matches for one cache-sized point slice.
+    Every temporary stays ~L2-resident: on DRAM-bandwidth-bound
+    hosts this is the difference between flat and near-linear
+    multi-worker scaling."""
+    (all_e, e_off, bboxes, idx_cells, idx_off, idx_pids) = state
+    n = len(cells)
+    pos = np.searchsorted(idx_cells, cells)
+    pos_c = np.clip(pos, 0, max(len(idx_cells) - 1, 0))
+    hit = (len(idx_cells) > 0) & (idx_cells[pos_c] == cells)
+    starts = np.where(hit, idx_off[pos_c], 0)
+    counts = np.where(hit, idx_off[pos_c + 1] - idx_off[pos_c], 0)
+    total = int(counts.sum())
+    if not total:
+        return _EMPTY_I64, _EMPTY_I64
+    point_idx = np.repeat(np.arange(n), counts)
+    # flattened ranges: start_i + (0..count_i-1) per point
+    head = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    within = np.arange(total) - np.repeat(head, counts)
+    pair_pids = idx_pids[np.repeat(starts, counts) + within]
+    # bbox prune (reference-inclusive semantics), then ray-cast
+    bb = bboxes[pair_pids]
+    tx = px[point_idx]
+    ty = py[point_idx]
+    m = (
+        (bb[:, 0] <= tx) & (tx <= bb[:, 2])
+        & (bb[:, 1] <= ty) & (ty <= bb[:, 3])
+    )
+    point_idx = point_idx[m]
+    pair_pids = pair_pids[m]
+    if len(pair_pids):
+        inside = pip_pairs_flat(
+            all_e, e_off, pair_pids, px[point_idx], py[point_idx]
+        )
+        point_idx = point_idx[inside]
+        pair_pids = pair_pids[inside]
+    return point_idx, pair_pids
 
 
 class BroadcastPolygonIndex:
@@ -601,40 +684,18 @@ class BroadcastPolygonIndex:
         self._gfields = {f.name: f for f in polygons.schema.fields}
         spark = polygons.sparkSession
         self.spark = spark
-        pol_pdf = _parse_polygons_distributed(
+        parsed = _parse_polygons_distributed(
             polygons.select(*POLYGON_META_COLS, *self.gcols), grid
         )
-        n = len(pol_pdf)
-        # the executors already parsed WKB -> (E,4) float64 edge rows and
-        # int64 cell covers; reassembly here is bytes-join + frombuffer
-        # (pure memcpy — no per-polygon Python work on the driver)
-        edge_blobs = pol_pdf[_P + "edges"].tolist()
-        edge_counts = np.fromiter(
-            (len(b) // 32 for b in edge_blobs), dtype=np.int64, count=n
-        )
-        all_edges = np.frombuffer(
-            b"".join(edge_blobs), dtype=np.float64
-        ).reshape(-1, 4)
-        edge_offsets = np.concatenate(
-            [np.zeros(1, dtype=np.int64), np.cumsum(edge_counts)]
-        )
-        bbox_arr = pol_pdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy(
-            dtype=np.float64
-        )
-        cover_blobs = pol_pdf[_P + "cover"].tolist()
-        cover_counts = np.fromiter(
-            (len(b) // 8 for b in cover_blobs), dtype=np.int64, count=n
-        )
-        cover_cell = np.frombuffer(b"".join(cover_blobs), dtype=np.int64)
-        # int32 pids halve the broadcast's fattest buffer (valid: the
-        # row guard caps the build side well under 2^31 rows)
-        cover_pid = np.repeat(np.arange(n, dtype=np.int32), cover_counts)
-        order, uniq_cells, cell_offsets = _csr(cover_cell)
-        sorted_pids = cover_pid[order]
-        self.bc = spark.sparkContext.broadcast(
-            (all_edges, edge_offsets, bbox_arr, uniq_cells, cell_offsets,
-             sorted_pids)
-        )
+        # the collect must take the Arrow path: the default row-pickled
+        # toPandas is ~50x slower at the broadcast guard ceiling (hundreds
+        # of thousands of binary-blob rows).
+        with arrow_enabled(spark):
+            pol_pdf = parsed.toPandas()
+        self.bc = spark.sparkContext.broadcast(_index_state(
+            pol_pdf[_P + "edges"].tolist(), pol_pdf[_P + "cover"].tolist(),
+            pol_pdf[list(_BBOX_COLS)].to_numpy(dtype=np.float64),
+        ))
         # the blobs fed the index build; gtable only needs the attrs
         self.pol_pdf = pol_pdf.drop(columns=[_P + "edges", _P + "cover"])
         self._gtable = None
@@ -692,47 +753,6 @@ class BroadcastPolygonIndex:
         else:
             out_schema = StructType(point_fields)
         point_names = [f.name for f in point_fields]
-        empty_i64 = np.empty(0, dtype=np.int64)
-
-        def refine_slice(state, cells, px, py):
-            """(point_idx, pid) matches for one cache-sized point slice.
-            Every temporary stays ~L2-resident: on DRAM-bandwidth-bound
-            hosts this is the difference between flat and near-linear
-            multi-worker scaling."""
-            (all_e, e_off, bboxes, idx_cells, idx_off, idx_pids) = state
-            n = len(cells)
-            pos = np.searchsorted(idx_cells, cells)
-            pos_c = np.clip(pos, 0, max(len(idx_cells) - 1, 0))
-            hit = (len(idx_cells) > 0) & (idx_cells[pos_c] == cells)
-            starts = np.where(hit, idx_off[pos_c], 0)
-            counts = np.where(hit, idx_off[pos_c + 1] - idx_off[pos_c], 0)
-            total = int(counts.sum())
-            if not total:
-                return np.empty(0, np.int64), empty_i64
-            point_idx = np.repeat(np.arange(n), counts)
-            # flattened ranges: start_i + (0..count_i-1) per point
-            head = np.concatenate([[0], np.cumsum(counts)[:-1]])
-            within = np.arange(total) - np.repeat(head, counts)
-            pair_pids = idx_pids[np.repeat(starts, counts) + within]
-            # bbox prune (reference-inclusive semantics), then ray-cast
-            bb = bboxes[pair_pids]
-            tx = px[point_idx]
-            ty = py[point_idx]
-            m = (
-                (bb[:, 0] <= tx) & (tx <= bb[:, 2])
-                & (bb[:, 1] <= ty) & (ty <= bb[:, 3])
-            )
-            point_idx = point_idx[m]
-            pair_pids = pair_pids[m]
-            if len(pair_pids):
-                inside = pip_pairs_flat(
-                    all_e, e_off, pair_pids, px[point_idx], py[point_idx]
-                )
-                point_idx = point_idx[inside]
-                pair_pids = pair_pids[inside]
-            return point_idx, pair_pids
-
-        SLICE = 8192
         probe_names = [f.name for f in probe.schema.fields]
         x_i, y_i = probe_names.index(x), probe_names.index(y)
         pt_idxs = [probe_names.index(c) for c in point_names]
@@ -752,23 +772,8 @@ class BroadcastPolygonIndex:
                 n = rb.num_rows
                 px = rb.column(x_i).to_numpy(zero_copy_only=False)
                 py = rb.column(y_i).to_numpy(zero_copy_only=False)
-                cells = grid.cell_np(px, py)
-                idx_parts = []
-                pid_parts = []
-                for s in range(0, n, SLICE):
-                    pi, pp = refine_slice(
-                        state, cells[s : s + SLICE], px[s : s + SLICE],
-                        py[s : s + SLICE],
-                    )
-                    idx_parts.append(pi + s)
-                    pid_parts.append(pp)
-                point_idx = (
-                    np.concatenate(idx_parts) if idx_parts
-                    else np.empty(0, np.int64)
-                )
-                pair_pids = (
-                    np.concatenate(pid_parts) if pid_parts
-                    else np.empty(0, np.int64)
+                point_idx, pair_pids = _probe_index(
+                    state, grid.cell_np(px, py), px, py
                 )
                 per_point = np.bincount(point_idx, minlength=n)
                 if mode == "semi":
@@ -820,23 +825,13 @@ def spatial_semi_join(
     polygon appears exactly once (duplicate input rows preserved).  The
     broadcast-index path answers from the SAME single refine pass as
     the inner join (per-point match counts are a by-product) — no pair
-    explosion, no dedup shuffle.  The sort-merge path (``salt_k``
-    applies there only) left_semi joins the points against the
-    distinct matched point-values with null-safe equality."""
+    explosion, no dedup shuffle.  The partitioned path (``salt_k``
+    applies there only) runs the same kernel per (cell, salt) bucket
+    and keeps each point row by the same count."""
     return _pip(
         points, polygons, "semi", x, y, grid, broadcast_polygons, salt_k,
         point_out_cols=point_out_cols,
     )
-
-
-def _null_safe_cond(left: DataFrame, right: DataFrame, cols: list[str]) -> Column:
-    """Null-safe (<=>) equality over ``cols`` — plain column equality
-    silently drops rows with a NULL in ANY joined column, diverging
-    from dropDuplicates' group-by semantics (which treat NULLs equal)."""
-    cond = left[cols[0]].eqNullSafe(right[cols[0]])
-    for c in cols[1:]:
-        cond = cond & left[c].eqNullSafe(right[c])
-    return cond
 
 
 def spatial_anti_join(
@@ -849,10 +844,9 @@ def spatial_anti_join(
     Row-level semantics on BOTH paths (duplicate input rows preserved).
     Broadcast-index path: emitted directly from the single refine pass
     (``per_point == 0`` rows) — one scan, zero shuffles, no second PIP
-    pipeline.  Sort-merge path (``salt_k`` applies there only):
-    left_anti against the distinct matched point-values with null-safe
-    equality (plain equality would wrongly KEEP a matched row whose
-    non-coordinate column is NULL)."""
+    pipeline.  Partitioned path (``salt_k`` applies there only): the
+    same count per (cell, salt) bucket; a point with a NULL coordinate
+    lands in the bucket that holds no polygons, so it is emitted."""
     return _pip(
         points, polygons, "anti", x, y, grid, broadcast_polygons, salt_k,
         point_out_cols=point_out_cols,
@@ -909,8 +903,8 @@ def tile_assignment(
             .withColumn("__tymax", lat1)
         )
         gcols = _polygon_attr_cols(polygons, polygon_cols)
-        build = _polygons_with_cells(
-            polygons.select("xmin", "ymin", "xmax", "ymax", *gcols), grid, None
+        build = _explode_bbox_cover(
+            polygons.select("xmin", "ymin", "xmax", "ymax", *gcols), grid
         )
         probe = _explode_bbox_cover(
             boxed, grid, "__txmin", "__tymin", "__txmax", "__tymax"
@@ -1510,9 +1504,9 @@ def zonal_stats(
     brightness or caption length per admin polygon).
 
     Plan shape = :func:`point_in_polygon_join`'s (broadcast index, or
-    sort-merge salted by a ``salt_k`` in ``join_kwargs``; same choice)
-    followed by ONE hash aggregation on the polygon key with map-side
-    partial aggs — the join output never materializes anywhere,
+    the partitioned cogroup salted by a ``salt_k`` in ``join_kwargs``;
+    same choice) followed by ONE hash aggregation on the polygon key
+    with map-side partial aggs — the join output never materializes anywhere,
     Catalyst pipelines refine straight into the partial agg.  Output:
     (*polygon_cols, n_points, <c>_sum, <c>_min, <c>_max, <c>_avg per
     value column); ``polygon_cols`` defaults as in the join.

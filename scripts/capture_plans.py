@@ -1,6 +1,6 @@
 """Regenerate PLANS.txt: formatted physical plans for the headline
 queries (the .explain audit trail — checked for pushdown, codegen
-spans, broadcast vs sort-merge choice, and absence of dedup/anti
+spans, broadcast vs partitioned choice, and absence of dedup/anti
 exchanges after the round-2 single-pass rework).
 
 Usage: python scripts/capture_plans.py [sf_dir]
@@ -40,7 +40,7 @@ def main():
 
     pts = em._pts(spark, sf_dir)
     dia = em._diamond_wkb(em._diamonds(spark, sf_dir))
-    sections["pip_join (sort-merge path)"] = fmt(
+    sections["pip_join (partitioned path)"] = fmt(
         point_in_polygon_join(
             pts, dia, grid=em.ENTRY_GRID, polygon_cols=["oid"],
             broadcast_polygons=False,
@@ -56,19 +56,10 @@ def main():
     sections["ann_cosine (broadcast-queries map kernel, corpus never shuffles)"] = fmt(
         em.q_ann_cosine(spark, sf_dir)
     )
-    # capture the salted plan with broadcasting disabled: at sf0.001 the
-    # exploded build side slides under autoBroadcastJoinThreshold and
-    # Catalyst broadcasts regardless, which is NOT the plan this section
-    # documents (round-3 caption mismatch) — the no-broadcast config is
-    # the shape the join takes at real scale
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sections["pip_skew (salted sort-merge path; captured with "
-             "autoBroadcastJoinThreshold=-1 = the at-scale shape)"] = fmt(
+    sections["pip_skew (salted partitioned path: one cogroup by "
+             "(cell, salt) bucket, no join)"] = fmt(
         em.q_pip_skew(spark, sf_dir)
     )
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.unset("spark.sql.adaptive.enabled")
     sections["lsh_ann (integer-plane buckets + fold-kernel rerank)"] = fmt(
         em.q_lsh_ann(spark, sf_dir)
     )

@@ -1,6 +1,7 @@
 """The PIP join family (inner, semi, anti) against a reference-free
-oracle, on both execution paths: the broadcast index and the keyed
-sort-merge join, salted and not.
+oracle, on both execution paths: the broadcast index and the
+partitioned cogroup, salted and not (the "sort_merge" configs name the
+partitioned path).
 
 Polygons come from the golden fixture (holes, multipart and nested
 shapes); points are random plus a hot coordinate carrying about a
@@ -17,6 +18,7 @@ import pytest
 from pyshp_spark.fixtures.polygons import BBOX, polygon_fixture
 from pyshp_spark.kernels.rings import points_in_rings_even_odd
 from pyshp_spark.kernels.wkb import wkb_polygon
+from pyshp_spark.operators import spatial as sp
 from pyshp_spark.operators.spatial import (
     point_in_polygon_join,
     spatial_anti_join,
@@ -142,7 +144,7 @@ def test_forced_index_ignores_salt(pts, polys, mode):
 def test_semi_anti_sort_merge_carry_no_polygon_attrs(polys, pts, frame):
     """Semi/anti never carry polygon attributes, so neither a polygon
     attribute named like a point column nor a MapType attribute (not
-    orderable, not hashable) may break the sort-merge path."""
+    orderable, not hashable) may break the partitioned path."""
     polys_f = (
         polys.withColumnRenamed("oid", "point_id") if frame == "name_clash"
         else polys.selectExpr("*", "map('k', cast(oid AS int)) AS tags")
@@ -153,3 +155,47 @@ def test_semi_anti_sort_merge_carry_no_polygon_attrs(polys, pts, frame):
                    dict(broadcast_polygons=False, salt_k=4),
                    dict(salt_k=4)):
             assert _got(JOINS[mode](pts, polys_f, **kw), mode) == want, (mode, kw)
+
+
+@pytest.mark.parametrize("salt_k", [None, 4], ids=["unsalted", "salted"])
+def test_partitioned_inner_carries_map_attr(pts, polys, expected, salt_k):
+    """The partitioned path hashes and sorts no polygon column, so an
+    inner join carries a MapType attribute, as the index path does."""
+    tagged = polys.selectExpr("*", "map('k', cast(oid AS int)) AS tags")
+
+    def got(**kw):
+        out = point_in_polygon_join(pts, tagged, polygon_cols=["oid", "tags"], **kw)
+        return Counter(
+            (r.point_id, r.payload, r.oid, tuple(r.tags.items()))
+            for r in out.collect()
+        )
+
+    want = got(broadcast_polygons=True)
+    assert sum(want.values()) == sum(expected["inner"].values())
+    assert got(broadcast_polygons=False, salt_k=salt_k) == want
+
+
+@pytest.mark.parametrize(
+    "bad, msg",
+    [({"broadcast_polygons": "false"}, "broadcast_polygons"),
+     ({"broadcast_polygons": 0}, "broadcast_polygons"),
+     ({"salt_k": 0}, "salt_k"),
+     ({"broadcast_polygons": False, "salt_k": -1}, "salt_k"),
+     ({"salt_k": 2.0}, "salt_k")],
+    ids=["bp_string", "bp_int", "salt_zero", "salt_negative", "salt_float"],
+)
+def test_bad_dispatch_args_raise_before_any_job(spark, pts, polys, bad, msg):
+    # a cold cache: without the check "auto" would run its size probes
+    # and "false" would build an index
+    sc = spark.sparkContext
+    sp.clear_polygon_index_cache()
+    group = f"pip-bad-args-{sorted(bad.items())}"
+    sc.setJobGroup(group, "PIP argument check")
+    try:
+        for join in JOINS.values():
+            with pytest.raises(ValueError, match=msg):
+                join(pts, polys, **bad)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sp._INDEX_CACHE

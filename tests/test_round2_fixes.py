@@ -220,7 +220,7 @@ def test_anti_join_single_pass_no_second_join(spark):
 
 def test_pip_broadcast_auto_guard_falls_back(spark, monkeypatch):
     """Oversized build side (row guard of 1) must pick the
-    sort-merge/cell-join plan, with identical results."""
+    partitioned (cogroup) plan, with identical results."""
     import pyshp_spark.operators.spatial as sp  # noqa: PLC0415
 
     polys = _mini_polys(spark)
@@ -237,7 +237,7 @@ def test_pip_broadcast_auto_guard_falls_back(spark, monkeypatch):
     fb = point_in_polygon_join(pts, polys, grid=grid, polygon_cols=["oid"])
     assert sorted((r.pid, r.oid) for r in fb.collect()) == want
     plan = fb._jdf.queryExecution().executedPlan().toString()
-    assert "__ps_cell" in plan  # cell equi-join path, not driver broadcast
+    assert "FlatMapCoGroupsInArrow" in plan  # partitioned, not broadcast
 
 
 def test_pip_join_tolerates_null_geometry_rows(spark):

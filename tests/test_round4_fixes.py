@@ -4,8 +4,8 @@
    per-pair re-shingling of hot docs) — values unchanged.
 2. embedding_dedup_pairs' bucket self-join carries (id, bucket) only;
    vectors re-attach to the deduped pair set (plan pinned vector-free).
-3. The salted PIP path is really a SortMergeJoin with the salt columns
-   in the join keys when broadcasting is disabled.
+3. The salted partitioned PIP path is one cogroup whose exchanges hash
+   a bucket of the (cell, salt) key when broadcasting is disabled.
 4. connected_components: reliable checkpointing option, single-action
    convergence check, prior-round unpersist; survives cache eviction.
 """
@@ -145,12 +145,21 @@ class TestEmbeddingShuffleShape:
             assert r.cosine == pytest.approx(round(cos, 6), abs=1e-6)
 
 
-class TestSaltedSortMergePlan:
-    def test_salted_path_is_sort_merge_with_salt_keys(self, spark):
-        """With autoBroadcastJoinThreshold=-1 the salted PIP join must
-        be a SortMergeJoin whose keys include the salt columns (round-3
-        PLANS.txt showed BroadcastHashJoin at capture scale because the
-        tiny exploded build side slid under the threshold)."""
+def _plan_nodes(node):
+    """A plan's nodes, depth first (through py4j)."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+class TestSaltedPartitionedPlan:
+    def test_salted_path_cogroups_on_salted_bucket(self, spark):
+        """With autoBroadcastJoinThreshold=-1 and AQE off the salted PIP
+        join is ONE cogroup: both exchanges hash a bucket derived from
+        the (cell, salt) key, no join of any kind remains, and no
+        exchange carries the polygon WKB (edges are parsed before the
+        shuffle)."""
         from pyshp_spark.fixtures.images import images_fixture  # noqa: PLC0415
         from pyshp_spark.fixtures.polygons import fixture_shapefile_bytes  # noqa: PLC0415
         from pyshp_spark.operators.spatial import point_in_polygon_join  # noqa: PLC0415
@@ -178,17 +187,34 @@ class TestSaltedSortMergePlan:
                 broadcast_polygons=False,
                 salt_k=4,
             )
-            plan = out._jdf.queryExecution().executedPlan().toString()
+            qe = out._jdf.queryExecution()
+            executed = qe.executedPlan()
+            plan = executed.toString()
+            refs = {
+                e.name(): e.child().references().toString()
+                for n in _plan_nodes(qe.analyzed()) if n.nodeName() == "Project"
+                for e in (n.projectList().apply(i)
+                          for i in range(n.projectList().size()))
+                if e.nodeName() == "Alias"
+            }
+            exchanges = [
+                (n.toString(), n.output().toString())
+                for n in _plan_nodes(executed) if n.nodeName() == "Exchange"
+            ]
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        assert "SortMergeJoin" in plan, plan
-        smj = [l for l in plan.splitlines() if "SortMergeJoin" in l]
-        assert any("__ps_salt" in l for l in smj), (
-            "salt columns must appear in the sort-merge join keys:\n"
-            + "\n".join(smj)
-        )
+        assert "FlatMapCoGroupsInArrow" in plan, plan
+        assert "SortMergeJoin" not in plan
         assert "BroadcastHashJoin" not in plan
+        assert len(exchanges) == 2, plan
+        for node, output in exchanges:
+            assert "hashpartitioning(__ps_bucket#" in node, node
+            assert "wkb" not in output, output
+        # the bucket is derived from the key, the key from cell AND salt
+        assert "__ps_key#" in refs["__ps_bucket"], refs
+        assert "__ps_cell#" in refs["__ps_key"], refs
+        assert "__ps_salt#" in refs["__ps_key"], refs
 
 
 class TestConnectedComponentsHardening:

@@ -460,9 +460,8 @@ class TestSaltedExchangeNoWkb:
         return pts, polys
 
     def test_salted_exchange_carries_no_wkb(self, spark):
-        """The exploded (cell x salt) build-side exchange must ship
-        (pid, bbox, attrs) only — the WKB re-attaches to the
-        bbox-prefiltered candidates on the dense pid key."""
+        """The salted build side is cogrouped by a (cell, salt) bucket:
+        its exchange ships parsed edges, never the WKB."""
         from pyshp_spark.operators.spatial import (  # noqa: PLC0415
             point_in_polygon_join,
         )
@@ -483,7 +482,7 @@ class TestSaltedExchangeNoWkb:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         salted = [
             l for l in plan.splitlines()
-            if "Exchange" in l and "__ps_salt" in l
+            if "Exchange" in l and "__ps_bucket" in l
         ]
         assert salted, "expected the salted exchange:\n" + plan
         assert not any("wkb" in l for l in salted), (

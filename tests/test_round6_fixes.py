@@ -2,9 +2,9 @@
 
 1. BroadcastPolygonIndex builds its edge/cover buffers DISTRIBUTED
    (mapInPandas) — identical join output, null-geometry rows handled.
-2. The sort-merge/salted PIP path derives its polygon id
-   deterministically (content hash) — NO localCheckpoint in the plan
-   (fault-tolerant on executor loss), duplicate-row multiplicity kept.
+2. The partitioned (salted or not) PIP path has NO localCheckpoint in
+   the plan (fault-tolerant on executor loss), matches the broadcast
+   index, and keeps duplicate polygon rows' multiplicity.
 3. knn_join runs one extra widened ring before conceding, and the
    straggler fallback REFUSES to run a distributed cartesian against
    an unbroadcastable target side (loud error instead).
@@ -103,7 +103,7 @@ class TestDistributedIndexBuild:
         assert int(edge_offsets[-1]) == 32
 
 
-class TestDeterministicPidPath:
+class TestPartitionedPath:
     def test_no_localcheckpoint_scan_in_plan(self, spark, polys, pts,
                                              tmp_path):
         # parquet-backed inputs: any ExistingRDD scan left in the plan
@@ -127,13 +127,14 @@ class TestDeterministicPidPath:
         )
         assert _pairs(salted) == _pairs(bcast)
 
-    def test_duplicate_polygon_rows_keep_multiplicity(self, spark, pts):
+    @pytest.mark.parametrize("salt_k", [None, 3], ids=["unsalted", "salted"])
+    def test_duplicate_polygon_rows_keep_multiplicity(self, spark, pts, salt_k):
         ring = _diamond(2.0, 2.0)
         dup = _poly_rows(
             spark, [({"pid": 1}, ring), ({"pid": 1}, ring), ({"pid": 2}, ring)]
         )
         out = point_in_polygon_join(
-            pts, dup, grid=GRID4, broadcast_polygons=False
+            pts, dup, grid=GRID4, broadcast_polygons=False, salt_k=salt_k
         )
         counts = {
             r["pid"]: r["n"]

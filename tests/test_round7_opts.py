@@ -144,17 +144,28 @@ def test_vectorized_cover_matches_per_row(spark):
         rows, "oid long, wkb binary, xmin double, ymin double, "
               "xmax double, ymax double",
     )
-    pdf = sp._parse_polygons_distributed(polys, GRID4)
+    pdf = sp._parse_polygons_distributed(polys, GRID4).toPandas()
     got = {
         int(o): np.frombuffer(b, dtype=np.int64)
         for o, b in zip(pdf["oid"], pdf[sp._P + "cover"])
     }
+    # the partitioned path's split: each row once per bucket (key % 5)
+    # of its keys cell * 3 + salt
+    split = sp._parse_polygons_distributed(polys, GRID4, (3, 5)).toPandas()
     for oid, _, x0, y0, x1, y1 in rows:
         if np.isnan([x0, y0, x1, y1]).any() or x1 < x0 or y1 < y0:
             want = np.empty(0, dtype=np.int64)
         else:
             want = GRID4.bbox_cover_np(x0, y0, x1, y1).astype(np.int64)
         assert np.array_equal(got[oid], want), oid
+        part = split[split["oid"] == oid]
+        keys = [np.frombuffer(b, dtype=np.int64) for b in part[sp._P + "keys"]]
+        assert part[sp._P + "bucket"].is_unique, oid
+        assert all((kk % 5 == b).all() for kk, b in zip(keys, part[sp._P + "bucket"]))
+        got_keys = np.concatenate(keys) if keys else np.empty(0, np.int64)
+        assert sorted(got_keys) == sorted(
+            (want[:, None] * 3 + np.arange(3)).ravel()
+        ), oid
 
 
 def test_first_ring_stats_matches_scalar_kernels():
@@ -218,10 +229,9 @@ def _n_persisted(spark):
 
 
 def test_operator_cache_generations_bounded_and_releasable(spark):
-    """VERDICT r6 task #1: the shuffle-path PIP join's keyed persist (and
-    hole_assign's three) must not accumulate across calls — each call
-    holds one generation, and release_operator_caches() returns storage
-    to baseline after the result is consumed."""
+    """VERDICT r6 task #1: the partitioned PIP join persists nothing, so
+    three calls leave no cached frame behind, and release_operator_caches
+    still accepts its retired "pip_shuffle" generation as a no-op."""
     sp.clear_polygon_index_cache()
     sp.release_operator_caches()
     polys, pts = _polys(spark), _pts(spark)
@@ -236,8 +246,8 @@ def test_operator_cache_generations_bounded_and_releasable(spark):
         if want is None:
             want = got
         assert got == want
-        # at most ONE generation (one keyed frame) above baseline
-        assert _n_persisted(spark) - base <= 1
+        # nothing persisted above baseline
+        assert _n_persisted(spark) - base <= 0
     sp.release_operator_caches("pip_shuffle")
     # <=, not ==: unpersist() is async and the module-scoped session is
     # shared across test files, so an EARLIER test's release can land
@@ -273,7 +283,7 @@ def test_hole_assign_caches_released(spark):
         assert out.count() == 6
         assert _n_persisted(spark) - base <= 3  # one generation
     sp.release_operator_caches("assign_holes")
-    # <= for the same async-unpersist reason as the pip_shuffle test
+    # <= for the same async-unpersist reason as the PIP test
     assert _n_persisted(spark) <= base
 
 
