@@ -153,8 +153,8 @@ def main():
 def index_build_bench(spark, sf_dir: str, copies: int = 25):
     """Wall for building the broadcast polygon index over a
     ``copies x |part|`` polygon dimension (~500k at sf0.1) — round 6
-    moved the WKB→edge/cover parse onto executors (mapInPandas), so
-    the driver's share is pure buffer reassembly (memcpy-speed)
+    moved the WKB→edge/cover parse onto executors (now one mapInArrow),
+    so the driver's share is pure buffer reassembly (memcpy-speed)
     regardless of polygon count or complexity."""
     import __spark_entry__ as em
     from pyspark.sql import functions as F

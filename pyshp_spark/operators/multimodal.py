@@ -1,14 +1,10 @@
-"""Multimodal (image / video / audio binary column) operators.
+"""Multimodal (image binary column) operators.
 
-Media rows are opaque ``binary`` columns with typed metadata (images:
-w, h, fmt per the BASELINE.json input_hint schema; audio: sr, channels,
-fmt).  Decode / feature-extract / frame-sample run as Arrow-batched
-``mapInPandas`` transforms.  Real codecs in this
-container: raw RGB + minimal PNG (kernels/image.py), the deterministic
-'rawvideo' concatenated-frame container, and pcm16 audio (numpy int16);
-everything else raises NotImplementedError (clearly-marked stub, per
-round brief) — the Spark-side plumbing (schema, batching, row
-explosion, UDF signatures) is real and tested either way.
+Image rows are opaque ``binary`` columns with typed metadata (w, h,
+fmt per the BASELINE.json input_hint schema).  Decode and feature
+extraction run as Arrow-batched ``mapInPandas`` transforms.  Real
+codecs in this package: raw RGB + minimal PNG (kernels/image.py);
+every other format decodes to null stats.
 """
 
 from __future__ import annotations
@@ -20,7 +16,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StructField,
@@ -77,109 +72,6 @@ def with_image_stats(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
             out["phash_check"] = pd.array(
                 [int(p) if o else None for p, o in zip(ph, ok)], dtype="Int64"
             )
-            yield out
-
-    return df.mapInPandas(stats, schema=schema)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame (every
-    ``every_n``-th), input_hint image schema + ``frame_idx:long``; the
-    emitted bytes are the single frame as fmt='raw' RGB.
-
-    The Spark-side plumbing (schema, mapInPandas batching, row
-    explosion) is real and tested against fmt='rawvideo' — a
-    deterministic container of n concatenated w*h*3 RGB frames.  Real
-    codecs (mp4/webm/...) are STUBBED: no video libraries exist in this
-    container, so those rows raise NotImplementedError with the format
-    named — swap the decode branch for pyav/ffmpeg where available."""
-    if every_n < 1:
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-    fields = [
-        f if f.name != "bytes" else StructField("bytes", BinaryType())
-        for f in df.schema.fields
-    ] + [StructField("frame_idx", LongType())]
-    schema = StructType(fields)
-    names = [f.name for f in df.schema.fields]
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                d = dict(zip(names, row))
-                fmt = str(d["fmt"])
-                if fmt != "rawvideo":
-                    raise NotImplementedError(
-                        f"stub: no codec for video format {fmt!r} in this "
-                        "environment (only the deterministic 'rawvideo' "
-                        "container decodes); plug a real decoder here"
-                    )
-                w, h = int(d["w"]), int(d["h"])
-                frame_bytes = w * h * 3
-                if frame_bytes <= 0 or d["bytes"] is None:
-                    continue  # corrupt header: zero frames, not a crash
-                buf = bytes(d["bytes"])
-                n_frames = len(buf) // frame_bytes
-                for fi in range(0, n_frames, every_n):
-                    out = dict(d)
-                    out["bytes"] = buf[fi * frame_bytes : (fi + 1) * frame_bytes]
-                    out["fmt"] = "raw"
-                    out["frame_idx"] = fi
-                    rows.append(out)
-            yield pd.DataFrame(rows, columns=names + ["frame_idx"])
-
-    return df.mapInPandas(sample, schema=schema)
-
-
-# ------------------------------------------------------------- audio ----
-
-
-def with_audio_stats(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
-    """Decode each audio row (opaque ``bytes`` + ``sr:int`` +
-    ``channels:int`` + ``fmt:string`` metadata) and append duration_s /
-    rms / peak.  fmt='pcm16' (interleaved little-endian int16) decodes
-    for real via numpy; other formats surface null stats (the codec
-    stub — no audio libraries in this container)."""
-    keep = keep or [c for c in df.columns if c != "bytes"]
-    fields = [f for f in df.schema.fields if f.name in keep]
-    schema = StructType(
-        fields
-        + [
-            StructField("duration_s", DoubleType()),
-            StructField("rms", DoubleType()),
-            StructField("peak", DoubleType()),
-        ]
-    )
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            dur = np.full(n, np.nan)
-            rms = np.full(n, np.nan)
-            peak = np.full(n, np.nan)
-            for i, (buf, sr, ch, fmt) in enumerate(
-                zip(pdf["bytes"], pdf["sr"], pdf["channels"], pdf["fmt"])
-            ):
-                # corrupt-tolerant like with_image_stats: bad metadata
-                # (sr<=0, null channels, odd byte length) -> null stats
-                try:
-                    if str(fmt) != "pcm16" or buf is None or int(sr) <= 0:
-                        continue
-                    raw = bytes(buf)
-                    raw = raw[: len(raw) - (len(raw) % 2)]
-                    pcm = np.frombuffer(raw, dtype="<i2").astype(np.float64)
-                    pcm /= 32768.0
-                    frames = len(pcm) // max(int(ch), 1)
-                    dur[i] = frames / float(sr)
-                    if len(pcm):
-                        rms[i] = float(np.sqrt(np.mean(pcm * pcm)))
-                        peak[i] = float(np.abs(pcm).max())
-                except (TypeError, ValueError):
-                    continue
-            out = pdf[[f.name for f in fields]].copy()
-            out["duration_s"] = dur
-            out["rms"] = rms
-            out["peak"] = peak
             yield out
 
     return df.mapInPandas(stats, schema=schema)

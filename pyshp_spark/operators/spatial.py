@@ -16,7 +16,8 @@ three-stage distributed plan:
      sf.py:856-861, inclusive <=).
   3. REFINE — vectorized even-odd ray-cast over the flat edge arrays
      parsed once per polygon.  Bit-for-bit the reference's crossing
-     test.
+     test.  Matches are emitted by ``take`` on the point rows and on
+     the polygon attributes, which stay Arrow from parse to output.
 
 Because a point maps to exactly one cell, a (point, polygon) pair
 appears at most once after the cell lookup — no dedup pass is needed.
@@ -24,21 +25,18 @@ appears at most once after the cell lookup — no dedup pass is needed.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, DataType, MapType, StructType, VariantType,
+    ArrayType, BinaryType, DataType, LongType, MapType, StructField,
+    StructType, VariantType,
 )
 from pyspark.sql.window import Window
 
 from pyshp_spark.functions.cells import GRID, Grid, missing_coord_expr
 from pyshp_spark.kernels.rings import pip_pairs, pip_pairs_flat, rings_to_edges
 from pyshp_spark.kernels.wkb import wkb_rings
-from pyshp_spark.session_conf import arrow_enabled
 
 _P = "__ps_"  # internal column prefix
 
@@ -168,11 +166,10 @@ def _refine_pip(
     out_idx = [in_names.index(c) for c in out_cols]
 
     def refine(batches):
-        # mapInArrow, not mapInPandas: a pandas conversion materializes
-        # one Python bytes object PER CANDIDATE ROW for the wkb column
-        # (pair-scale); Arrow keeps the binary column as one contiguous
-        # buffer, dictionary_encode dedups it at C speed, and only the DISTINCT
-        # wkbs per batch ever become Python objects
+        # Arrow keeps the wkb column as one contiguous buffer (a
+        # per-row conversion would make one Python bytes object PER
+        # CANDIDATE ROW); dictionary_encode dedups it at C speed, and
+        # only the DISTINCT wkbs per batch ever become Python objects
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.compute as pc  # noqa: PLC0415
 
@@ -212,7 +209,7 @@ def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
 
     The guard is byte-aware, not just row-count-aware: a few million
     rows of small diamonds broadcast fine, but the same row count of
-    large multipart WKB would OOM the driver toPandas.  Once the row
+    large multipart WKB would OOM the driver collect.  Once the row
     probe passes (n is bounded), build-side bytes are measured EXACTLY
     with one sum(length(wkb)) scan — a LIMIT-based estimate can miss
     large rows sitting past the probed prefix, and this scan is cheap
@@ -228,7 +225,7 @@ def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
             .agg(F.sum("__l"))
             .first()[0]
         ) or 0
-        # 96 B/row slack for the bbox doubles + id attrs + pandas overhead
+        # 96 B/row slack for the bbox doubles, id attrs and Arrow offsets
         if total_wkb + n * 96.0 > _MAX_BROADCAST_BYTES:
             return False
     return True
@@ -250,26 +247,24 @@ def point_in_polygon_join(
 
     ``polygons`` needs columns (wkb, xmin, ymin, xmax, ymax, ...);
     ``polygon_cols`` names the attributes carried to the output
-    (default: every other column; ``[]``: none).  Containment
-    semantics = even-odd ray-cast over all rings, matching the
+    (default: every other column; ``[]``: none), as Arrow from the
+    parse to the output, so every value comes back exactly as stored.
+    Containment = even-odd ray-cast over all rings, matching the
     reference's organized exterior-minus-holes membership.
 
-    Two execution paths, one kernel.  When the polygon side fits the
-    broadcast guard, a :class:`BroadcastPolygonIndex` — geometries
-    parsed ONCE on the executors into flat edge arrays plus a CSR cell
-    index, shipped as a broadcast variable — answers every point in one
-    Arrow pass; the probe side never shuffles.  Otherwise points and
-    parsed polygons are cogrouped by a bucket of their (cell, salt) key
-    and each bucket runs the same kernel over its own index.  A bucket
-    loads whole and gets no AQE skew split, so there ``salt_k`` is the
-    hot-cell remedy: without it a hot cell is one bucket (the index
+    Two execution paths, one kernel and one emitter.  When the polygon
+    side fits the broadcast guard, a :class:`BroadcastPolygonIndex`
+    answers every point batch in one Arrow pass; the probe side never
+    shuffles.  Otherwise points and parsed polygons are cogrouped by a
+    bucket of their (cell, salt) key and each bucket runs the same
+    kernel over its own index; a bucket loads whole and gets no AQE
+    skew split, so there ``salt_k`` is the hot-cell remedy (the index
     path ignores it).  ``broadcast_polygons="auto"`` (default) reuses a
     cached index for the same polygon plan, else probes the build-side
     size; pass True/False to force a path.  ``point_out_cols`` (subset
     of the point columns) restricts which point columns reach the
-    OUTPUT — coords consumed only by the refine never travel back
-    through Arrow.  Any other ``broadcast_polygons``, or a ``salt_k``
-    not None or an int >= 1, raises ``ValueError`` before any job.
+    output.  Any other ``broadcast_polygons``, or a ``salt_k`` not None
+    or an int >= 1, raises ``ValueError`` before any job.
     """
     return _pip(
         points, polygons, "inner", x, y, grid, broadcast_polygons, salt_k,
@@ -322,10 +317,7 @@ def _pip(
         idx = None if key is None else _find_cached_index(key, gcols)
     if idx is not None or _resolve_broadcast(polygons, broadcast_polygons):
         idx = idx or _cached_polygon_index(polygons, grid, gcols)
-        return idx.join_points(
-            points, x=x, y=y, point_cols=pcols, mode=mode,
-            point_out_cols=ocols,
-        )
+        return idx._join(points, x, y, pcols, mode, ocols, gcols)
 
     k = salt_k or 1
     nb = _BUCKETS_PER_PARTITION * int(
@@ -347,27 +339,15 @@ def _pip(
     )
 
     def pip_bucket(pts, pols):
-        import pyarrow as pa  # noqa: PLC0415
-
         point_idx = pair_pids = _EMPTY_I64
         if pts.num_rows and pols.num_rows:
-            state = _index_state(
-                pols.column(_P + "edges").to_pylist(),
-                pols.column(_P + "keys").to_pylist(),
-                np.column_stack([pols.column(c).to_numpy() for c in _BBOX_COLS]),
-            )
+            state = _index_state(pols.column(_P + "edges"),
+                                 pols.column(_P + "keys"), _bbox_array(pols))
             point_idx, pair_pids = _probe_index(
                 state, *(pts.column(c).to_numpy() for c in (key_col, x, y))
             )
-        base = pts.select(ocols)
-        if mode == "inner":
-            return pa.Table.from_arrays(
-                base.take(point_idx).columns
-                + pols.select(gcols).take(pair_pids).columns,
-                names=schema.names,
-            )
-        hit = np.bincount(point_idx, minlength=pts.num_rows) > 0
-        return base.filter(pa.array(hit if mode == "semi" else ~hit))
+        return _pip_rows(pts.select(ocols), pols.select(gcols), point_idx,
+                         pair_pids, mode)
 
     return probe.groupBy(bucket_col).cogroup(
         build.groupBy(bucket_col)
@@ -416,10 +396,10 @@ def _index_cache_key(polygons: DataFrame, grid: Grid,
 def _find_cached_index(key, polygon_cols):
     """Cache lookup for ``key``; a geometry-only request
     (``polygon_cols == []``) may reuse ANY same-(plan, grid) entry —
-    the broadcast arrays are built from the geometry columns alone, so
-    an index built with attribute columns answers semi/anti probes
-    identically.  Returns the entry (marked most-recently-used) or
-    None."""
+    the index arrays are built from the geometry columns alone, and a
+    probe emits only its call's attribute columns, so an index built
+    with attributes answers it identically.  Returns the entry (marked
+    most-recently-used) or None."""
     idx = _INDEX_CACHE.get(key)
     if idx is None and not polygon_cols:
         for k2 in _INDEX_CACHE:
@@ -465,25 +445,21 @@ def _cache_put(key, idx) -> None:
 def _parse_polygons_distributed(
     polygons: DataFrame, grid: Grid, buckets: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Executor-side WKB -> flat-buffer parse, lazy: each polygon row
-    comes back as (bbox, attrs, edge-bytes, cover-bytes).  Edge bytes are C-order float64 (E, 4) rows; cover bytes int64 cell
-    ids.  Duplicate WKB values are factorized per Arrow batch and parsed
-    once.  Null WKB / NaN bbox rows (NULL shapes from ingest) yield
-    empty buffers — they can contain no point.  With ``buckets=(k,
+    """Executor-side WKB -> flat-buffer parse, one lazy ``mapInArrow``:
+    each polygon row comes back as (bbox, attrs, edge-bytes,
+    cover-bytes), bbox and attributes passed through as Arrow.  Edge
+    bytes are C-order float64 (E, 4) rows, cover bytes int64 cell ids.
+    Duplicate WKB values are parsed once per batch.  Null WKB / NaN
+    bbox rows (NULL shapes) yield empty buffers.  With ``buckets=(k,
     nb)`` each row instead splits into one row per bucket of its keys
-    ``cell * k + salt`` (salt < k), carrying ``__ps_bucket`` =
-    pmod(key, nb) and that bucket's keys as ``__ps_keys``."""
-    from pyspark.sql.types import (  # noqa: PLC0415
-        BinaryType, LongType, StructField, StructType,
-    )
-
+    ``cell * k + salt`` (salt < k), with that bucket's keys as
+    ``__ps_keys`` and ``__ps_bucket`` = pmod(key, nb)."""
     keep = [f for f in polygons.schema.fields if f.name != "wkb"]
     blobs = ["edges", "cover"] if buckets is None else ["edges", "keys"]
     out_schema = StructType(keep + [StructField(_P + b, BinaryType()) for b in blobs])
     if buckets is not None:
         out_schema = out_schema.add(_P + "bucket", LongType())
     keep_names = [f.name for f in keep]
-    empty = b""
 
     # a dimension table often arrives as ONE scan partition (small file
     # counts, single row groups); the parse is the expensive part, so
@@ -494,18 +470,22 @@ def _parse_polygons_distributed(
     if buckets is None and polygons.rdd.getNumPartitions() < max(2, target // 2):
         polygons = polygons.repartition(target)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[keep_names].copy()
-            codes, uniques = pd.factorize(pdf["wkb"])
-            uniq_blobs = [
-                rings_to_edges(wkb_rings(bytes(w))).tobytes() for w in uniques
-            ]
-            out[_P + "edges"] = [
-                uniq_blobs[c] if c >= 0 else empty for c in codes
-            ]
-            bb = pdf[list(_BBOX_COLS)].to_numpy(dtype=np.float64)
-            bad = np.isnan(bb).any(axis=1)
+    def parse(batches):
+        import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.compute as pc  # noqa: PLC0415
+
+        for rb in batches:
+            enc = pc.dictionary_encode(rb.column("wkb"))
+            uniq = pa.array(
+                [rings_to_edges(wkb_rings(w.as_py())).tobytes()
+                 for w in enc.dictionary] + [b""],
+                pa.binary(),
+            )
+            # a null WKB takes the trailing empty buffer
+            out = rb.select(keep_names).append_column(
+                _P + "edges", uniq.take(pc.fill_null(enc.indices, len(uniq) - 1))
+            )
+            bb = _bbox_array(rb)
             # cover cells for the WHOLE batch in one vectorized pass
             # (the per-row bbox_cover_np call cost ~11us of numpy setup
             # per polygon — ~5 core-seconds at the 500k build guard);
@@ -518,66 +498,90 @@ def _parse_polygons_distributed(
             r1 = np.floor((bbz[:, 3] - grid.y0) / grid.dy).astype(np.int64)
             ncols = np.maximum(c1 - c0 + 1, 0)
             nrows = np.maximum(r1 - r0 + 1, 0)
-            counts = np.where(bad, 0, ncols * nrows)
-            ends = np.cumsum(counts)
-            starts = ends - counts
-            total = int(ends[-1]) if len(ends) else 0
-            if total:
-                within = np.arange(total) - np.repeat(starts, counts)
-                nc_rep = np.repeat(ncols, counts)
-                cells = (
-                    np.repeat(c0, counts) + within % nc_rep
-                    + (np.repeat(r0, counts) + within // nc_rep)
-                    * grid.width
-                )
-            else:
-                cells = np.empty(0, dtype=np.int64)
+            counts = np.where(np.isnan(bb).any(axis=1), 0, ncols * nrows)
+            starts = np.cumsum(counts) - counts
+            within = np.arange(counts.sum()) - np.repeat(starts, counts)
+            nc_rep = np.repeat(ncols, counts)
+            cells = (
+                np.repeat(c0, counts) + within % nc_rep
+                + (np.repeat(r0, counts) + within // nc_rep) * grid.width
+            )
             if buckets is not None:
                 yield _bucket_rows(out, cells, counts, *buckets)
-                continue
-            out[_P + "cover"] = [
-                cells[s:e].tobytes() if e > s else empty
-                for s, e in zip(starts, ends)
-            ]
-            yield out
+            else:
+                yield out.append_column(_P + "cover", _blob_array(cells, counts))
 
-    return polygons.mapInPandas(parse, schema=out_schema)
+    return polygons.mapInArrow(parse, schema=out_schema)
 
 
-def _bucket_rows(out: pd.DataFrame, cells, counts, k: int, nb: int):
-    """Row i of ``out`` (cover: ``counts[i]`` of ``cells``) once per
-    bucket ``key % nb`` (Spark's pmod) of its keys ``cell * k + salt``,
-    with the bucket and that bucket's keys as int64 bytes."""
+def _bucket_rows(out, cells, counts, k: int, nb: int):
+    """Row i of the Arrow batch ``out`` (cover: ``counts[i]`` of
+    ``cells``) once per bucket ``key % nb`` (Spark's pmod) of its keys
+    ``cell * k + salt``, with that bucket's keys as int64 bytes and the
+    bucket."""
+    import pyarrow as pa  # noqa: PLC0415
+
     keys = (cells[:, None] * k + np.arange(k)).ravel()
-    group = np.repeat(np.arange(len(out)) * nb, counts * k) + keys % nb
+    group = np.repeat(np.arange(out.num_rows) * nb, counts * k) + keys % nb
     order = np.argsort(group, kind="stable")
     keys, group = keys[order], group[order]
     first = np.flatnonzero(np.diff(group, prepend=-1))
-    res = out.iloc[group[first] // nb].reset_index(drop=True)
-    res[_P + "bucket"] = group[first] % nb
-    res[_P + "keys"] = pd.Series(
-        [a.tobytes() for a in np.split(keys, first[1:])] if len(keys) else [],
-        dtype=object,
-    )
-    return res
+    return out.take(group[first] // nb).append_column(
+        _P + "keys", _blob_array(keys, np.diff(np.append(first, len(keys))))
+    ).append_column(_P + "bucket", pa.array(group[first] % nb, pa.int64()))
 
 
-def _index_state(edge_blobs: list, key_blobs: list, bboxes: np.ndarray):
-    """The PIP kernel's index state from per-polygon edge and int64 key
-    blobs (cover cells, or one bucket's (cell, salt) keys) and bboxes:
-    bytes-join + frombuffer, no per-polygon Python work."""
-    n = len(edge_blobs)
-    edge_counts = np.fromiter((len(b) // 32 for b in edge_blobs), np.int64, n)
-    all_edges = np.frombuffer(b"".join(edge_blobs), dtype=np.float64).reshape(-1, 4)
-    edge_offsets = np.concatenate([[0], np.cumsum(edge_counts)])
-    key_counts = np.fromiter((len(b) // 8 for b in key_blobs), np.int64, n)
-    keys = np.frombuffer(b"".join(key_blobs), dtype=np.int64)
+def _bbox_array(t) -> np.ndarray:
+    """The (n, 4) float64 bboxes of an Arrow batch or table (NaN: NULL)."""
+    return np.column_stack([
+        t.column(c).to_numpy(zero_copy_only=False) for c in _BBOX_COLS
+    ]).astype(np.float64)
+
+
+def _blob_array(flat: np.ndarray, counts: np.ndarray):
+    """A binary Arrow array whose row i holds the next ``counts[i]``
+    items of ``flat`` as raw bytes: one buffer, no per-row Python."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    offsets = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts * flat.itemsize, out=offsets[1:])
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError("a binary column of one Arrow batch passes 2 GiB")
+    return pa.Array.from_buffers(pa.binary(), len(counts), [
+        None, pa.py_buffer(offsets.astype(np.int32)),
+        pa.py_buffer(np.ascontiguousarray(flat)),
+    ])
+
+
+def _blob_values(col, dtype):
+    """A binary Arrow column's values as one flat ``dtype`` array and
+    each row's item count: views of its buffers, no per-row Python."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if not len(col):
+        return np.empty(0, dtype), _EMPTY_I64
+    _, offs, data = col.buffers()
+    offs = np.frombuffer(offs, np.int32, len(col) + 1, col.offset * 4)
+    flat = np.frombuffer(data or b"", np.uint8)[offs[0]:offs[-1]]
+    return flat.view(dtype), np.diff(offs) // np.dtype(dtype).itemsize
+
+
+def _index_state(edges, keys, bboxes: np.ndarray):
+    """The PIP kernel's index state from binary Arrow columns of
+    per-polygon edges and int64 keys (cover cells, or one bucket's
+    (cell, salt) keys) and the bboxes: views of the Arrow buffers, no
+    per-polygon Python work."""
+    all_edges, edge_counts = _blob_values(edges, np.float64)
+    edge_offsets = np.concatenate([[0], np.cumsum(edge_counts // 4)])
+    keys, key_counts = _blob_values(keys, np.int64)
     # int32 pids halve the broadcast's fattest buffer (valid: the
     # row guard caps the build side well under 2^31 rows)
-    key_pids = np.repeat(np.arange(n, dtype=np.int32), key_counts)
+    key_pids = np.repeat(np.arange(len(key_counts), dtype=np.int32), key_counts)
     order, uniq_keys, key_offsets = _csr(keys)
-    return (all_edges, edge_offsets, bboxes, uniq_keys, key_offsets,
-            key_pids[order])
+    return (all_edges.reshape(-1, 4), edge_offsets, bboxes, uniq_keys,
+            key_offsets, key_pids[order])
 
 
 def _csr(cells: np.ndarray):
@@ -656,68 +660,65 @@ def _refine_slice(state, cells, px, py):
     return point_idx, pair_pids
 
 
+def _pip_rows(base, attrs, point_idx, pids, mode: str):
+    """The output rows of both PIP paths from one kernel result
+    (:func:`_probe_index`), as an Arrow table: inner pairs each match's
+    point row ``base.take(point_idx)`` with its polygon attribute row
+    ``attrs.take(pids)``; semi/anti keep each point row by whether it
+    matched at all."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    if mode == "inner":
+        return pa.Table.from_arrays(
+            base.take(point_idx).columns + attrs.take(pids).columns,
+            names=base.column_names + attrs.column_names,
+        )
+    hit = np.bincount(point_idx, minlength=base.num_rows) > 0
+    return base.filter(pa.array(hit if mode == "semi" else ~hit))
+
+
+def _ipc_bytes(table) -> bytes:
+    """An Arrow table as IPC stream bytes, the form a broadcast carries
+    it in (``pa.ipc.open_stream(b).read_all()`` reads it back)."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
 class BroadcastPolygonIndex:
     """Build-once broadcast spatial index over a dimension-sized polygon
     set; probe many times with point DataFrames.
 
-    The polygon side is parsed DISTRIBUTED (a ``mapInPandas`` stage
-    turns each WKB into a flat float64 edge buffer and an int64 cell
-    cover on the executors), then only those compact binary buffers are
-    collected — the driver's whole build is ``b"".join`` + one
-    ``np.frombuffer`` per index array, memcpy-speed regardless of
-    polygon complexity.  The result is the same flat edge arrays + CSR
-    cell -> polygon-id index (a handful of numpy buffers — each Python
-    worker deserializes the broadcast in ~ms), broadcast once per
-    session.
-    Every probe is a single ``mapInArrow`` over the points doing index
-    lookup, bbox prune and ray-cast refine inside the worker, emitting
-    ONLY an array of matching polygon ids per point — candidate pairs
-    never cross the Arrow channel (at 45M candidates that transfer, not
-    the kernel, dominated a pair-row plan).  A JVM-side explode + tiny
-    broadcast join reattaches polygon attribute columns.  No shuffle
-    anywhere on the fact side."""
+    The polygons are parsed on the executors (one ``mapInArrow``: WKB
+    -> flat float64 edges + int64 cell cover per polygon) and collected
+    as Arrow; the driver views the collected buffers as flat edge arrays
+    plus a CSR cell -> polygon-id index and broadcasts those six numpy
+    arrays, then the attribute table as Arrow IPC bytes, once per
+    session.  Every probe is a single ``mapInArrow`` over the points:
+    index lookup, bbox prune and ray-cast in the worker, then
+    :func:`_pip_rows` emits the output rows (``take`` on the point batch
+    and the attribute table).  No shuffle and no join on the fact
+    side."""
 
     def __init__(self, polygons: DataFrame, grid: Grid = GRID,
                  polygon_cols: list[str] | None = None):
         self.grid = grid
         self.gcols = _polygon_attr_cols(polygons, polygon_cols)
         self._gfields = {f.name: f for f in polygons.schema.fields}
-        spark = polygons.sparkSession
-        self.spark = spark
-        parsed = _parse_polygons_distributed(
+        table = _parse_polygons_distributed(
             polygons.select(*POLYGON_META_COLS, *self.gcols), grid
-        )
-        # the collect must take the Arrow path: the default row-pickled
-        # toPandas is ~50x slower at the broadcast guard ceiling (hundreds
-        # of thousands of binary-blob rows).
-        with arrow_enabled(spark):
-            pol_pdf = parsed.toPandas()
-        self.bc = spark.sparkContext.broadcast(_index_state(
-            pol_pdf[_P + "edges"].tolist(), pol_pdf[_P + "cover"].tolist(),
-            pol_pdf[list(_BBOX_COLS)].to_numpy(dtype=np.float64),
+        ).toArrow()
+        # the Arrow attribute table (one row per polygon id); the blobs
+        # only feed the index build
+        self.pol_pdf = table.select(self.gcols)
+        self.bc = polygons.sparkSession.sparkContext.broadcast((
+            *_index_state(table.column(_P + "edges"),
+                          table.column(_P + "cover"), _bbox_array(table)),
+            _ipc_bytes(self.pol_pdf),
         ))
-        # the blobs fed the index build; gtable only needs the attrs
-        self.pol_pdf = pol_pdf.drop(columns=[_P + "edges", _P + "cover"])
-        self._gtable = None
-
-    def gtable(self):
-        from pyspark.sql.types import IntegerType, StructField, StructType  # noqa: PLC0415
-
-        if self._gtable is None:
-            gpdf = self.pol_pdf[self.gcols].copy()
-            gpdf.insert(0, _P + "pid", np.arange(len(self.pol_pdf), dtype=np.int32))
-            gschema = StructType(
-                [StructField(_P + "pid", IntegerType())]
-                + [self._gfields[g] for g in self.gcols]
-            )
-            # same Arrow-path rule as the index-build collect: a
-            # row-pickled createDataFrame of a guard-ceiling attrs
-            # table would dominate the first probe's wall
-            with arrow_enabled(self.spark):
-                self._gtable = self.spark.createDataFrame(
-                    gpdf, schema=gschema
-                )
-        return self._gtable
 
     def join_points(self, points: DataFrame, x: str = "x", y: str = "y",
                     point_cols: list[str] | None = None,
@@ -731,87 +732,44 @@ class BroadcastPolygonIndex:
         shuffle.  ``point_out_cols`` restricts which point columns the
         refine ships back out through Arrow (coords an aggregation
         never reads stay worker-side)."""
-        from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType  # noqa: PLC0415
-
         if mode not in ("inner", "semi", "anti"):
             raise ValueError(f"unknown join mode {mode!r}")
         pcols = point_cols or list(points.columns)
         ocols = pcols if point_out_cols is None else point_out_cols
-        grid = self.grid
-        bc = self.bc
+        return self._join(points, x, y, pcols, mode, ocols,
+                          self.gcols if mode == "inner" else [])
+
+    def _join(self, points: DataFrame, x: str, y: str, pcols: list[str],
+              mode: str, ocols: list[str], gcols: list[str]) -> DataFrame:
+        """:meth:`join_points` carrying the attribute columns ``gcols``
+        (a subset of the index's)."""
         # the cell id is recomputed from (x, y) INSIDE the worker — it is
         # pure float math, and not shipping it saves an int64 Arrow
         # column on the fact side (the channel is the scaling bottleneck)
         probe = points.select(*pcols)
-        by_name = {f.name: f for f in probe.schema.fields}
-        point_fields = [by_name[c] for c in ocols]
-        if mode == "inner":
-            out_schema = StructType(
-                point_fields
-                + [StructField(_P + "matches", ArrayType(IntegerType()))]
-            )
-        else:
-            out_schema = StructType(point_fields)
-        point_names = [f.name for f in point_fields]
-        probe_names = [f.name for f in probe.schema.fields]
-        x_i, y_i = probe_names.index(x), probe_names.index(y)
-        pt_idxs = [probe_names.index(c) for c in point_names]
+        schema = StructType(
+            [probe.schema[c] for c in ocols] + [self._gfields[g] for g in gcols]
+        )
+        x_i, y_i = pcols.index(x), pcols.index(y)
+        bc, grid = self.bc, self.grid
 
         def refine(batches):
-            # mapInArrow, not mapInPandas: the inner mode's per-point
-            # match lists are emitted as ONE zero-copy
-            # pa.ListArray.from_arrays(offsets, values) per batch — the
-            # pandas route had to np.split the pid array into one tiny
-            # numpy object PER MATCHED POINT (profiled at ~30% of the
-            # whole worker time), and the point columns now pass
-            # through as Arrow buffers without a pandas round trip
             import pyarrow as pa  # noqa: PLC0415
 
-            state = bc.value
+            *state, ipc = bc.value
+            attrs = pa.ipc.open_stream(ipc).read_all().select(gcols)
             for rb in batches:
-                n = rb.num_rows
                 px = rb.column(x_i).to_numpy(zero_copy_only=False)
                 py = rb.column(y_i).to_numpy(zero_copy_only=False)
                 point_idx, pair_pids = _probe_index(
                     state, grid.cell_np(px, py), px, py
                 )
-                per_point = np.bincount(point_idx, minlength=n)
-                if mode == "semi":
-                    yield rb.select(pt_idxs).filter(pa.array(per_point > 0))
-                    continue
-                if mode == "anti":
-                    yield rb.select(pt_idxs).filter(pa.array(per_point == 0))
-                    continue
-                keep = per_point > 0
-                base = rb.select(pt_idxs).filter(pa.array(keep))
-                # point_idx is globally ascending (slices processed in
-                # order, masks preserve order), so pair_pids is already
-                # grouped by point: offsets over the kept counts turn it
-                # into the per-point list column without any splitting
-                offsets = np.zeros(int(keep.sum()) + 1, dtype=np.int32)
-                np.cumsum(per_point[keep], out=offsets[1:], dtype=np.int32)
-                matches = pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()),
-                    pa.array(pair_pids.astype(np.int32), type=pa.int32()),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [base.column(i) for i in range(base.num_columns)]
-                    + [matches],
-                    names=[*point_names, _P + "matches"],
-                )
+                base = pa.Table.from_batches([rb.select(ocols)])
+                yield from _pip_rows(
+                    base, attrs, point_idx, pair_pids, mode
+                ).to_batches()
 
-        matched = probe.mapInArrow(refine, schema=out_schema)
-        if mode in ("semi", "anti"):
-            return matched
-        exploded = matched.select(
-            *point_names, F.explode(_P + "matches").alias(_P + "pid")
-        )
-        if not self.gcols:
-            return exploded.drop(_P + "pid")
-        return (
-            exploded.join(F.broadcast(self.gtable()), on=_P + "pid", how="inner")
-            .select(*point_names, *self.gcols)
-        )
+        return probe.mapInArrow(refine, schema=schema)
 
 
 def spatial_semi_join(
@@ -1123,8 +1081,6 @@ class _KnnIndex:
 
     def __init__(self, targets: DataFrame, grid: Grid, cols: list[str],
                  tx: str, ty: str, tie_break: str | None):
-        import pyarrow as pa  # noqa: PLC0415
-
         self.grid = grid
         self.fields = {f.name: f for f in targets.schema.fields}
         t = targets.select(*cols).where(~missing_coord_expr(tx, ty)).dropDuplicates()
@@ -1134,11 +1090,8 @@ class _KnnIndex:
         x = np.asarray(table.column(tx).to_numpy(), dtype=np.float64)
         y = np.asarray(table.column(ty).to_numpy(), dtype=np.float64)
         order, cells, offsets = _csr(grid.cell_np(x, y))
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as w:
-            w.write_table(table)
         self.bc = targets.sparkSession.sparkContext.broadcast(
-            (x, y, cells, offsets, order, sink.getvalue().to_pybytes())
+            (x, y, cells, offsets, order, _ipc_bytes(table))
         )
 
     def join(self, queries: DataFrame, k: int, qx: str, qy: str,

@@ -1,8 +1,6 @@
 from pyshp_spark.streaming.pip_stream import (  # noqa: F401
     streaming_point_in_polygon,
     streaming_cell_counts,
-    streaming_sessionize,
-    streaming_interval_join,
 )
 from pyshp_spark.streaming.neardup_stream import (  # noqa: F401
     minhash_neardup_sink,

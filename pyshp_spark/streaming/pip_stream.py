@@ -96,55 +96,3 @@ def streaming_cell_counts(
             "n_rows",
         )
     )
-
-
-def streaming_sessionize(
-    stream: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of operators/temporal.sessionize using Spark's
-    native ``session_window``: per-key sessions close when no event
-    arrives within ``gap``; the watermark bounds state (sessions whose
-    window end falls behind it finalize and evict).  Emits one row per
-    closed-or-updated session with its bounds and event count —
-    state-store-backed, merge-on-arrival, no custom stateful code."""
-    return (
-        stream.withWatermark(ts, watermark)
-        .groupBy(F.session_window(F.col(ts), gap).alias("sw"), F.col(key))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(key),
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def streaming_interval_join(
-    stream: DataFrame,
-    intervals: DataFrame,
-    ts: str = "ts",
-    start: str = "start_us",
-    end: str = "end_us",
-    bucket_s: float = 600.0,
-) -> DataFrame:
-    """Stream-static interval join: every arriving event pairs with the
-    static intervals covering its timestamp — identical semantics to
-    the batch operator (time-bucket blocking + exact integer refine),
-    run incrementally.  The intervals side explodes to its covered
-    buckets once and broadcasts (stream-static equi-join), so each
-    micro-batch probes without shuffling the stream."""
-    from pyshp_spark.operators.temporal import interval_join  # noqa: PLC0415
-
-    if not stream.isStreaming:
-        raise ValueError("stream must be a streaming DataFrame")
-    if intervals.isStreaming:
-        raise ValueError("intervals must be static (stream-static join)")
-    return interval_join(
-        stream, F.broadcast(intervals), ts=ts, start=start, end=end,
-        bucket_s=bucket_s,
-    )

@@ -108,12 +108,13 @@ def main():
         if name not in oracles:
             print(f"{name:18s} rows-only: {len(rows)} rows, cols={cols}")
             continue
-        want = con.execute(oracles[name]).fetchall()
-        wcols = sorted(d[0] for d in con.execute(oracles[name]).description)
+        res = con.execute(oracles[name])
+        want = res.fetchall()
+        idx = [d[0] for d in res.description]
+        wcols = sorted(idx)
         spark_set = sorted(
             tuple(canon(r[c]) for c in cols) for r in rows
         )
-        idx = [d[0] for d in con.execute(oracles[name]).description]
         duck_set = sorted(
             tuple(canon(row[idx.index(c)]) for c in wcols) for row in want
         )

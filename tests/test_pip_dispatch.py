@@ -199,3 +199,52 @@ def test_bad_dispatch_args_raise_before_any_job(spark, pts, polys, bad, msg):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sp._INDEX_CACHE
+
+
+@pytest.mark.parametrize("bp", [True, False], ids=["index", "partitioned"])
+def test_inner_int64_attr_exact_next_to_null(spark, bp):
+    """A nullable int64 attribute past 2^53 comes back exact, with a
+    NULL in the same polygon partition: no float64 round trip on either
+    path."""
+    big = 2**53 + 1
+    sq = np.array([[0.0, 0.0], [0.0, 1.0], [1.0, 1.0], [1.0, 0.0], [0.0, 0.0]])
+    polys = spark.createDataFrame(
+        [(big, bytearray(wkb_polygon([sq])), 0.0, 0.0, 1.0, 1.0),
+         (None, bytearray(wkb_polygon([sq + 2.0])), 2.0, 2.0, 3.0, 3.0)],
+        "attr long, wkb binary, xmin double, ymin double, xmax double, "
+        "ymax double",
+    ).coalesce(1)
+    pts = spark.createDataFrame(
+        [(0, 0.5, 0.5), (1, 2.5, 2.5), (2, 5.0, 5.0)],
+        "point_id long, x double, y double",
+    )
+    out = point_in_polygon_join(pts, polys, broadcast_polygons=bp)
+    got = sorted((r.point_id, r.attr) for r in out.collect())
+    assert got == [(0, big), (1, None)]
+
+
+@pytest.mark.parametrize("bp", [True, False], ids=["index", "partitioned"])
+def test_inner_without_polygon_cols_after_cached_attrs(pts, polys, expected, bp):
+    """``polygon_cols=[]`` emits only point columns, also when an
+    earlier call cached an index that carries attributes."""
+    sp.clear_polygon_index_cache()
+    point_in_polygon_join(pts, polys, polygon_cols=["oid"],
+                          broadcast_polygons=True).count()
+    out = point_in_polygon_join(pts, polys, polygon_cols=[], broadcast_polygons=bp)
+    assert out.columns == pts.columns
+    want = Counter()
+    for (pid, payload, _), n in expected["inner"].items():
+        want[(pid, payload)] += n
+    assert _got(out, "semi") == want
+
+
+def test_index_inner_emits_attrs_without_join_back(pts, polys):
+    """The index path's inner join emits the attribute columns from its
+    one probe pass: no explode and no join-back in the plan."""
+    out = point_in_polygon_join(pts, polys, polygon_cols=["oid"],
+                                broadcast_polygons=True)
+    out.count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "Generate" not in plan
+    assert "BroadcastHashJoin" not in plan

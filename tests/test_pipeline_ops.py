@@ -294,73 +294,6 @@ class TestMultimodal:
             assert (i, i + "_copy") in got
 
 
-class TestVideoAudio:
-    def test_frame_sample_rawvideo(self, spark):
-        from pyshp_spark.operators.multimodal import frame_sample  # noqa: PLC0415
-
-        w, h, n_frames = 4, 3, 10
-        rng = np.random.default_rng(5)
-        frames = [
-            rng.integers(0, 256, size=w * h * 3, dtype=np.uint8).tobytes()
-            for _ in range(n_frames)
-        ]
-        pdf = pd.DataFrame(
-            {
-                "image_id": ["vid0"],
-                "bytes": [b"".join(frames)],
-                "w": np.array([w], dtype=np.int32),
-                "h": np.array([h], dtype=np.int32),
-                "fmt": ["rawvideo"],
-            }
-        )
-        out = frame_sample(spark.createDataFrame(pdf), every_n=3).collect()
-        # frames 0, 3, 6, 9
-        assert sorted(r.frame_idx for r in out) == [0, 3, 6, 9]
-        for r in out:
-            assert (r.w, r.h, r.fmt) == (w, h, "raw")
-            assert bytes(r.bytes) == frames[r.frame_idx]
-
-    def test_frame_sample_codec_stub_raises(self, spark):
-        from pyshp_spark.operators.multimodal import frame_sample  # noqa: PLC0415
-
-        pdf = pd.DataFrame(
-            {
-                "image_id": ["vid0"], "bytes": [b"\x00" * 16],
-                "w": np.array([2], dtype=np.int32),
-                "h": np.array([2], dtype=np.int32), "fmt": ["mp4"],
-            }
-        )
-        with pytest.raises(Exception, match="stub: no codec"):
-            frame_sample(spark.createDataFrame(pdf)).collect()
-
-    @staticmethod
-    def _sine_pcm16(sr, seconds, freq=440.0, amp=0.5):
-        t = np.arange(int(sr * seconds)) / sr
-        wave = (amp * np.sin(2 * np.pi * freq * t) * 32767).astype("<i2")
-        return wave.tobytes()
-
-    def test_audio_stats_pcm16(self, spark):
-        from pyshp_spark.operators.multimodal import with_audio_stats  # noqa: PLC0415
-
-        sr, seconds = 16000, 2.0
-        pdf = pd.DataFrame(
-            {
-                "audio_id": ["a0", "a1"],
-                "bytes": [self._sine_pcm16(sr, seconds), b"\x00" * 64],
-                "sr": np.array([sr, sr], dtype=np.int32),
-                "channels": np.array([1, 1], dtype=np.int32),
-                "fmt": ["pcm16", "opus"],  # opus = stubbed codec
-            }
-        )
-        rows = {r.audio_id: r for r in
-                with_audio_stats(spark.createDataFrame(pdf)).collect()}
-        a0 = rows["a0"]
-        assert abs(a0.duration_s - seconds) < 1e-9
-        # RMS of a 0.5-amplitude sine ~ 0.5/sqrt(2)
-        assert abs(a0.rms - 0.5 / np.sqrt(2)) < 1e-3
-        assert 0.49 < a0.peak <= 0.5
-        assert rows["a1"].rms is None  # stubbed format -> null stats
-
 class TestIvfAnn:
     def test_ivf_recall_and_exactness_within_probed_lists(self, spark):
         import pandas as pd  # noqa: PLC0415

@@ -380,43 +380,6 @@ class TestReviewFixes:
         )
         assert got == want
 
-    def test_audio_guards(self, spark):
-        import pandas as pd  # noqa: PLC0415
-
-        from pyshp_spark.operators.multimodal import with_audio_stats  # noqa: PLC0415
-
-        pdf = pd.DataFrame(
-            {
-                "audio_id": ["sr0", "odd", "ok"],
-                "bytes": [b"\x01\x02\x03\x04", b"\x01\x02\x03", b"\x01\x02" * 8],
-                "sr": np.array([0, 8, 8], dtype=np.int32),
-                "channels": np.array([1, 1, 1], dtype=np.int32),
-                "fmt": ["pcm16", "pcm16", "pcm16"],
-            }
-        )
-        rows = {r.audio_id: r for r in
-                with_audio_stats(spark.createDataFrame(pdf)).collect()}
-        assert rows["sr0"].rms is None  # sr=0 -> null stats, not a crash
-        assert rows["odd"].duration_s is not None  # odd buffer truncated
-        assert rows["ok"].duration_s == 1.0
-
-    def test_frame_sample_guards(self, spark):
-        import pandas as pd  # noqa: PLC0415
-
-        from pyshp_spark.operators.multimodal import frame_sample  # noqa: PLC0415
-
-        pdf = pd.DataFrame(
-            {
-                "image_id": ["bad"], "bytes": [b"\x00" * 12],
-                "w": np.array([0], dtype=np.int32),
-                "h": np.array([2], dtype=np.int32), "fmt": ["rawvideo"],
-            }
-        )
-        # zero-area header: zero frames, not ZeroDivisionError
-        assert frame_sample(spark.createDataFrame(pdf)).count() == 0
-        with pytest.raises(ValueError):
-            frame_sample(spark.createDataFrame(pdf), every_n=0)
-
     def test_kmeans_small_corpus(self, spark):
         import pandas as pd  # noqa: PLC0415
 

@@ -93,10 +93,12 @@ class TestDistributedIndexBuild:
 
     def test_no_blob_columns_survive(self, spark, polys):
         idx = BroadcastPolygonIndex(polys, grid=GRID4)
-        assert not any(c.startswith("__ps_") for c in idx.pol_pdf.columns)
-        # the broadcast state is exactly the six flat numpy buffers
+        assert not any(c.startswith("__ps_") for c in idx.pol_pdf.column_names)
+        # the broadcast state is the six flat numpy buffers, then the
+        # attribute table's IPC bytes
         state = idx.bc.value
-        assert len(state) == 6
+        assert len(state) == 7
+        assert all(isinstance(a, np.ndarray) for a in state[:6])
         all_edges, edge_offsets = state[0], state[1]
         assert all_edges.shape[1] == 4
         # 8 diamonds x 4 edges; the NULL row contributes zero edges

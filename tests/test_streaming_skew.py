@@ -270,64 +270,6 @@ class TestStreamingNearDup:
         assert first == retry == [10]
 
 
-class TestStreamingSessionize:
-    def test_sessions_merge_and_close(self, spark, tmp_path):
-        import pandas as pd
-        from pyspark.sql.types import LongType, StructField, StructType, TimestampType
-
-        from pyshp_spark.streaming import streaming_sessionize
-
-        # user 1: two events 10 min apart (ONE session with a 30-min
-        # gap); user 2: one event.  A later batch far past the
-        # watermark closes them all.
-        pdf = pd.DataFrame(
-            {
-                "user_id": [1, 1, 2],
-                "ts": pd.to_datetime(
-                    [
-                        "2026-01-01 00:00:00",
-                        "2026-01-01 00:10:00",
-                        "2026-01-01 00:05:00",
-                    ]
-                ),
-            }
-        )
-        src = tmp_path / "sess_in"
-        src.mkdir()
-        pdf.to_parquet(src / "p1.parquet", coerce_timestamps="us", allow_truncated_timestamps=True)
-        schema = StructType(
-            [StructField("user_id", LongType()), StructField("ts", TimestampType())]
-        )
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        sess = streaming_sessionize(
-            stream, key="user_id", ts="ts", gap="30 minutes", watermark="1 hour"
-        )
-        q = (
-            sess.writeStream.format("memory")
-            .queryName("sessions")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            late = pd.DataFrame(
-                {"user_id": [9], "ts": pd.to_datetime(["2026-01-01 06:00:00"])}
-            )
-            late.to_parquet(src / "p2.parquet", coerce_timestamps="us", allow_truncated_timestamps=True)
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT * FROM sessions ORDER BY user_id"
-            ).collect()
-        finally:
-            q.stop()
-        closed = {r.user_id: r for r in rows}
-        # the two user-1 events merged into one session spanning both
-        assert closed[1].n_events == 2
-        assert closed[1].session_start == pd.Timestamp("2026-01-01 00:00:00")
-        assert closed[1].session_end == pd.Timestamp("2026-01-01 00:40:00")
-        assert closed[2].n_events == 1
-
-
 class TestStreamingNearDupHardening:
     def test_cluster_chained_to_corpus_is_dropped_whole(self, spark, tmp_path):
         """A batch cluster must drop even when only a NON-keeper member
@@ -376,68 +318,3 @@ class TestStreamingNearDupHardening:
         neardup_filter_batch(df, state, batch_id=0)  # retry, same batch
         n2 = spark.read.parquet(f"{state}/bands").count()
         assert n1 == n2  # overwrite, not append
-
-
-class TestStreamingIntervalJoin:
-    def test_stream_matches_batch_interval_join(self, spark, tmp_path):
-        import pandas as pd
-
-        from pyshp_spark.operators.temporal import interval_join
-        from pyshp_spark.streaming import streaming_interval_join
-
-        events = pd.DataFrame(
-            {
-                "event_id": range(40),
-                "ts": pd.to_datetime(
-                    ["2026-01-01 00:00:00"] * 0
-                    + [f"2026-01-01 00:{m:02d}:30" for m in range(40)]
-                ),
-            }
-        )
-        ivs = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "incident_id": [1, 2],
-                    # [00:05, 00:15) and [00:30, 00:31)
-                    "start_us": [
-                        int(pd.Timestamp("2026-01-01 00:05:00").timestamp() * 1e6),
-                        int(pd.Timestamp("2026-01-01 00:30:00").timestamp() * 1e6),
-                    ],
-                    "end_us": [
-                        int(pd.Timestamp("2026-01-01 00:15:00").timestamp() * 1e6),
-                        int(pd.Timestamp("2026-01-01 00:31:00").timestamp() * 1e6),
-                    ],
-                }
-            )
-        )
-        src = tmp_path / "iv_in"
-        src.mkdir()
-        events.to_parquet(
-            src / "p.parquet", coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-        stream = spark.readStream.schema(
-            "event_id bigint, ts timestamp"
-        ).parquet(str(src))
-        q = (
-            streaming_interval_join(stream, ivs)
-            .writeStream.format("memory")
-            .queryName("ivjoin")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (r.event_id, r.incident_id)
-                for r in spark.sql("SELECT * FROM ivjoin").collect()
-            }
-        finally:
-            q.stop()
-        batch = {
-            (r.event_id, r.incident_id)
-            for r in interval_join(
-                spark.createDataFrame(events), ivs
-            ).collect()
-        }
-        assert got == batch and len(got) == 11  # 10 in window 1, 1 in window 2
