@@ -210,25 +210,23 @@ def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
     The guard is byte-aware, not just row-count-aware: a few million
     rows of small diamonds broadcast fine, but the same row count of
     large multipart WKB would OOM the driver collect.  Once the row
-    probe passes (n is bounded), build-side bytes are measured EXACTLY
-    with one sum(length(wkb)) scan — a LIMIT-based estimate can miss
-    large rows sitting past the probed prefix, and this scan is cheap
-    next to the broadcast collect that would follow anyway."""
+    probe passes, build-side bytes are EXACT: the row count and
+    sum(length(wkb)) come from one aggregation over the same LIMIT, and
+    when n is within the guard the LIMIT covered every row."""
     if broadcast_polygons != "auto":
         return broadcast_polygons
-    n = polygons.limit(_MAX_BROADCAST_ROWS + 1).count()
+    # the length, not the WKB, crosses the LIMIT's single-partition exchange
+    wkb = F.length("wkb") if "wkb" in polygons.columns else F.lit(0)
+    n, total_wkb = (
+        polygons.select(wkb.alias("__l"))
+        .limit(_MAX_BROADCAST_ROWS + 1)
+        .agg(F.count(F.lit(1)), F.sum("__l"))
+        .first()
+    )
     if n > _MAX_BROADCAST_ROWS:
         return False
-    if n and "wkb" in polygons.columns:
-        total_wkb = (
-            polygons.select(F.length("wkb").alias("__l"))
-            .agg(F.sum("__l"))
-            .first()[0]
-        ) or 0
-        # 96 B/row slack for the bbox doubles, id attrs and Arrow offsets
-        if total_wkb + n * 96.0 > _MAX_BROADCAST_BYTES:
-            return False
-    return True
+    # 96 B/row slack for the bbox doubles, id attrs and Arrow offsets
+    return (total_wkb or 0) + n * 96.0 <= _MAX_BROADCAST_BYTES
 
 
 def point_in_polygon_join(
@@ -861,30 +859,13 @@ def tile_assignment(
             .withColumn("__tymax", lat1)
         )
         gcols = _polygon_attr_cols(polygons, polygon_cols)
-        build = _explode_bbox_cover(
-            polygons.select("xmin", "ymin", "xmax", "ymax", *gcols), grid
+        return bbox_overlap_join(
+            boxed,
+            polygons.select("xmin", "ymin", "xmax", "ymax", *gcols),
+            grid,
+            rect_cols=("__txmin", "__tymin", "__txmax", "__tymax"),
+            out_cols=tiles.columns + gcols,
         )
-        probe = _explode_bbox_cover(
-            boxed, grid, "__txmin", "__tymin", "__txmax", "__tymax"
-        )
-        cand = probe.join(F.broadcast(build), on=_P + "cell").where(
-            (F.col("__txmin") <= F.col("xmax"))
-            & (F.col("xmin") <= F.col("__txmax"))
-            & (F.col("__tymin") <= F.col("ymax"))
-            & (F.col("ymin") <= F.col("__tymax"))
-        )
-        # responsibility cell: the pair is emitted only from the cell
-        # holding the overlap rectangle's min corner (in BOTH covers by
-        # construction) — dedup is a codegen'd filter, zero shuffle
-        cand = cand.where(
-            F.col(_P + "cell")
-            == grid.cell_expr(
-                F.greatest(F.col("__txmin"), F.col("xmin")),
-                F.greatest(F.col("__tymin"), F.col("ymin")),
-            )
-        )
-        out_cols = tiles.columns + gcols
-        return cand.select(*out_cols)
     raise ValueError(f"unknown tile_assignment mode {mode!r}")
 
 

@@ -7,7 +7,10 @@ The most idiomatic way to expose the ingest (SURVEY §2.1 S1/S3/S6):
 
 - one input partition per .shp file (the format's natural parallelism
   unit); executors parse bytes straight into Arrow RecordBatches;
-- schema inferred once on the driver from the first file's headers;
+- schema from every file's dbf header on the driver
+  (``shapefile.layer_schema``), the rule ``read_shapefiles`` uses too;
+- ``spark.readStream.format("shapefile")`` reads a landing directory,
+  each new file parsed once in an executor task;
 - options: ``bbox="x0,y0,x1,y1"`` (spatial pushdown at the byte level,
   reference sf.py:1683-1687 semantics), ``fields="A,B"`` (dbf column
   projection), ``encoding=``;
@@ -22,6 +25,7 @@ from __future__ import annotations
 
 import glob
 import os
+from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -33,18 +37,16 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
+    WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
-
-def _paths(path: str) -> list[str]:
-    if path.endswith(".shp"):
-        return [path]
-    out = sorted(glob.glob(os.path.join(path, "*.shp")))
-    if not out:
-        raise FileNotFoundError(f"no .shp files under {path}")
-    return out
+from pyshp_spark.sources.shapefile import (
+    GEOM_FIELDS,
+    _paths,
+    layer_schema,
+    read_shapefile_table,
+)
 
 
 def _parse_bbox_option(s: str | None):
@@ -56,58 +58,23 @@ def _parse_bbox_option(s: str | None):
     return tuple(vals)
 
 
-def _read_pair(shp_path: str, bbox, fields, encoding, encoding_errors="strict"):
-    from pyshp_spark.sources.shapefile import (  # noqa: PLC0415
-        parse_dbf_bytes,
-        parse_shp_bytes,
-    )
-
-    with open(shp_path, "rb") as f:
-        shp = f.read()
-    geoms = parse_shp_bytes(shp, bbox=bbox)
-    dbf_path = shp_path[:-4] + ".dbf"
-    if os.path.exists(dbf_path):
-        with open(dbf_path, "rb") as f:
-            dbf = f.read()
-        attrs = parse_dbf_bytes(
-            dbf, fields=fields, encoding=encoding, encoding_errors=encoding_errors
-        )
-        geoms = geoms.merge(attrs, on="oid", how="inner", sort=True)
-    geoms.insert(0, "src", shp_path)
-    return geoms
-
-
-def _encoding_errors_option(options) -> str:
-    """The reference reader exposes an ``encodingErrors`` mode passed
-    straight to bytes.decode (reference sf.py:493-517, default strict);
-    mirror it as a data source option (both spellings accepted)."""
-    return options.get("encodingErrors", options.get("encoding_errors", "strict"))
-
-
-def _dbf_field_specs(shp_path: str) -> list[tuple[str, str, int]]:
-    """(name, type, decimal) descriptors from the sibling .dbf's header
-    (header-only read: 32 B/field descriptor, no record parsing)."""
-    import struct  # noqa: PLC0415
-
-    dbf_path = shp_path[:-4] + ".dbf"
-    if not os.path.exists(dbf_path):
-        return []
-    with open(dbf_path, "rb") as f:
-        head = f.read(32)
-        if len(head) < 32:
-            return []
-        header_len = struct.unpack_from("<H", head, 8)[0]
-        rest = f.read(max(header_len - 32, 0))
-    specs = []
-    off = 0
-    while off < len(rest) and rest[off : off + 1] != b"\x0d":
-        raw = rest[off : off + 32]
-        if len(raw) < 18:
-            break  # truncated descriptor (corrupt header): stop cleanly
-        name = raw[:11].split(b"\x00", 1)[0].decode("ascii", "replace")
-        specs.append((name, chr(raw[11]), raw[17]))
-        off += 32
-    return specs
+def _read_options(options) -> tuple[str, dict]:
+    """The path option, and the per-file read's keyword arguments from
+    the rest.  ``encodingErrors`` mirrors the reference reader's mode
+    passed straight to bytes.decode (reference sf.py:493-517, default
+    strict); both spellings are accepted."""
+    path = options.get("path")
+    if not path:
+        raise ValueError("shapefile data source requires a path")
+    f = options.get("fields")
+    return path, {
+        "bbox": _parse_bbox_option(options.get("bbox")),
+        "fields": [c.strip() for c in f.split(",")] if f else None,
+        "encoding": options.get("encoding", "utf-8"),
+        "encoding_errors": options.get(
+            "encodingErrors", options.get("encoding_errors", "strict")
+        ),
+    }
 
 
 class _FilePartition(InputPartition):
@@ -115,54 +82,22 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-def _to_arrow_table(pdf, schema: StructType):
-    """pandas -> Arrow against the inferred schema, tolerating per-file
-    dtype drift: a reindexed missing column arrives as all-NaN float64
-    even when the schema says list/string — coerce to object so the
-    cast goes value-wise (None -> null) instead of failing in the
-    NumPyConverter."""
-    import pyarrow as pa  # noqa: PLC0415
-    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
-
-    arrow_schema = to_arrow_schema(schema)
-    pdf = pdf.reindex(columns=[f.name for f in schema.fields])
-    for fld in arrow_schema:
-        # any non-numeric arrow target (list, string, binary, date,
-        # bool) needs object dtype with real Nones — the reindexed
-        # NaN-float column would fail the NumPyConverter cast
-        if (
-            not (pa.types.is_floating(fld.type) or pa.types.is_integer(fld.type))
-            and pdf[fld.name].dtype != object
-        ):
-            col = pdf[fld.name].astype(object)
-            pdf[fld.name] = col.where(col.notna(), None)
-    return pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-
-
 class ShapefileReader(DataSourceReader):
     def __init__(self, options, schema: StructType):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("shapefile data source requires a path")
-        self._bbox = _parse_bbox_option(options.get("bbox"))
-        f = options.get("fields")
-        self._fields = [c.strip() for c in f.split(",")] if f else None
-        self._encoding = options.get("encoding", "utf-8")
-        self._encoding_errors = _encoding_errors_option(options)
-        self._schema = schema
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+        self._path, self._read = _read_options(options)
+        self._schema = to_arrow_schema(schema)
 
     def partitions(self):
         return [_FilePartition(p) for p in _paths(self._path)]
 
     def read(self, partition):
-        pdf = _read_pair(
-            partition.path, self._bbox, self._fields, self._encoding,
-            self._encoding_errors,
-        )
-        # reindex (not select, inside _to_arrow_table): a file missing
-        # the inferred dbf columns (e.g. no sibling .dbf in a mixed
-        # directory) yields nulls there instead of crashing the task
-        yield from _to_arrow_table(pdf, self._schema).to_batches()
+        # a file missing some of the layer's dbf columns (e.g. no sibling
+        # .dbf in a mixed directory) yields nulls there, not a crash
+        yield from read_shapefile_table(
+            partition.path, self._schema, **self._read
+        ).to_batches()
 
 
 class ShapefilePushdownReader(ShapefileReader):
@@ -174,9 +109,8 @@ class ShapefilePushdownReader(ShapefileReader):
         """Translate bbox-column comparisons into the byte-level bbox
         prune; every filter is returned (= not handled), so Spark still
         applies them exactly — pruning only, no correctness transfer."""
-        x0, y0, x1, y1 = (
-            self._bbox if self._bbox else (-float("inf"), -float("inf"),
-                                           float("inf"), float("inf"))
+        x0, y0, x1, y1 = self._read["bbox"] or (
+            -float("inf"), -float("inf"), float("inf"), float("inf")
         )
         for flt in filters:
             col = getattr(flt, "attribute", None)
@@ -195,7 +129,7 @@ class ShapefilePushdownReader(ShapefileReader):
             elif isinstance(flt, (LessThan, LessThanOrEqual)) and name == "ymin":
                 y1 = min(y1, float(val))
         if any(v not in (float("inf"), -float("inf")) for v in (x0, y0, x1, y1)):
-            self._bbox = (x0, y0, x1, y1)
+            self._read["bbox"] = (x0, y0, x1, y1)
         return filters  # Spark re-applies everything
 
 
@@ -251,10 +185,7 @@ def _wkb_to_payload(wkb: bytes):
     raise ValueError(f"unsupported WKB geometry type {gtype}")
 
 
-_GEOM_COLS = {
-    "src", "oid", "shape_type", "wkb", "xmin", "ymin", "xmax", "ymax",
-    "num_parts", "num_points", "z", "m", "part_types",
-}
+_GEOM_COLS = {"src", *GEOM_FIELDS}
 
 
 def _dbf_spec_for(field) -> tuple[str, str, int, int]:
@@ -283,11 +214,6 @@ def _dbf_spec_for(field) -> tuple[str, str, int, int]:
     raise ValueError(
         f"column {field.name}: type {t} has no dbf encoding"
     )
-
-
-from dataclasses import dataclass  # noqa: E402
-
-from pyspark.sql.datasource import WriterCommitMessage  # noqa: E402
 
 
 @dataclass
@@ -408,90 +334,8 @@ class ShapefileDataSource(DataSource):
         return "shapefile"
 
     def schema(self):
-        from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
-
-        import pandas as pd  # noqa: PLC0415
-        import pyarrow as pa  # noqa: PLC0415
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("shapefile data source requires a path")
-        bbox = _parse_bbox_option(self.options.get("bbox"))
-        f = self.options.get("fields")
-        fields = [c.strip() for c in f.split(",")] if f else None
-        enc = self.options.get("encoding", "utf-8")
-        errs = _encoding_errors_option(self.options)
-        paths = _paths(path)
-        # value dtypes come from the first file's PARSED rows; attribute
-        # COVERAGE comes from every file's dbf header (32 B per field
-        # descriptor — cheap), so a column present only in later files
-        # is not silently dropped by read()'s reindex.  bbox=None here:
-        # a filter that empties the first file must not degrade the
-        # inferred dtypes.
-        sample = _read_pair(paths[0], None, fields, enc, errs)
-        extra: list[tuple[str, str, int]] = []
-        seen = set(sample.columns)
-        for p in paths[1:]:
-            for name, ftype, decimal in _dbf_field_specs(p):
-                if name not in seen and (fields is None or name in fields):
-                    seen.add(name)
-                    extra.append((name, ftype, decimal))
-        # the sample's VALUES are discarded (only table.schema survives),
-        # so later-file-only columns get a dummy value of the dtype their
-        # dbf descriptor declares — same type mapping as parse_dbf_bytes
-        n = len(sample)
-        for name, ftype, decimal in extra:
-            if ftype in "NF" and not decimal:
-                sample[name] = pd.array([1] * n, dtype="Int64")
-            elif ftype in "NF":
-                sample[name] = pd.Series([1.0] * n, dtype="float64")
-            elif ftype == "L":
-                sample[name] = pd.array([True] * n, dtype="boolean")
-            elif ftype == "D":
-                import datetime as _dt  # noqa: PLC0415
-
-                sample[name] = pd.Series([_dt.date(1970, 1, 1)] * n, dtype="object")
-            else:
-                sample[name] = pd.Series([""] * n, dtype="object")
-        table = pa.Table.from_pandas(sample.head(10), preserve_index=False)
-        # an all-None sample column (2D file's z/m, empty first file)
-        # infers as arrow null — unusable downstream and un-convertible
-        # by read(); pin such columns to their real ingest types.  dbf
-        # columns get the type their DESCRIPTOR declares (read from
-        # every file's header), so an empty first file cannot degrade a
-        # date column to string.
-        known = {
-            "wkb": pa.binary(),
-            "z": pa.list_(pa.float64()),
-            "m": pa.list_(pa.float64()),
-            "part_types": pa.list_(pa.int32()),
-        }
-        for p in paths:
-            for name, ftype, decimal in _dbf_field_specs(p):
-                if name in known:
-                    continue
-                if ftype in "NF" and not decimal:
-                    known[name] = pa.int64()
-                elif ftype in "NF":
-                    known[name] = pa.float64()
-                elif ftype == "D":
-                    known[name] = pa.date32()
-                elif ftype == "L":
-                    known[name] = pa.bool_()
-                else:
-                    known[name] = pa.string()
-        schema = table.schema
-        for i, fld in enumerate(schema):
-            if pa.types.is_null(fld.type):
-                schema = schema.set(
-                    i, pa.field(fld.name, known.get(fld.name, pa.string()))
-                )
-            elif n == 0 and fld.name in known:
-                # zero-row first file: pandas degrades empty object
-                # columns (dates, strings) through the merge — the dbf
-                # descriptor knows the real type
-                schema = schema.set(i, pa.field(fld.name, known[fld.name]))
-        return from_arrow_schema(schema)
+        path, read = _read_options(self.options)
+        return layer_schema(_paths(path), read["fields"])
 
     def reader(self, schema: StructType) -> DataSourceReader:
         cls = ShapefilePushdownReader if _pushdown_enabled() else ShapefileReader
@@ -500,31 +344,19 @@ class ShapefileDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool):
         return ShapefileWriter(self.options, schema, overwrite)
 
-    def simpleStreamReader(self, schema: StructType):
-        return ShapefileStreamReader(self.options, schema)
-
     def streamReader(self, schema: StructType):
-        """Partition-parallel streaming reader (the default): file
-        listing stays on the driver, but each new .shp is PARSED in an
-        executor task.  ``option("stream_parallel", "false")`` falls
-        back to the driver-side simple reader (Spark retries with
-        ``simpleStreamReader`` on NotImplementedError)."""
-        if self.options.get("stream_parallel", "true").lower() == "false":
-            # must be PySparkNotImplementedError: that is the exception
-            # class the engine's _streamReader catches to retry with
-            # simpleStreamReader (pyspark/sql/datasource_internal.py)
-            from pyspark.errors import PySparkNotImplementedError  # noqa: PLC0415
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (stream_parallel=false)"},
-            )
         return ShapefileParallelStreamReader(self.options, schema)
 
 
-class _ShpStreamConfig:
-    """Shared option parsing + seen-file-log offset arithmetic for both
-    stream reader variants.
+class ShapefileParallelStreamReader(DataSourceStreamReader):
+    """Partition-parallel streaming landing-directory source:
+    ``spark.readStream.format("shapefile").load(dir)`` picks up each
+    new .shp (+ sibling .dbf) exactly once.  ``latestOffset()`` lists
+    the directory on the driver (cheap metadata), ``partitions()``
+    plans one InputPartition per new file, and ``read()`` parses the
+    file bytes into Arrow batches INSIDE the executor task — a
+    backfill dropping hundreds of files is parsed cluster-wide, not on
+    the driver.
 
     Offset format: ``{"seen": [paths...]}`` — the same protocol as
     Spark's built-in FileStreamSource, except the log is NOT compacted:
@@ -535,81 +367,16 @@ class _ShpStreamConfig:
     partitions) or compact the checkpoint out-of-band."""
 
     def __init__(self, options, schema: StructType):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("shapefile stream source requires a path")
-        self._bbox = _parse_bbox_option(options.get("bbox"))
-        f = options.get("fields")
-        self._fields = [c.strip() for c in f.split(",")] if f else None
-        self._encoding = options.get("encoding", "utf-8")
-        self._encoding_errors = _encoding_errors_option(options)
-        self._schema = schema
-        self._cols = [fld.name for fld in schema.fields]
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
-    def _list_now(self) -> list[str]:
-        return sorted(glob.glob(os.path.join(self._path, "*.shp")))
-
-    def _pdf_for(self, path: str):
-        pdf = _read_pair(
-            path, self._bbox, self._fields, self._encoding, self._encoding_errors
-        )
-        # reindex, not select: a landing file without a sibling .dbf (or
-        # with fewer dbf fields than the inferred schema) yields nulls
-        # instead of a KeyError that kills the whole streaming query
-        return pdf.reindex(columns=self._cols)
-
-
-class ShapefileStreamReader(_ShpStreamConfig, SimpleDataSourceStreamReader):
-    """Driver-side streaming variant: appropriate when per-batch volume
-    is small (the prefetched batch is materialized on the driver).  See
-    ShapefileParallelStreamReader for the executor-parsed default."""
-
-    def initialOffset(self):
-        return {"seen": []}
-
-    def _rows_for(self, paths):
-        # a list_iterator (not a generator): the engine copies/pickles
-        # the prefetched batch into its offset cache, and generators
-        # cannot be pickled
-        rows = []
-        for p in paths:
-            pdf = self._pdf_for(p)
-            # reindexed-missing columns arrive as NaN floats; the tuple
-            # path needs real Nones for non-double schema fields
-            pdf = pdf.astype(object).where(pdf.notna(), None)
-            rows.extend(tuple(r) for r in pdf.itertuples(index=False))
-        return iter(rows)
-
-    def read(self, start):
-        seen = set(start.get("seen", []))
-        new = [p for p in self._list_now() if p not in seen]
-        end = {"seen": sorted(seen | set(new))}
-        return self._rows_for(new), end
-
-    def readBetweenOffsets(self, start, end):
-        seen = set(start.get("seen", []))
-        target = [p for p in end.get("seen", []) if p not in seen]
-        return self._rows_for(sorted(target))
-
-    def commit(self, end):
-        pass
-
-
-class ShapefileParallelStreamReader(_ShpStreamConfig, DataSourceStreamReader):
-    """Partition-parallel streaming landing-directory source:
-    ``spark.readStream.format("shapefile").load(dir)`` picks up each
-    new .shp (+ sibling .dbf) exactly once.  ``latestOffset()`` lists
-    the directory on the driver (cheap metadata), ``partitions()``
-    plans one InputPartition per new file, and ``read()`` parses the
-    file bytes into Arrow batches INSIDE the executor task — a
-    backfill dropping hundreds of files is parsed cluster-wide, not on
-    the driver."""
+        self._path, self._read = _read_options(options)
+        self._schema = to_arrow_schema(schema)
 
     def initialOffset(self):
         return {"seen": []}
 
     def latestOffset(self):
-        return {"seen": self._list_now()}
+        return {"seen": sorted(glob.glob(os.path.join(self._path, "*.shp")))}
 
     def partitions(self, start, end):
         seen = set(start.get("seen", []))
@@ -617,8 +384,11 @@ class ShapefileParallelStreamReader(_ShpStreamConfig, DataSourceStreamReader):
         return [_FilePartition(p) for p in sorted(new)]
 
     def read(self, partition):
-        pdf = self._pdf_for(partition.path)
-        yield from _to_arrow_table(pdf, self._schema).to_batches()
+        # a landing file without a sibling .dbf yields nulls instead of
+        # an error that kills the whole streaming query
+        yield from read_shapefile_table(
+            partition.path, self._schema, **self._read
+        ).to_batches()
 
     def commit(self, end):
         pass

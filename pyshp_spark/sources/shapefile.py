@@ -18,11 +18,13 @@ reproduced exactly (cites into reference src/shapefile.py):
 Architecture difference from the reference (by design, not a port): the
 reference is a lazy record-at-a-time reader; here each *file* is parsed
 in one shot into Arrow-friendly columns (WKB + bbox + typed attrs) by a
-task, and a directory of shapefiles becomes a DataFrame with per-file
-parallelism via ``mapInPandas`` (the natural partitioning unit for this
-format).  After ingest everything is columnar — bbox columns enable
-Parquet min/max skipping where the reference re-parses bytes per query
-(sf.py:1683-1687).
+task.  A directory of shapefiles becomes a DataFrame with one task per
+file (the natural partitioning unit for this format), and every reader
+of this package (``read_shapefiles``, the ``shapefile`` batch and
+stream data source) shares one schema rule, :func:`layer_schema`, and
+one per-file read, :func:`read_shapefile_table`.  After ingest
+everything is columnar — bbox columns enable Parquet min/max skipping
+where the reference re-parses bytes per query (sf.py:1683-1687).
 """
 
 from __future__ import annotations
@@ -31,14 +33,13 @@ import datetime as _dt
 import glob
 import os
 import struct
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyshp_spark.kernels import wkb as _wkb
 from pyshp_spark.kernels.rings import organize_polygon_rings
-from pyshp_spark.session_conf import arrow_enabled
 
 # shape type constants (public ESRI spec / reference sf.py:65-79)
 NULL = 0
@@ -74,21 +75,23 @@ _HAS_M = {
 
 ISDATA_LOWER_BOUND = -1e38  # m below this is NoData (reference sf.py:793-798)
 
-# geometry columns every ingested row carries (attrs follow)
-GEOM_FIELDS = [
-    "oid",
-    "shape_type",
-    "wkb",
-    "xmin",
-    "ymin",
-    "xmax",
-    "ymax",
-    "num_parts",
-    "num_points",
-    "z",
-    "m",
-    "part_types",
-]
+# geometry columns every ingested row carries (attrs follow), with
+# their Arrow types
+_GEOM_TYPES = {
+    "oid": pa.int64(),
+    "shape_type": pa.int32(),
+    "wkb": pa.binary(),
+    "xmin": pa.float64(),
+    "ymin": pa.float64(),
+    "xmax": pa.float64(),
+    "ymax": pa.float64(),
+    "num_parts": pa.int32(),
+    "num_points": pa.int32(),
+    "z": pa.list_(pa.float64()),
+    "m": pa.list_(pa.float64()),
+    "part_types": pa.list_(pa.int32()),
+}
+GEOM_FIELDS = list(_GEOM_TYPES)
 
 
 # endianness byte + Polygon type + numRings=1 (LE), the hot-path prefix
@@ -320,16 +323,7 @@ def parse_dbf_bytes(
     if len(dbf) < 32:
         raise ValueError("not a .dbf file: header too short")
     num_records, header_len, record_len = struct.unpack_from("<IHH", dbf, 4)
-    specs = []  # (name, type, size, decimal)
-    off = 32
-    while off < header_len - 1 and dbf[off] != 0x0D:
-        raw = dbf[off : off + 32]
-        name = raw[:11].split(b"\x00", 1)[0].decode("ascii", "replace")
-        ftype = chr(raw[11])
-        size = raw[16]
-        decimal = raw[17]
-        specs.append((name, ftype, size, decimal))
-        off += 32
+    specs = _dbf_descriptors(dbf)
 
     body = dbf[header_len:]
     n = min(num_records, len(body) // record_len) if record_len else 0
@@ -377,6 +371,21 @@ def parse_dbf_bytes(
         elif ftype in "NF":
             df[name] = df[name].astype("float64")
     return df
+
+
+def _dbf_descriptors(head: bytes) -> list[tuple[str, str, int, int]]:
+    """(name, type, size, decimal) of each field descriptor in a .dbf
+    header; ``head`` holds at least the header.  A truncated descriptor
+    ends the list."""
+    header_len = struct.unpack_from("<H", head, 8)[0]
+    specs = []
+    off = 32
+    while off < header_len - 1 and off + 18 <= len(head) and head[off] != 0x0D:
+        raw = head[off : off + 32]
+        name = raw[:11].split(b"\x00", 1)[0].decode("ascii", "replace")
+        specs.append((name, chr(raw[11]), raw[16], raw[17]))
+        off += 32
+    return specs
 
 
 def _parse_numeric_column_fast(
@@ -477,6 +486,8 @@ def shapefile_to_pandas(
     dbf: bytes | None = None,
     bbox: tuple[float, float, float, float] | None = None,
     fields: list[str] | None = None,
+    encoding: str = "utf-8",
+    encoding_errors: str = "strict",
 ) -> pd.DataFrame:
     """One shapefile -> pandas frame of geometry + attribute columns.
 
@@ -486,7 +497,9 @@ def shapefile_to_pandas(
     geoms = parse_shp_bytes(shp, bbox=bbox)
     if dbf is None:
         return geoms
-    attrs = parse_dbf_bytes(dbf, fields=fields)
+    attrs = parse_dbf_bytes(
+        dbf, fields=fields, encoding=encoding, encoding_errors=encoding_errors
+    )
     return geoms.merge(attrs, on="oid", how="inner", sort=True)
 
 
@@ -555,90 +568,156 @@ def read_url_shapefile(url: str, bbox=None, fields=None) -> pd.DataFrame:
     return shapefile_to_pandas(shp, dbf, bbox=bbox, fields=fields)
 
 
-def _sample_schema(spark, sample: pd.DataFrame):
-    """A layer's Spark schema from its first rows, inferred under Arrow:
-    on a 2D layer the z, m and part_types columns are all None, which
-    Arrow types as null but the row-pickled inference rejects
-    (CANNOT_DETERMINE_TYPE)."""
-    with arrow_enabled(spark):
-        return spark.createDataFrame(sample.head(10)).schema
+
+
+# ------------------------------------------------------------- layers ----
+
+def _dbf_type(ftype: str, decimal: int) -> pa.DataType:
+    """The Arrow type of the values parse_dbf_bytes gives a field."""
+    if ftype in "NF":
+        return pa.float64() if decimal else pa.int64()
+    return {"D": pa.date32(), "L": pa.bool_()}.get(ftype, pa.string())
+
+
+def _paths(path: str) -> list[str]:
+    """The .shp files ``path`` names: itself, or those directly in the
+    directory, sorted."""
+    if path.endswith(".shp"):
+        out = [path] if os.path.exists(path) else []
+    else:
+        out = sorted(glob.glob(os.path.join(path, "*.shp")))
+    if not out:
+        raise FileNotFoundError(f"no .shp files at {path}")
+    return out
+
+
+def _dbf_field_specs(shp_path: str) -> list[tuple[str, str, int, int]]:
+    """The field descriptors of the sibling .dbf (header-only read: 32 B
+    per field, no records); none when there is no .dbf."""
+    dbf_path = shp_path[:-4] + ".dbf"
+    if not os.path.exists(dbf_path):
+        return []
+    with open(dbf_path, "rb") as f:
+        head = f.read(32)
+        if len(head) < 32:
+            return []
+        head += f.read(max(struct.unpack_from("<H", head, 8)[0] - 32, 0))
+    return _dbf_descriptors(head)
+
+
+def layer_schema(paths=(), fields=None, sample: pd.DataFrame | None = None):
+    """A layer's Spark schema: ``src``, the geometry columns, then one
+    column per dbf field of ``paths`` in first-seen order (projected to
+    ``fields``), typed by its descriptor.  Only headers are read, so no
+    ``bbox`` and no empty or dbf-less file can change the schema.
+
+    ``sample`` (a parsed frame, for sources with no headers to read)
+    adds its other columns with the Arrow type of their values, string
+    where every value is None."""
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
+
+    # src: the file or URL the row came from
+    types = {"src": pa.string(), **_GEOM_TYPES}
+    for p in paths:
+        for name, ftype, _size, decimal in _dbf_field_specs(p):
+            if fields is None or name in fields:
+                types.setdefault(name, _dbf_type(ftype, decimal))
+    if sample is not None:
+        rest = sample.drop(columns=[c for c in sample.columns if c in types])
+        for fld in pa.Schema.from_pandas(rest, preserve_index=False):
+            types[fld.name] = pa.string() if pa.types.is_null(fld.type) else fld.type
+    return from_arrow_schema(pa.schema(list(types.items())))
+
+
+def _to_arrow_table(pdf: pd.DataFrame, schema: pa.Schema) -> pa.Table:
+    """``pdf`` as an Arrow table of ``schema``: a column ``pdf`` lacks
+    (no .dbf, or a field only other files have) is all NULL, and one
+    ``schema`` lacks is dropped."""
+    if pdf.empty:
+        # pandas types the columns of a frame built from empty lists as
+        # float64, which does not convert to list or string columns
+        return schema.empty_table()
+    return pa.table(
+        [
+            pa.array(pdf[f.name], type=f.type, from_pandas=True)
+            if f.name in pdf.columns
+            else pa.nulls(len(pdf), f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def read_shapefile_table(
+    shp_path: str,
+    schema: pa.Schema,
+    bbox=None,
+    fields=None,
+    encoding: str = "utf-8",
+    encoding_errors: str = "strict",
+) -> pa.Table:
+    """One .shp (with its sibling .dbf when there is one) as an Arrow
+    table of the layer's ``schema`` — the per-file read every reader
+    runs in its task."""
+    with open(shp_path, "rb") as f:
+        shp = f.read()
+    dbf_path = shp_path[:-4] + ".dbf"
+    dbf = None
+    if os.path.exists(dbf_path):
+        with open(dbf_path, "rb") as f:
+            dbf = f.read()
+    pdf = shapefile_to_pandas(shp, dbf, bbox, fields, encoding, encoding_errors)
+    pdf.insert(0, "src", shp_path)
+    return _to_arrow_table(pdf, schema)
+
+
+def _map_sources(spark, sources: list[str], schema, read_one):
+    """One task per source name; ``read_one(name, arrow_schema)`` gives
+    its rows as an Arrow table of ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    arrow_schema = to_arrow_schema(schema)
+    names = spark.createDataFrame([(s,) for s in sources], "name string")
+
+    def read(batches):
+        for b in batches:
+            for name in b.column(0).to_pylist():
+                yield from read_one(name, arrow_schema).to_batches()
+
+    return names.repartition(len(sources)).mapInArrow(read, schema)
 
 
 def read_shapefile_urls(spark, urls: list[str], bbox=None, fields=None):
     """Distributed URL ingest: one task per URL, fetched and parsed ON
-    THE EXECUTORS (the driver never touches the bytes) — the scale path
-    for pulling many remote shapefiles into one DataFrame.  Schema is
-    inferred from the first URL."""
+    THE EXECUTORS — the scale path for pulling many remote shapefiles
+    into one DataFrame.  The driver fetches only the first URL, whose
+    frame gives the schema (:func:`layer_schema` with no headers):
+    columns only later URLs have are dropped, and columns they lack are
+    NULL."""
     if not urls:
         raise ValueError("no urls")
     sample = read_url_shapefile(urls[0], bbox=bbox, fields=fields)
     sample.insert(0, "src", urls[0])
-    schema = _sample_schema(spark, sample)
 
-    urls_df = spark.createDataFrame(
-        [(u,) for u in urls], "url string"
-    ).repartition(len(urls))
+    def read_one(url, schema):
+        pdf = read_url_shapefile(url, bbox=bbox, fields=fields)
+        pdf.insert(0, "src", url)
+        return _to_arrow_table(pdf, schema)
 
-    def parse(iterator: Iterable[pd.DataFrame]):
-        for pdf in iterator:
-            for (url,) in pdf.itertuples(index=False):
-                out = read_url_shapefile(url, bbox=bbox, fields=fields)
-                out.insert(0, "src", url)
-                yield out
-
-    return urls_df.mapInPandas(parse, schema=schema)
-
-
-def _pairs_in_dir(path: str) -> list[tuple[str, str | None]]:
-    shps = sorted(glob.glob(os.path.join(path, "*.shp")))
-    out = []
-    for s in shps:
-        d = s[:-4] + ".dbf"
-        out.append((s, d if os.path.exists(d) else None))
-    return out
+    return _map_sources(spark, urls, layer_schema(sample=sample), read_one)
 
 
 def read_shapefiles(spark, path: str, bbox=None, fields=None):
-    """Directory (or single .shp path) -> Spark DataFrame.
+    """Directory (or single .shp path) -> Spark DataFrame, with the
+    rows and schema of ``spark.read.format("shapefile").load(path)``.
 
-    One task per shapefile (the format's natural parallelism unit);
-    parsing runs as an Arrow-batched ``mapInPandas`` so geometry lands
-    directly in columnar form.  Schema is inferred from the first file
-    on the driver (headers only would suffice; cheap at these sizes).
-    """
-    pairs = (
-        [(path, path[:-4] + ".dbf" if os.path.exists(path[:-4] + ".dbf") else None)]
-        if path.endswith(".shp")
-        else _pairs_in_dir(path)
+    The driver lists the files and reads their dbf headers for the
+    schema (:func:`layer_schema`); one ``mapInArrow`` task per file
+    then runs :func:`read_shapefile_table`.  It does not go through the
+    data source: a Python data source's first use starts planner
+    daemons that stay alive for the session."""
+    paths = _paths(path)
+    return _map_sources(
+        spark, paths, layer_schema(paths, fields),
+        lambda p, schema: read_shapefile_table(p, schema, bbox, fields),
     )
-    if not pairs:
-        raise FileNotFoundError(f"no .shp files under {path}")
-
-    with open(pairs[0][0], "rb") as f:
-        shp0 = f.read()
-    dbf0 = None
-    if pairs[0][1]:
-        with open(pairs[0][1], "rb") as f:
-            dbf0 = f.read()
-    sample = shapefile_to_pandas(shp0, dbf0, bbox=bbox, fields=fields)
-    sample.insert(0, "src", pairs[0][0])
-    schema = _sample_schema(spark, sample)
-
-    paths_df = spark.createDataFrame(
-        [(s, d) for s, d in pairs], "shp_path string, dbf_path string"
-    ).repartition(len(pairs))
-
-    def parse(iterator: Iterable[pd.DataFrame]):
-        for pdf in iterator:
-            for shp_path, dbf_path in pdf.itertuples(index=False):
-                with open(shp_path, "rb") as f:
-                    shp = f.read()
-                dbf = None
-                if dbf_path:
-                    with open(dbf_path, "rb") as f:
-                        dbf = f.read()
-                out = shapefile_to_pandas(shp, dbf, bbox=bbox, fields=fields)
-                out.insert(0, "src", shp_path)
-                yield out
-
-    return paths_df.mapInPandas(parse, schema=schema)

@@ -1,6 +1,6 @@
 """Round-3 fixes: dbf writer data-loss modes, encodingErrors
-pass-through, data source schema union, parallel stream reader, and
-the de-amplified MinHash band join."""
+pass-through, data source schema union, the executor-parsed stream
+reader, and the de-amplified MinHash band join."""
 
 import glob
 import io
@@ -193,17 +193,13 @@ class TestParallelStream:
             f.write(shp)
         os.rename(tmp, d / f"{base}.shp")
 
-    @pytest.mark.parametrize("parallel", ["true", "false"])
-    def test_stream_both_variants_pick_up_files_once(
-        self, spark, tmp_path, parallel
-    ):
-        d = tmp_path / f"land_{parallel}"
+    def test_stream_picks_up_files_once(self, spark, tmp_path):
+        d = tmp_path / "land"
         d.mkdir()
         self._mk_file(d, "f1", 1)
-        name = f"shp_stream_r3_{parallel}"
+        name = "shp_stream_r3"
         q = (
             spark.readStream.format("shapefile")
-            .option("stream_parallel", parallel)
             .load(str(d))
             .writeStream.format("memory")
             .queryName(name)

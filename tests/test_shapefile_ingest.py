@@ -9,6 +9,7 @@ round trip.
 """
 
 import io
+import os
 
 import numpy as np
 import pandas as pd
@@ -19,8 +20,11 @@ from pyshp_spark.kernels.wkb import wkb_rings
 from pyshp_spark.sources.shapefile import (
     parse_dbf_bytes,
     parse_shp_bytes,
+    read_shapefile_urls,
+    read_shapefiles,
     shapefile_to_pandas,
 )
+from pyshp_spark.sources.shp_writer import write_dbf, write_shp
 
 N = 80  # small but covers all pathologies + skew shapes
 
@@ -110,8 +114,6 @@ class TestSparkIngest:
         d = tmp_path_factory.mktemp("shpdir")
         for ext, buf in [("shp", shp), ("shx", shx), ("dbf", dbf)]:
             (d / f"poly.{ext}").write_bytes(buf)
-        from pyshp_spark.sources.shapefile import read_shapefiles
-
         df = read_shapefiles(spark, str(d))
         rows = df.count()
         assert rows == N
@@ -125,8 +127,6 @@ class TestSparkIngest:
         """A 2D polygon layer's z, m and part_types columns are all
         None; the schema inference must not depend on the session's
         Arrow setting."""
-        from pyshp_spark.sources.shapefile import read_shapefiles
-
         for ext, buf in zip(("shp", "shx", "dbf"), fixture_shapefile_bytes(n=20)):
             (tmp_path / f"layer.{ext}").write_bytes(buf)
         key = "spark.sql.execution.arrow.pyspark.enabled"
@@ -141,3 +141,124 @@ class TestSparkIngest:
         finally:
             spark.conf.set(key, prev)
         assert off.schema == on.schema
+
+
+def _write_layer(d, base, points, dbf=None):
+    """A point file ``base`` in ``d``; ``dbf`` is (specs, records) or
+    None for a file without a .dbf."""
+    shp, shx = write_shp([(1, p, None, None, None) for p in points])
+    (d / f"{base}.shp").write_bytes(shp)
+    (d / f"{base}.shx").write_bytes(shx)
+    if dbf is not None:
+        (d / f"{base}.dbf").write_bytes(write_dbf(*dbf))
+
+
+class TestOneSchemaRule:
+    """``read_shapefiles`` and ``spark.read.format("shapefile")`` give
+    the same schema and rows, on the layers where their schema rules
+    once differed."""
+
+    @pytest.fixture(autouse=True)
+    def _register(self, spark):
+        from pyshp_spark.sources.datasource import ShapefileDataSource  # noqa: PLC0415
+
+        spark.dataSource.register(ShapefileDataSource)
+
+    def _both(self, spark, d, bbox=None):
+        got = read_shapefiles(spark, str(d), bbox=bbox)
+        reader = spark.read.format("shapefile")
+        if bbox is not None:
+            reader = reader.option("bbox", ",".join(map(str, bbox)))
+        want = reader.load(str(d))
+        assert got.schema == want.schema
+
+        def rows(df):
+            return sorted(df.collect(), key=lambda r: (r.src, r.oid))
+
+        assert rows(got) == rows(want)
+        return got
+
+    def test_2d_layer_types_z_m_part_types(self, spark, tmp_path):
+        for ext, buf in zip(("shp", "shx", "dbf"), fixture_shapefile_bytes(n=20)):
+            (tmp_path / f"layer.{ext}").write_bytes(buf)
+        df = self._both(spark, tmp_path)
+        types = dict(df.dtypes)
+        assert (types["z"], types["m"], types["part_types"]) == (
+            "array<double>", "array<double>", "array<int>"
+        )
+        assert df.count() == 20
+
+    def test_column_only_a_later_file_has(self, spark, tmp_path):
+        _write_layer(tmp_path, "a", [(10.0, 20.0)],
+                     ([("COMMON", "N", 8, 0)], [[1]]))
+        _write_layer(tmp_path, "b", [(10.0, 20.0)],
+                     ([("COMMON", "N", 8, 0), ("ONLY_B", "C", 10, 0)],
+                      [[2, "hello"]]))
+        df = self._both(spark, tmp_path)
+        got = {(r.COMMON, r.ONLY_B) for r in df.collect()}
+        assert got == {(1, None), (2, "hello")}
+
+    def test_later_file_without_dbf_gives_typed_nulls(self, spark, tmp_path):
+        import datetime as dt  # noqa: PLC0415
+
+        specs = [("N0", "N", 8, 0), ("D0", "D", 8, 0), ("L0", "L", 1, 0),
+                 ("C0", "C", 10, 0)]
+        _write_layer(tmp_path, "a", [(1.0, 2.0)],
+                     (specs, [[7, dt.date(2020, 5, 17), True, "hi"]]))
+        _write_layer(tmp_path, "b", [(1.0, 2.0)])
+        df = self._both(spark, tmp_path)
+        types = dict(df.dtypes)
+        assert [types[c] for c in ("N0", "D0", "L0", "C0")] == [
+            "bigint", "date", "boolean", "string"
+        ]
+        rows = {os.path.basename(r.src): r for r in df.collect()}
+        a, b = rows["a.shp"], rows["b.shp"]
+        assert (a.N0, a.D0, a.L0, a.C0) == (7, dt.date(2020, 5, 17), True, "hi")
+        assert (b.N0, b.D0, b.L0, b.C0) == (None, None, None, None)
+
+    def test_bbox_that_empties_the_first_file(self, spark, tmp_path):
+        _write_layer(tmp_path, "a", [(10.0, 20.0)],
+                     ([("COMMON", "N", 8, 0)], [[1]]))
+        _write_layer(tmp_path, "b", [(10.0, 20.0)],
+                     ([("COMMON", "N", 8, 0), ("ONLY_B", "C", 10, 0)],
+                      [[2, "hello"]]))
+        df = self._both(spark, tmp_path, bbox=(1000.0, 1000.0, 1001.0, 1001.0))
+        assert df.count() == 0
+        assert dict(df.dtypes)["COMMON"] == "bigint"
+
+    def test_one_map_in_arrow_and_no_data_source_scan(self, spark, tmp_path):
+        _write_layer(tmp_path, "a", [(1.0, 2.0)], ([("V", "N", 8, 0)], [[1]]))
+        df = read_shapefiles(spark, str(tmp_path))
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # AQE prints both
+        assert plan.count("MapInArrow") == 1
+        assert "BatchScan" not in plan and "PythonDataSource" not in plan
+
+    def test_missing_path_raises_on_the_driver(self, spark, tmp_path):
+        with pytest.raises(FileNotFoundError):
+            read_shapefiles(spark, str(tmp_path / "nothing.shp"))
+        with pytest.raises(FileNotFoundError):
+            read_shapefiles(spark, str(tmp_path))
+
+
+def test_url_ingest_types_2d_layer_from_first_url(spark, tmp_path):
+    """Two 2D ``file://`` URLs, the second with an extra dbf column:
+    the first URL's frame gives the schema, so z/m/part_types are typed
+    lists and the extra column is dropped, not an error."""
+    a, b = tmp_path / "a", tmp_path / "b"
+    a.mkdir()
+    b.mkdir()
+    _write_layer(a, "layer", [(1.0, 2.0)], ([("COMMON", "N", 8, 0)], [[1]]))
+    _write_layer(b, "layer", [(3.0, 4.0)],
+                 ([("COMMON", "N", 8, 0), ("ONLY_B", "C", 10, 0)],
+                  [[2, "hello"]]))
+    urls = [f"file://{a}/layer.shp", f"file://{b}/layer.shp"]
+    df = read_shapefile_urls(spark, urls)
+    types = dict(df.dtypes)
+    assert (types["z"], types["m"], types["part_types"]) == (
+        "array<double>", "array<double>", "array<int>"
+    )
+    assert types["COMMON"] == "bigint" and "ONLY_B" not in types
+    rows = sorted((r.src, r.COMMON, r.xmin) for r in df.collect())
+    assert rows == [(urls[0], 1, 1.0), (urls[1], 2, 3.0)]

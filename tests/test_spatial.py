@@ -228,6 +228,33 @@ class TestTileAssignment:
         b = {(r.tile_x, r.tile_y, r.oid) for r in bbox.collect()}
         assert c <= b
 
+    def test_bbox_mode_pairs_match_numpy_overlap(
+        self, pts_df, poly_df, poly_pdf, img_pdf
+    ):
+        """Every (tile, polygon) pair whose bboxes overlap (inclusive),
+        each exactly once."""
+        from oracles import tilefrac_to_lonlat  # noqa: PLC0415
+
+        tiles = pts_df.select("tile_x", "tile_y", "zoom").dropDuplicates()
+        out = tile_assignment(tiles, poly_df, mode="bbox", polygon_cols=["oid"])
+        got = sorted((r.tile_x, r.tile_y, r.oid) for r in out.collect())
+        t = img_pdf[["tile_x", "tile_y", "zoom"]].drop_duplicates()
+        tx, ty, z = (t[c].to_numpy() for c in ("tile_x", "tile_y", "zoom"))
+        lon0, lat1 = tilefrac_to_lonlat(tx, ty, 0.0, 0.0, z)
+        lon1, lat0 = tilefrac_to_lonlat(tx + 1, ty + 1, 0.0, 0.0, z)
+        p = poly_pdf
+        hit = (
+            (lon0[:, None] <= p.xmax.to_numpy())
+            & (p.xmin.to_numpy() <= lon1[:, None])
+            & (lat0[:, None] <= p.ymax.to_numpy())
+            & (p.ymin.to_numpy() <= lat1[:, None])
+        )
+        ti, pi = np.nonzero(hit)
+        want = sorted(
+            (int(tx[i]), int(ty[i]), int(p.oid.iloc[j])) for i, j in zip(ti, pi)
+        )
+        assert want and got == want
+
     def test_bbox_mode_rejects_pip_keywords(self, pts_df, poly_df):
         tiles = pts_df.select("tile_x", "tile_y", "zoom")
         with pytest.raises(TypeError, match="broadcast_polygons, salt_k"):
