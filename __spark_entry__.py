@@ -458,11 +458,12 @@ def q_poly_contains(spark, sf_dir):
 
 def q_hole_assign(spark, sf_dir):
     """Distributed hole→exterior assignment (reference
-    organize_polygon_rings, sf.py:977-1102, as a join plan): each part
-    row becomes one 5-ring shape — two nested CW exteriors (min-|2A|
-    tie-break), a both-contained CCW hole (bbox prefilter -> ray-cast
-    refine -> smallest-area winner), a single-bbox-candidate CCW hole
-    (assigned WITHOUT the ray-cast, reference parity), and an
+    organize_polygon_rings, sf.py:977-1102, as one Arrow pass over
+    whole shapes): each part row becomes one 5-ring shape — two
+    nested CW exteriors (min-|2A| tie-break), a both-contained CCW
+    hole (bbox prefilter -> ray-cast refine -> smallest-area winner),
+    a single-bbox-candidate CCW hole (assigned WITHOUT the ray-cast,
+    reference parity), and an
     out-of-bbox orphan hole (promoted).  Winding is classified from the
     REAL ring WKB; the oracle re-derives the expected assignment from
     the generating center/radius arithmetic."""

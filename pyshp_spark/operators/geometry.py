@@ -189,7 +189,6 @@ def with_ring_stats(
     area2_col: str = "area2",
     sx: str = "sx",
     sy: str = "sy",
-    wkb_cw_only: bool = False,
 ) -> DataFrame:
     """Append per-ring classification stats for the FIRST ring of each
     WKB: winding (``is_cw`` — reference sf.py:835-840: CW == exterior),
@@ -200,31 +199,14 @@ def with_ring_stats(
     classify; downstream row accounting surfaces both as orphans);
     rings too degenerate to sample (RingSamplingError) keep NULL sample
     coords but real winding/area.  One Arrow pass with per-batch WKB
-    factorization: a polygon repeated across rows computes once.
-
-    ``wkb_cw_only=True`` additionally NULLs the ``wkb`` column for
-    non-CW (hole/unclassifiable) rows INSIDE the same Arrow pass — for
-    callers about to cache the result that only consume exterior
-    geometry downstream, this bounds the cached footprint without an
-    extra projection between the Arrow node and the cache (a row-level
-    Project there costs a measurable columnar->row->columnar round
-    trip)."""
+    factorization: a polygon repeated across rows computes once."""
     from pyspark.sql.types import BooleanType  # noqa: PLC0415
 
     from pyshp_spark.kernels.rings import first_ring_stats  # noqa: PLC0415
     from pyshp_spark.kernels.wkb import wkb_rings  # noqa: PLC0415
 
-    in_fields = [
-        # wkb_cw_only writes NULLs into the wkb column: the declared
-        # field must become nullable or the cached schema would lie
-        # (null-unsafe codegen / constant-folded IS NOT NULL)
-        StructField(f.name, f.dataType, True)
-        if wkb_cw_only and f.name == wkb and not f.nullable
-        else f
-        for f in df.schema.fields
-    ]
     out_schema = StructType(
-        in_fields
+        df.schema.fields
         + [
             StructField(is_cw_col, BooleanType()),
             StructField(area2_col, DoubleType()),
@@ -268,12 +250,6 @@ def with_ring_stats(
             pdf[area2_col] = [vals[c][1] if c >= 0 else None for c in codes]
             pdf[sx] = [vals[c][2] if c >= 0 else None for c in codes]
             pdf[sy] = [vals[c][3] if c >= 0 else None for c in codes]
-            if wkb_cw_only:
-                col = pdf[wkb]
-                pdf[wkb] = [
-                    col.iat[i] if c >= 0 and vals[c][0] else None
-                    for i, c in enumerate(codes)
-                ]
             yield pdf
 
     return df.mapInPandas(stats, schema=out_schema)

@@ -1,12 +1,11 @@
 """Operator-internal cache generations.
 
-Several operators persist small shared subtrees
-(assign_holes_distributed's three subtrees, knn_join's round-loop
-result, stratified_sample_n's prefilter frames).  Those
-caches used to live until session GC, so an ETL loop calling an
-operator N times accumulated N cached frames.  Each operator now
-registers its persisted frames as ONE generation: the next call
-releases the previous call's frames, and
+Two operators persist small shared subtrees: knn_join's round loop
+(targets past the broadcast guard) and stratified_sample_n's
+prefilter frames.  Those caches used to live until session GC, so an
+ETL loop calling an operator N times accumulated N cached frames.
+Each operator now registers its persisted frames as ONE generation:
+the next call releases the previous call's frames, and
 :func:`release_operator_caches` reclaims everything on demand.
 Correctness is unaffected — the frames are lazy and
 lineage-recoverable, so an already-returned result simply recomputes
@@ -20,10 +19,11 @@ _OP_CACHES: dict[str, list] = {}
 
 def release_operator_caches(op: str | None = None) -> None:
     """Unpersist the cached frames backing the most recent result of
-    ``op`` (``"assign_holes"``, ``"knn_join"``, ``"stratified_sample"``),
-    or of every operator when None; an op holding nothing, such as the
-    PIP join's retired ``"pip_shuffle"``, is a no-op.  Safe to call at
-    any time — released results recompute through plain lineage."""
+    ``op`` (``"knn_join"``, ``"stratified_sample"``), or of every
+    operator when None; an op holding nothing, such as the retired
+    ``"pip_shuffle"`` (PIP join) and ``"assign_holes"`` (hole
+    assignment), is a no-op.  Safe to call at any time — released
+    results recompute through plain lineage."""
     ops = [op] if op is not None else list(_OP_CACHES)
     for o in ops:
         for f in _OP_CACHES.pop(o, []):

@@ -29,13 +29,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DataType, LongType, MapType, StructField,
-    StructType, VariantType,
+    ArrayType, BinaryType, DataType, LongType, MapType, StringType,
+    StructField, StructType, VariantType,
 )
 from pyspark.sql.window import Window
 
 from pyshp_spark.functions.cells import GRID, Grid, missing_coord_expr
-from pyshp_spark.kernels.rings import pip_pairs, pip_pairs_flat, rings_to_edges
+from pyshp_spark.kernels.rings import first_ring_stats, pip_pairs_flat, rings_to_edges
 from pyshp_spark.kernels.wkb import wkb_rings
 
 _P = "__ps_"  # internal column prefix
@@ -138,68 +138,6 @@ def _spark_hashable(dt: DataType) -> bool:
     if isinstance(dt, StructType):
         return all(_spark_hashable(f.dataType) for f in dt.fields)
     return True
-
-
-def _refine_pip(
-    df: DataFrame, x: str, y: str, keep_wkb: bool = False,
-    drop_cols: set[str] | frozenset[str] = frozenset(),
-) -> DataFrame:
-    """Arrow-batched even-odd ray-cast refine on candidate pairs.
-
-    Expects columns ``wkb`` (polygon) and point coords; parses each
-    distinct WKB once per batch and tests all its candidate points in
-    one vectorized call.  ``drop_cols`` are refine INPUTS excluded from
-    the output (e.g. probe coords a downstream aggregation never reads
-    — not shipping them back through Arrow trims the channel, which is
-    the scaling bottleneck).
-    """
-    out_fields = [
-        f for f in df.schema.fields
-        if (keep_wkb or f.name != "wkb") and f.name not in drop_cols
-    ]
-
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-    in_names = [f.name for f in df.schema.fields]
-    wkb_i = in_names.index("wkb")
-    x_i, y_i = in_names.index(x), in_names.index(y)
-    out_idx = [in_names.index(c) for c in out_cols]
-
-    def refine(batches):
-        # Arrow keeps the wkb column as one contiguous buffer (a
-        # per-row conversion would make one Python bytes object PER
-        # CANDIDATE ROW); dictionary_encode dedups it at C speed, and
-        # only the DISTINCT wkbs per batch ever become Python objects
-        import pyarrow as pa  # noqa: PLC0415
-        import pyarrow.compute as pc  # noqa: PLC0415
-
-        edge_cache: dict[bytes, np.ndarray] = {}
-        for rb in batches:
-            wkb_arr = rb.column(wkb_i)
-            # a null wkb must not reach the kernel (it would silently
-            # test the wrong polygon); filter rows first
-            if wkb_arr.null_count:
-                rb = rb.filter(pc.is_valid(wkb_arr))
-                wkb_arr = rb.column(wkb_i)
-            if rb.num_rows == 0:
-                yield rb.select(out_idx)
-                continue
-            enc = pc.dictionary_encode(wkb_arr)
-            codes = enc.indices.to_numpy(zero_copy_only=False)
-            edges = []
-            for w in enc.dictionary:
-                b = w.as_py()
-                e = edge_cache.get(b)
-                if e is None:
-                    e = rings_to_edges(wkb_rings(b))
-                    edge_cache[b] = e
-                edges.append(e)
-            px = rb.column(x_i).to_numpy(zero_copy_only=False)
-            py = rb.column(y_i).to_numpy(zero_copy_only=False)
-            keep = pip_pairs(edges, codes, px, py)
-            yield rb.select(out_idx).filter(pa.array(keep))
-
-    return df.mapInArrow(refine, schema=out_schema)
 
 
 def _resolve_broadcast(polygons: DataFrame, broadcast_polygons) -> bool:
@@ -1471,271 +1409,189 @@ def zonal_stats(
     return joined.groupBy(*gcols).agg(*aggs)
 
 
+#: an exterior covering more than this many cells of its shape's hole
+#: grid pairs with every hole of its shape instead (bounded fan-out)
+_HOLE_MAX_COVER = 64
+
+
 def assign_holes_distributed(
-    rings: DataFrame,
-    shape_id: str = "shape_id",
-    ring_idx: str = "ring_idx",
-    cell_block_threshold: int = 64,
-    max_cover: int = 64,
+    rings: DataFrame, shape_id: str = "shape_id", ring_idx: str = "ring_idx",
 ) -> DataFrame:
     """Distributed hole→exterior assignment: the reference's
-    ``organize_polygon_rings`` (sf.py:977-1102) lifted from a per-shape
-    Python loop to a DataFrame plan, for pathological shapes whose ring
-    count dwarfs a single task (continent coastlines, dissolved
-    admin layers).
+    ``organize_polygon_rings`` (sf.py:977-1102) as one vectorized
+    Arrow pass over whole shapes.
 
     Input: one row per ring — (shape_id, ring_idx, wkb [single-ring
-    polygon], xmin, ymin, xmax, ymax).  Output: (shape_id, ring_idx,
-    role, parent_idx) with role:
+    polygon], xmin, ymin, xmax, ymax).  Output: one row per input row,
+    (shape_id, ring_idx, role, parent_idx), with role:
 
-    * ``exterior`` — CW ring (reference sf.py:997-1002); parent = self.
-    * ``hole`` — CCW ring attached to an exterior: single exterior
-      takes every hole (sf.py:1005-1009); multiple exteriors run the
-      reference pipeline as joins — strict bbox-contains prefilter
-      (sf.py:1023-1032), ray-cast refine of the hole's deterministic
-      ``ring_sample`` point for multi-candidate holes (sf.py:1034-1051),
-      smallest-|2A| exterior in ring order for still-ambiguous ones
+    * ``exterior`` — CW ring (sf.py:997-1002); parent = self.
+    * ``hole`` — CCW ring attached to an exterior.  A single exterior
+      takes every hole (sf.py:1005-1009).  Otherwise the candidates are
+      the exteriors whose bbox strictly contains the hole's
+      (sf.py:1023-1032): one candidate wins WITHOUT a ray-cast (the
+      reference refines only >1); several are ray-cast against the
+      hole's ``ring_sample`` point (sf.py:1034-1051), and the
+      smallest-|2A| survivor wins, ties to the lower ring_idx
       (sf.py:1053-1061).
-    * ``orphan`` — CCW ring no exterior claims (promoted to an
-      exterior downstream, reference sf.py:1063-1093), including every
-      ring of an all-holes shape (sf.py:1096-1102); parent is NULL.
-      A hole too degenerate to sample (RingSamplingError — where the
-      single-process reference would raise) also lands here, as does a
-      row whose ``wkb`` is NULL (unclassifiable winding) — every input
-      row appears exactly once in the output (row accounting holds).
+    * ``orphan`` — parent NULL: a CCW ring no exterior claims
+      (sf.py:1063-1093), every ring of an all-holes shape
+      (sf.py:1096-1102), a multi-candidate hole too degenerate to
+      sample (the reference would raise RingSamplingError), and a row
+      whose ``wkb`` is NULL or has no ring.
 
-    Scale shape: ring stats are one Arrow pass; the ray-cast refine is
-    hash-distributed per HOLE (the candidate-count window exchanges on
-    (shape, hole) before it), so even one monster shape's refine
-    spreads across the cluster.  The bbox candidate join is per-shape
-    for ordinary shapes (equi-join on shape_id, mirroring the
-    reference's per-shape quadratic prefilter) — but a shape with more
-    than ``cell_block_threshold`` exteriors switches to a CELL-BLOCKED
-    candidate join: a per-shape ~sqrt(n_ext) x sqrt(n_ext) grid over
-    the exteriors' extent, each exterior bbox exploded to its covered
-    cells (capped at ``max_cover``; wider rings fall back to a
-    per-shape broad bucket), each hole hashed to its bbox min-corner
-    cell, and candidates found by (shape, cell) equi-join.  Because an
-    exterior that strictly bbox-contains a hole must cover the hole's
-    min-corner cell (floor is monotone and both sides clamp to the
-    same grid), blocking is lossless; the exact strict-contains filter
-    then applies to BOTH paths.  This turns the quadratic
-    |holes| x |exteriors| enumeration of a dissolved-admin/coastline
-    monster shape into near-linear work spread by cell.
+    Plan: one exchange (``repartition(shape_id)``), a sort by shape
+    within partitions, and one ``mapInArrow`` that carries a shape cut
+    by a batch boundary into the next batch and assigns all whole
+    shapes of a batch at once (:func:`_assign_holes`).  Nothing is
+    persisted.  A shape is one task's work; its candidate search is a
+    per-shape grid, near-linear in its ring count."""
+    schema = StructType([
+        rings.schema[shape_id], rings.schema[ring_idx],
+        StructField("role", StringType(), False),
+        StructField("parent_idx", rings.schema[ring_idx].dataType),
+    ])
 
-    Caching: three small frames (ring stats, surviving candidate
-    pairs, per-hole assignments) are lazily persisted because each
-    feeds multiple non-identical union branches (runtime exchange
-    reuse cannot dedup those; without the cache one action re-ran the
-    candidate chain 4x).  They are tracked as ONE generation per
-    operator: the next ``assign_holes_distributed`` call releases the
-    previous call's frames, and
-    :func:`release_operator_caches`("assign_holes") reclaims them on
-    demand — a long-lived ETL loop holds at most one generation, and a
-    released result recomputes through plain lineage if re-used.
-    """
-    from pyshp_spark.operators.geometry import with_ring_stats  # noqa: PLC0415
+    def assign(batches):
+        import pyarrow as pa  # noqa: PLC0415
 
-    idx_type = rings.schema[ring_idx].dataType
-    # the persisted stats frame keeps wkb ONLY for exterior rings (the
-    # sole downstream consumer is the exterior refine): holes' geometry
-    # bytes — the bulk of a coastline-scale layer — are NULLed inside
-    # the stats Arrow pass itself (wkb_cw_only), so the session-lifetime
-    # footprint is exterior blobs + task-sized per-ring stats, never
-    # the whole corpus, and no extra projection sits between the Arrow
-    # node and the cache.  One persist, one evaluation of the (possibly
-    # expensive) rings subtree.
-    stats = with_ring_stats(rings, wkb_cw_only=True).persist()
-    exts = stats.where(F.col("is_cw"))
-    holes = stats.where(~F.col("is_cw"))
-    # NULL wkb -> NULL is_cw matches NEITHER filter above: surface those
-    # rows as orphans (NULL parent) instead of silently dropping them
-    out_nullwkb = stats.where(F.col("is_cw").isNull()).select(
-        shape_id,
-        ring_idx,
-        F.lit("orphan").alias("role"),
-        F.lit(None).cast(rings.schema[ring_idx].dataType).alias("parent_idx"),
+        carry = []
+        for rb in batches:
+            t = pa.Table.from_batches(carry + [rb]).combine_chunks()
+            # the last shape may continue in the next batch: carry it
+            cut = _shape_starts(t.column(0))[-1]
+            yield from _assign_holes(t.slice(0, cut), schema.names)
+            carry = t.slice(cut).to_batches()
+        if carry:
+            yield from _assign_holes(pa.Table.from_batches(carry), schema.names)
+
+    return (
+        rings.select(shape_id, ring_idx, "wkb", *_BBOX_COLS)
+        .repartition(shape_id)
+        .sortWithinPartitions(shape_id)
+        .mapInArrow(assign, schema)
     )
 
-    out_ext = exts.select(
-        shape_id,
-        ring_idx,
-        F.lit("exterior").alias("role"),
-        F.col(ring_idx).alias("parent_idx"),
-    )
 
-    ext_counts = exts.groupBy(shape_id).agg(
-        F.count(F.lit(1)).alias("__n_ext"),
-        F.min(ring_idx).alias("__lone_ext"),
-        # exterior-extent grid origin/corner for the cell-blocked path
-        F.min("xmin").alias("__gx0"),
-        F.min("ymin").alias("__gy0"),
-        F.max("xmax").alias("__gx1"),
-        F.max("ymax").alias("__gy1"),
-    )
-    h = holes.join(ext_counts, on=shape_id, how="left")
-    null_parent = F.lit(None).cast(idx_type)
+def _shape_starts(ids) -> np.ndarray:
+    """Where each shape starts in a shape-sorted id column; a NULL id
+    is a shape of its own, as a NULL key joins nothing."""
+    import pyarrow.compute as pc  # noqa: PLC0415
 
-    # no exteriors at all: every hole promotes (reference sf.py:1096-1102)
-    out_noext = h.where(F.col("__n_ext").isNull()).select(
-        shape_id, ring_idx, F.lit("orphan").alias("role"),
-        null_parent.alias("parent_idx"),
-    )
-    # one exterior: all holes attach unconditionally (sf.py:1005-1009)
-    out_lone = h.where(F.col("__n_ext") == 1).select(
-        shape_id, ring_idx, F.lit("hole").alias("role"),
-        F.col("__lone_ext").cast(idx_type).alias("parent_idx"),
-    )
+    ids = ids.combine_chunks()
+    new = pc.fill_null(pc.not_equal(ids[1:], ids[:-1]), True)
+    return np.flatnonzero(np.append(True, new.to_numpy(zero_copy_only=False)))
 
-    grid_cols = ["__n_ext", "__gx0", "__gy0", "__gx1", "__gy1"]
-    hm_all = h.where(F.col("__n_ext") > 1).select(
-        shape_id,
-        F.col(ring_idx).alias("__h_idx"),
-        F.col("xmin").alias("__hxmin"),
-        F.col("ymin").alias("__hymin"),
-        F.col("xmax").alias("__hxmax"),
-        F.col("ymax").alias("__hymax"),
-        "sx",
-        "sy",
-        *grid_cols,
-    )
-    hm = hm_all.drop(*grid_cols)
-    ext_m = exts.select(
-        shape_id,
-        F.col(ring_idx).alias("__e_idx"),
-        "wkb", "xmin", "ymin", "xmax", "ymax", "area2",
-    ).join(ext_counts.select(shape_id, *grid_cols), on=shape_id)
-    pair_cols = [
-        shape_id, "__h_idx", "__hxmin", "__hymin", "__hxmax", "__hymax",
-        "sx", "sy", "__e_idx", "wkb", "xmin", "ymin", "xmax", "ymax",
-        "area2",
-    ]
-    thr = F.lit(cell_block_threshold)
-    # ordinary shapes: plain per-shape equi-join (the reference's
-    # quadratic prefilter — fine while n_ext is task-sized)
-    cand_plain = (
-        hm_all.where(F.col("__n_ext") <= thr)
-        .drop(*grid_cols)
-        .join(
-            ext_m.where(F.col("__n_ext") <= thr).drop(*grid_cols),
-            on=shape_id,
-        )
-        .select(*pair_cols)
-    )
-    # ring-heavy shapes: cell-blocked candidate join.  k ~ sqrt(n_ext)
-    # cells per axis over the exteriors' extent; degenerate (zero-area)
-    # extents divide by a tiny epsilon and clamp into [0, k-1].
-    kcol = F.least(
-        F.lit(1024),
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.sqrt(F.col("__n_ext").cast("double"))).cast("int"),
-        ),
-    ).cast("long")
-    cw = F.greatest((F.col("__gx1") - F.col("__gx0")) / kcol, F.lit(1e-300))
-    ch = F.greatest((F.col("__gy1") - F.col("__gy0")) / kcol, F.lit(1e-300))
 
-    def cell_of(v, origin, width, k):
-        return F.least(k - 1, F.greatest(F.lit(0), F.floor((v - origin) / width)))
+def _assign_holes(t, names: list[str]):
+    """Roles and parents of the rings of the whole shapes in ``t``
+    (columns shape_id, ring_idx, wkb, bbox; sorted by shape) as Arrow
+    batches of ``names``: one vectorized pass, no Python call per
+    shape."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
 
-    eb = (
-        ext_m.where(F.col("__n_ext") > thr)
-        .withColumn("__k", kcol)
-        .withColumn("__c0", cell_of(F.col("xmin"), F.col("__gx0"), cw, F.col("__k")))
-        .withColumn("__c1", cell_of(F.col("xmax"), F.col("__gx0"), cw, F.col("__k")))
-        .withColumn("__r0", cell_of(F.col("ymin"), F.col("__gy0"), ch, F.col("__k")))
-        .withColumn("__r1", cell_of(F.col("ymax"), F.col("__gy0"), ch, F.col("__k")))
-        .withColumn(
-            "__ncell",
-            (F.col("__c1") - F.col("__c0") + 1)
-            * (F.col("__r1") - F.col("__r0") + 1),
-        )
-    )
-    ext_keep = ["__e_idx", "wkb", "xmin", "ymin", "xmax", "ymax", "area2"]
-    ext_cells = (
-        eb.where(F.col("__ncell") <= F.lit(max_cover))
-        .withColumn("__cc", F.explode(F.sequence(F.col("__c0"), F.col("__c1"))))
-        .withColumn("__cr", F.explode(F.sequence(F.col("__r0"), F.col("__r1"))))
-        .select(
-            shape_id,
-            (F.col("__cr") * F.col("__k") + F.col("__cc")).alias("__cell"),
-            *ext_keep,
-        )
-    )
-    # an exterior covering more than max_cover cells joins every hole
-    # of its shape instead of exploding (bounded fan-out)
-    ext_broad = eb.where(F.col("__ncell") > F.lit(max_cover)).select(
-        shape_id, *ext_keep
-    )
-    hb = (
-        hm_all.where(F.col("__n_ext") > thr)
-        .withColumn("__k", kcol)
-        .withColumn(
-            "__cell",
-            cell_of(F.col("__hymin"), F.col("__gy0"), ch, F.col("__k"))
-            * F.col("__k")
-            + cell_of(F.col("__hxmin"), F.col("__gx0"), cw, F.col("__k")),
-        )
-        .drop(*grid_cols, "__k")
-    )
-    cand_cell = hb.join(ext_cells, on=[shape_id, "__cell"]).select(*pair_cols)
-    cand_broad = hb.drop("__cell").join(ext_broad, on=shape_id).select(*pair_cols)
-    cand = (
-        cand_plain.unionByName(cand_cell).unionByName(cand_broad)
-    ).where(
-        # strict bbox-contains, reference sf.py:864-869 semantics —
-        # the exact filter shared by all three candidate sources
-        (F.col("xmin") < F.col("__hxmin"))
-        & (F.col("__hxmax") < F.col("xmax"))
-        & (F.col("ymin") < F.col("__hymin"))
-        & (F.col("__hymax") < F.col("ymax"))
-    )
-    wcnt = Window.partitionBy(shape_id, "__h_idx")
-    # persist the shared subtrees: ``cand`` feeds both the single- and
-    # multi-candidate splits and ``assigned`` feeds both out_multi and
-    # the orphan anti-join — without a cache each union branch re-runs
-    # the whole candidate-join + refine chain (4x the exchanges under
-    # AQE's serial stage materialization).  Both frames are small
-    # (bbox-surviving candidate pairs / one row per assigned hole) and
-    # stay lazy — no eager job at construction time.
-    cand = cand.withColumn("__ncand", F.count(F.lit(1)).over(wcnt)).persist()
-    keep_cols = [shape_id, "__h_idx", "__e_idx", "area2"]
-    # exactly one bbox candidate: assigned WITHOUT the ray-cast check —
-    # reference parity (the refine loop only runs for >1 candidates)
-    single = cand.where(F.col("__ncand") == 1).select(*keep_cols)
-    multi = cand.where(F.col("__ncand") > 1).select(
-        *keep_cols, "sx", "sy", "wkb"
-    )
-    refined = _refine_pip(multi, "sx", "sy", drop_cols={"sx", "sy"})
-    worder = Window.partitionBy(shape_id, "__h_idx").orderBy(
-        "area2", "__e_idx"
-    )
-    best = (
-        refined.withColumn("__rk", F.row_number().over(worder))
-        .where(F.col("__rk") == 1)
-        .select(*keep_cols)
-    )
-    assigned = single.unionByName(best).persist()
-    _register_op_caches("assign_holes", [stats, cand, assigned])
-    out_multi = assigned.select(
-        shape_id,
-        F.col("__h_idx").alias(ring_idx),
-        F.lit("hole").alias("role"),
-        F.col("__e_idx").cast(idx_type).alias("parent_idx"),
-    )
-    out_orphan = (
-        hm.join(
-            assigned.select(shape_id, "__h_idx"),
-            on=[shape_id, "__h_idx"],
-            how="left_anti",
-        )
-        .select(
-            shape_id,
-            F.col("__h_idx").alias(ring_idx),
-            F.lit("orphan").alias("role"),
-            null_parent.alias("parent_idx"),
-        )
-    )
-    return out_ext.unionByName(out_lone).unionByName(out_noext).unionByName(
-        out_multi
-    ).unionByName(out_orphan).unionByName(out_nullwkb)
+    n = t.num_rows
+    starts = _shape_starts(t.column(0))
+    shape = np.repeat(np.arange(len(starts)), np.diff(np.append(starts, n)))
+    enc = pc.dictionary_encode(t.column(2).combine_chunks())
+    parsed = [wkb_rings(w.as_py()) for w in enc.dictionary]
+    # (is_cw, |2A|, sample x, sample y) per distinct WKB; None -> NaN,
+    # and a NULL wkb (code -1) takes the trailing all-NaN row
+    stats = np.array([[np.nan if v is None else v for v in s]
+                      for s in first_ring_stats(parsed) + [[None] * 4]])
+    code = pc.fill_null(enc.indices, -1).to_numpy(zero_copy_only=False)
+    cw, area2, sx, sy = stats[code].T
+    ext = np.flatnonzero(cw == 1)
+    n_ext = np.bincount(shape[ext], minlength=len(starts))[shape]
+    # an exterior is its own parent; a lone exterior takes every hole
+    lone = np.full(len(starts), -1, dtype=np.int64)
+    lone[shape[ext]] = ext
+    parent = np.where(cw == 1, np.arange(n),
+                      np.where((cw == 0) & (n_ext == 1), lone[shape], -1))
+    holes = np.flatnonzero((cw == 0) & (n_ext > 1))
+    if len(holes):
+        bb = _bbox_array(t)
+        h, e = _hole_candidates(shape, ext[n_ext[ext] > 1], holes, bb)
+        multi = np.bincount(h, minlength=n)[h] > 1
+        if multi.any():
+            # ray-cast each multi-candidate hole's sample point against
+            # its candidates, with the PIP join's pair kernel
+            need, codes = np.unique(e[multi], return_inverse=True)
+            edges = [rings_to_edges(parsed[code[r]]) for r in need]
+            offsets = np.append(0, np.cumsum([len(x) for x in edges]))
+            keep = ~multi
+            keep[multi] = pip_pairs_flat(
+                np.concatenate(edges), offsets, codes,
+                sx[h[multi]], sy[h[multi]],
+            )
+            h, e = h[keep], e[keep]
+        ridx = t.column(1).to_numpy(zero_copy_only=False)
+        order = np.lexsort((ridx[e], area2[e], h))
+        h, e = h[order], e[order]
+        first = np.flatnonzero(np.diff(h, prepend=-1))
+        parent[h[first]] = e[first]
+    role = np.where(cw == 1, 0, np.where(parent >= 0, 1, 2))
+    yield from pa.Table.from_arrays([
+        t.column(0), t.column(1), pa.array(["exterior", "hole", "orphan"]).take(role),
+        t.column(1).take(pa.array(parent, mask=parent < 0)),
+    ], names=names).to_batches()
+
+
+@np.errstate(invalid="ignore", over="ignore")
+def _hole_candidates(shape, ext, holes, bb):
+    """``(hole, exterior)`` row pairs of one shape whose exterior bbox
+    strictly contains the hole bbox (reference sf.py:864-869).  Each
+    shape gets a k x k grid over its exteriors' extent (k ~
+    sqrt(exteriors); 1 if the extent is not finite); a CSR over (shape,
+    cell) keys lists the exteriors per covered cell, or under one broad
+    key per shape past ``_HOLE_MAX_COVER`` cells.  A hole probes its
+    bbox min corner's cell and its shape's broad key: lossless, as a
+    strictly containing exterior covers that cell (floor and clamp are
+    monotone)."""
+    s = shape[ext]
+    first = np.flatnonzero(np.diff(s, prepend=-1))
+    ng = shape[-1] + 1
+    box = np.full((ng, 4), np.nan)  # each shape's exterior extent
+    box[s[first], :2] = np.fmin.reduceat(bb[ext, :2], first)
+    box[s[first], 2:] = np.fmax.reduceat(bb[ext, 2:], first)
+    k = np.clip(np.ceil(np.sqrt(np.bincount(s, minlength=ng))), 1, 1024)
+    k = np.where(np.isfinite(box).all(1), k, 1).astype(np.int64)
+    width = np.maximum((box[:, 2:] - box[:, :2]) / k[:, None], 1e-300)
+    base = np.cumsum(k * k + 1) - (k * k + 1)
+    broad_key = base + k * k
+
+    def cells(rows, xy):
+        g = shape[rows]
+        c = np.floor((bb[rows][:, xy] - box[g, :2]) / width[g])
+        c = np.clip(np.where(np.isnan(c), 0, c), 0, k[g, None] - 1)
+        return c[:, 0].astype(np.int64), c[:, 1].astype(np.int64)
+
+    c0, r0 = cells(ext, [0, 1])
+    c1, r1 = cells(ext, [2, 3])
+    ncol = np.maximum(c1 - c0 + 1, 0)
+    ncell = ncol * np.maximum(r1 - r0 + 1, 0)
+    broad = ncell > _HOLE_MAX_COVER
+    rep, within = _runs(np.where(broad, 1, ncell))
+    sr = s[rep]
+    cell = c0[rep] + within % ncol[rep] + (r0[rep] + within // ncol[rep]) * k[sr]
+    keys = np.where(broad[rep], broad_key[sr], base[sr] + cell)
+    if not len(keys):
+        return _EMPTY_I64, _EMPTY_I64
+    order, uniq, offsets = _csr(keys)
+    hc, hr = cells(holes, [0, 1])
+    hs = shape[holes]
+    probe = np.concatenate([base[hs] + hr * k[hs] + hc, broad_key[hs]])
+    pos = np.clip(np.searchsorted(uniq, probe), 0, len(uniq) - 1)
+    hit = uniq[pos] == probe
+    run, within = _runs(np.where(hit, offsets[pos + 1] - offsets[pos], 0))
+    h = np.concatenate([holes, holes])[run]
+    e = ext[rep[order[offsets[pos[run]] + within]]]
+    m = ((bb[e, :2] < bb[h, :2]) & (bb[h, 2:] < bb[e, 2:])).all(1)
+    return h[m], e[m]
+
+
+def _runs(counts: np.ndarray):
+    """Each item's run and its position in it, for runs of ``counts``."""
+    run = np.repeat(np.arange(len(counts)), counts)
+    return run, np.arange(len(run)) - np.repeat(np.cumsum(counts) - counts, counts)

@@ -632,20 +632,23 @@ def layer_schema(paths=(), fields=None, sample: pd.DataFrame | None = None):
 def _to_arrow_table(pdf: pd.DataFrame, schema: pa.Schema) -> pa.Table:
     """``pdf`` as an Arrow table of ``schema``: a column ``pdf`` lacks
     (no .dbf, or a field only other files have) is all NULL, and one
-    ``schema`` lacks is dropped."""
+    ``schema`` lacks is dropped.  In a date column, a value that is not
+    a date (``parse_dbf_bytes`` keeps an unparseable D value as its
+    text) is NULL, as in Spark's permissive readers."""
     if pdf.empty:
         # pandas types the columns of a frame built from empty lists as
         # float64, which does not convert to list or string columns
         return schema.empty_table()
-    return pa.table(
-        [
-            pa.array(pdf[f.name], type=f.type, from_pandas=True)
-            if f.name in pdf.columns
-            else pa.nulls(len(pdf), f.type)
-            for f in schema
-        ],
-        schema=schema,
-    )
+
+    def column(f):
+        if f.name not in pdf.columns:
+            return pa.nulls(len(pdf), f.type)
+        values = pdf[f.name]
+        if pa.types.is_date(f.type):
+            values = [v if isinstance(v, _dt.date) else None for v in values]
+        return pa.array(values, type=f.type, from_pandas=True)
+
+    return pa.table([column(f) for f in schema], schema=schema)
 
 
 def read_shapefile_table(
@@ -693,18 +696,24 @@ def read_shapefile_urls(spark, urls: list[str], bbox=None, fields=None):
     into one DataFrame.  The driver fetches only the first URL, whose
     frame gives the schema (:func:`layer_schema` with no headers):
     columns only later URLs have are dropped, and columns they lack are
-    NULL."""
+    NULL.  ``src`` is the URL, and for a ``.zip`` URL the URL, ``!/``
+    and the member name."""
     if not urls:
         raise ValueError("no urls")
-    sample = read_url_shapefile(urls[0], bbox=bbox, fields=fields)
-    sample.insert(0, "src", urls[0])
 
-    def read_one(url, schema):
+    def frame(url):
         pdf = read_url_shapefile(url, bbox=bbox, fields=fields)
-        pdf.insert(0, "src", url)
-        return _to_arrow_table(pdf, schema)
+        if url.lower().endswith(".zip"):
+            # a zip's frame names each row's member in ``src``
+            pdf["src"] = url + "!/" + pdf["src"]
+        else:
+            pdf.insert(0, "src", url)
+        return pdf
 
-    return _map_sources(spark, urls, layer_schema(sample=sample), read_one)
+    return _map_sources(
+        spark, urls, layer_schema(sample=frame(urls[0])),
+        lambda url, schema: _to_arrow_table(frame(url), schema),
+    )
 
 
 def read_shapefiles(spark, path: str, bbox=None, fields=None):

@@ -126,8 +126,9 @@ def main():
     )
     sections["poly_contains (ring_sample points probe the broadcast "
              "polygon index)"] = fmt(em.q_poly_contains(spark, sf_dir))
-    sections["hole_assign (distributed organize_polygon_rings: "
-             "bbox-candidate join + ray-cast refine + min-area window)"] = fmt(
+    sections["hole_assign (distributed organize_polygon_rings: one "
+             "exchange by shape + one Arrow pass over whole shapes, no "
+             "join, window or cache)"] = fmt(
         em.q_hole_assign(spark, sf_dir)
     )
 

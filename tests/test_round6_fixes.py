@@ -13,8 +13,11 @@
 5. with_ring_sample keeps NULL-wkb rows (NULL sample coords).
 6. Streaming near-dup compaction recovers orphaned staging dirs at
    EVERY batch start, whatever the cadence.
-7. assign_holes_distributed == reference organize_polygon_rings on the
-   golden pathology cases AND the real multipart blockgroups corpus.
+7. assign_holes_distributed == the scalar organize_polygon_rings on the
+   golden pathology cases, a 300-exterior shape, an exterior past the
+   cover cap, shapes split across Arrow batches and random shapes (the
+   kernel alone), and == the reference organizer on the real
+   multipart blockgroups corpus.
 """
 
 import os
@@ -25,7 +28,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from pyshp_spark.functions.cells import Grid
-from pyshp_spark.kernels.rings import ring_bbox
+from pyshp_spark.kernels.rings import is_cw, organize_polygon_rings, ring_bbox
 from pyshp_spark.kernels.wkb import wkb_polygon
 from pyshp_spark.operators.geometry import with_ring_sample
 from pyshp_spark.operators.spatial import (
@@ -371,19 +374,29 @@ class TestKeeperChaining:
 # ---------------------------------------------------------------- holes ----
 
 
-def _ref_assignment(ref_shapefile, rings):
-    """ring_idx -> (role, parent_idx) via the reference organizer."""
-    errs = {}
-    polys = ref_shapefile.organize_polygon_rings(list(rings), errs)
-    ids = {id(r): i for i, r in enumerate(rings)}
+def _ref_assignment(rings):
+    """ring_idx -> (role, parent_idx) via the scalar organizer
+    (``kernels.rings.organize_polygon_rings``, checked against pyshp's
+    in ``test_kernels.TestOrganizeRings``).  Its output rings are
+    copies, so each is mapped back to the first unused input ring of
+    equal coordinates, by position."""
+    arrs = [np.asarray(r, dtype=float) for r in rings]
+    used = set()
+
+    def position(ring):
+        i = next(i for i, a in enumerate(arrs)
+                 if i not in used and np.array_equal(a, ring))
+        used.add(i)
+        return i
+
     out = {}
-    for poly in polys:
-        head_idx = ids[id(poly[0])]
-        head_cw = ref_shapefile.is_cw(poly[0])
+    for poly in organize_polygon_rings(arrs):
+        head_idx = position(poly[0])
+        head_cw = is_cw(poly[0])
         out[head_idx] = ("exterior" if head_cw else "orphan",
                          head_idx if head_cw else None)
         for r in poly[1:]:
-            out[ids[id(r)]] = ("hole", head_idx)
+            out[position(r)] = ("hole", head_idx)
     return out
 
 
@@ -404,59 +417,93 @@ def _rings_df(spark, cases):
 def _got_assignment(df):
     out = {}
     for r in df.collect():
+        assert r["ring_idx"] not in out.get(r["shape_id"], {})  # once each
         out.setdefault(r["shape_id"], {})[r["ring_idx"]] = (
             r["role"], r["parent_idx"]
         )
     return out
 
 
+def _square(x0, y0, size, cw=True):
+    ring = [(x0, y0), (x0, y0 + size), (x0 + size, y0 + size),
+            (x0 + size, y0), (x0, y0)]
+    return ring if cw else ring[::-1]
+
+
+def _lattice():
+    """300 CW exteriors on a 20 x 15 lattice, about half with a CCW
+    hole, plus one hole outside every exterior: the per-shape grid has
+    18 x 18 cells and each exterior covers one or a few of them."""
+    rng = __import__("random").Random(7)
+    rings = []
+    for i in range(300):
+        x0, y0 = (i % 20) * 10.0, (i // 20) * 10.0
+        rings.append(_square(x0, y0, 8.0))
+        if rng.random() < 0.5:
+            rings.append(_square(x0 + 2, y0 + 2, 3.0, cw=False))
+    rings.append(_square(500.0, 500.0, 3.0, cw=False))  # orphan
+    return rings
+
+
 class TestAssignHolesDistributed:
-    # threshold 64 = every fixture takes the plain per-shape join;
-    # threshold 0 = every multi-exterior shape takes the cell-blocked
-    # candidate join — both must match the reference ring-for-ring
-    @pytest.mark.parametrize("threshold", [64, 0])
-    def test_golden_pathology_cases(self, spark, ref_shapefile, threshold):
+    def test_golden_pathology_cases(self, spark):
         from tests.test_kernels import TestOrganizeRings
 
-        cases = TestOrganizeRings.CASES
-        got = _got_assignment(assign_holes_distributed(
-            _rings_df(spark, cases), cell_block_threshold=threshold
-        ))
+        cases = dict(TestOrganizeRings.CASES, single_candidate_outside=[
+            # a diamond exterior whose bbox, not its area, holds the hole
+            [(10, 20), (20, 10), (10, 0), (0, 10), (10, 20)],
+            _square(50.0, 50.0, 10.0),
+            _square(1.0, 1.0, 2.0, cw=False),
+        ])
+        # a lone bbox candidate is assigned without the ray-cast
+        assert _ref_assignment(cases["single_candidate_outside"])[2] == (
+            "hole", 0)
+        got = _got_assignment(assign_holes_distributed(_rings_df(spark, cases)))
         for name, rings in cases.items():
-            want = _ref_assignment(ref_shapefile, rings)
-            assert got.get(name, {}) == want, (name, threshold)
+            assert got.get(name, {}) == _ref_assignment(rings), name
 
-    @pytest.mark.parametrize("max_cover", [64, 1])
-    def test_ring_heavy_shape_cell_blocked(self, spark, ref_shapefile,
-                                           max_cover):
-        """A single shape with hundreds of exteriors must produce the
-        reference assignment through the cell-blocked path (threshold
-        forced to 0), including with max_cover=1 forcing every
-        exterior into the broad-bucket fallback."""
-        rng = __import__("random").Random(7)
-        rings = []
-        for i in range(300):
-            x0, y0 = (i % 20) * 10.0, (i // 20) * 10.0
-            # CW exterior
-            rings.append([(x0, y0), (x0, y0 + 8), (x0 + 8, y0 + 8),
-                          (x0 + 8, y0), (x0, y0)])
-            if rng.random() < 0.5:
-                # CCW hole inside it
-                rings.append([(x0 + 2, y0 + 2), (x0 + 5, y0 + 2),
-                              (x0 + 5, y0 + 5), (x0 + 2, y0 + 5),
-                              (x0 + 2, y0 + 2)])
-        # an orphan hole outside every exterior
-        rings.append([(500.0, 500.0), (503.0, 500.0), (503.0, 503.0),
-                      (500.0, 503.0), (500.0, 500.0)])
-        cases = {"monster": rings}
+    def test_ring_heavy_shape(self, spark):
+        """One shape with 300 exteriors: every hole finds its exterior
+        through the per-shape grid, and the outside hole is orphaned."""
+        rings = _lattice()
         got = _got_assignment(assign_holes_distributed(
-            _rings_df(spark, cases), cell_block_threshold=0,
-            max_cover=max_cover,
+            _rings_df(spark, {"monster": rings})
         ))
-        want = _ref_assignment(ref_shapefile, rings)
-        assert got["monster"] == want
+        assert got["monster"] == _ref_assignment(rings)
 
-    def test_null_wkb_ring_becomes_orphan(self, spark, ref_shapefile):
+    def test_exterior_past_the_cover_cap(self, spark):
+        """An exterior enclosing the lattice covers all 18 x 18 grid
+        cells, past the cover cap, so it pairs with every hole of its
+        shape; each lattice hole then has two candidates and takes the
+        smaller exterior after the ray-cast."""
+        rings = [_square(-5.0, -5.0, 600.0)] + _lattice()
+        want = _ref_assignment(rings)
+        assert sum(role == "hole" for role, _ in want.values()) > 100
+        got = _got_assignment(assign_holes_distributed(
+            _rings_df(spark, {"enclosed": rings})
+        ))
+        assert got["enclosed"] == want
+
+    def test_shape_split_across_batches(self, spark):
+        """With two rows per Arrow batch every multi-ring shape crosses
+        a batch boundary; the kernel carries it whole into the next
+        batch."""
+        from tests.test_kernels import TestOrganizeRings
+
+        cases = dict(TestOrganizeRings.CASES, monster=_lattice())
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "2")
+        try:
+            got = _got_assignment(
+                assign_holes_distributed(_rings_df(spark, cases))
+            )
+        finally:
+            spark.conf.set(key, prev)
+        for name, rings in cases.items():
+            assert got.get(name, {}) == _ref_assignment(rings), name
+
+    def test_null_wkb_ring_becomes_orphan(self, spark):
         """A ring row with NULL wkb (unclassifiable winding) must appear
         in the output as an orphan, not vanish — row accounting holds."""
         from tests.test_kernels import TestOrganizeRings
@@ -472,8 +519,25 @@ class TestAssignHolesDistributed:
             assign_holes_distributed(df.unionByName(null_row))
         )
         assert got["good"][99] == ("orphan", None)
-        want = _ref_assignment(ref_shapefile, cases["good"])
+        want = _ref_assignment(cases["good"])
         assert {k: v for k, v in got["good"].items() if k != 99} == want
+
+    def test_plan_is_one_shuffle_and_one_arrow_pass(self, spark):
+        """The executed plan: one exchange by shape, one mapInArrow, and
+        no cache, join, window or union."""
+        from tests.test_kernels import TestOrganizeRings
+
+        out = assign_holes_distributed(
+            _rings_df(spark, TestOrganizeRings.CASES)
+        )
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # AQE prints both
+        assert plan.count("Exchange hashpartitioning(shape_id") == 1
+        assert plan.count("Exchange") == 1
+        assert plan.count("MapInArrow") == 1
+        for node in ("InMemoryTableScan", "Join", "Window", "Union"):
+            assert node not in plan, node
 
     def test_blockgroups_multipart_corpus(self, spark, ref_shapefile):
         """Every real multipart shape in the reference's blockgroups
@@ -491,13 +555,59 @@ class TestAssignHolesDistributed:
             cases[f"s{i}"] = rings
         multi = {k: v for k, v in cases.items() if len(v) > 1}
         assert multi, "fixture should contain multipart shapes"
-        for threshold in (64, 0):  # plain AND cell-blocked paths
-            got = _got_assignment(assign_holes_distributed(
-                _rings_df(spark, cases), cell_block_threshold=threshold
-            ))
-            for name, rings in cases.items():
-                want = _ref_assignment(ref_shapefile, rings)
-                assert got.get(name, {}) == want, (name, threshold)
+        got = _got_assignment(assign_holes_distributed(_rings_df(spark, cases)))
+        for name, rings in cases.items():
+            assert got.get(name, {}) == _ref_assignment(rings), name
+
+
+def test_hole_kernel_matches_scalar_organizer_on_random_shapes():
+    """The Arrow kernel alone, no Spark: random shapes of overlapping
+    CW/CCW squares and diamonds (nested exteriors, multi-candidate
+    holes, area ties) assign exactly as the scalar organizer does."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    from pyshp_spark.kernels.rings import RingSamplingError  # noqa: PLC0415
+    from pyshp_spark.operators.spatial import _assign_holes  # noqa: PLC0415
+
+    rng = np.random.default_rng(1)
+
+    def ring():
+        # big exteriors, small holes: most holes have several candidates
+        cw = rng.random() < 0.5
+        cx, cy = rng.integers(0, 16, 2).astype(float)
+        r = float(rng.integers(3, 11) if cw else rng.integers(1, 4))
+        if rng.random() < 0.5:
+            return _square(cx - r, cy - r, 2 * r, cw=cw)
+        pts = [(cx, cy + r), (cx + r, cy), (cx, cy - r), (cx - r, cy)]
+        pts = pts if cw else pts[::-1]
+        return pts + pts[:1]
+
+    cases = {f"s{i}": [ring() for _ in range(rng.integers(1, 12))]
+             for i in range(400)}
+    rows = [(name, i, ring_bbox(np.asarray(r, dtype=float)),
+             bytes(wkb_polygon([r])))
+            for name, rings in cases.items() for i, r in enumerate(rings)]
+    bb = np.array([r[2] for r in rows])
+    t = pa.table({
+        "shape_id": [r[0] for r in rows], "ring_idx": [r[1] for r in rows],
+        "wkb": [r[3] for r in rows], "xmin": bb[:, 0], "ymin": bb[:, 1],
+        "xmax": bb[:, 2], "ymax": bb[:, 3],
+    })
+    names = ["shape_id", "ring_idx", "role", "parent_idx"]
+    got = {}
+    for b in _assign_holes(t, names):
+        for r in b.to_pylist():
+            got.setdefault(r["shape_id"], {})[r["ring_idx"]] = (
+                r["role"], r["parent_idx"])
+    checked = 0
+    for name, rings in cases.items():
+        try:
+            want = _ref_assignment(rings)
+        except RingSamplingError:  # the reference raises; the kernel orphans
+            continue
+        assert got[name] == want, name
+        checked += 1
+    assert checked > 300
 
 
 class TestCascadeStageReuse:

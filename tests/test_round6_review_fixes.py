@@ -297,24 +297,6 @@ class TestRingSampleEdges:
         r = out.collect()[0]
         assert r["__rs_cw"] == "user-owned" and r["sx"] is not None
 
-    def test_wkb_cw_only_forces_nullable_schema(self, spark):
-        from pyspark.sql.types import (
-            BinaryType, IntegerType, StructField, StructType,
-        )
-
-        schema = StructType([
-            StructField("pid", IntegerType(), False),
-            StructField("wkb", BinaryType(), False),  # non-nullable in
-        ])
-        df = spark.createDataFrame(
-            [(1, bytes(wkb_polygon([_ring(0.0, 0.0, 1.0, cw=False)])))],
-            schema=schema,
-        )
-        out = with_ring_stats(df, wkb_cw_only=True)
-        assert out.schema["wkb"].nullable  # schema must not lie
-        row = out.collect()[0]
-        assert row["wkb"] is None and row["is_cw"] is False
-
 
 def test_rotate_slice_does_not_persist_cursor(tmp_path, monkeypatch):
     spec = importlib.util.spec_from_file_location(

@@ -281,7 +281,9 @@ def test_hole_assign_caches_released(spark):
     for _ in range(2):
         out = assign_holes_distributed(rings)
         assert out.count() == 6
-        assert _n_persisted(spark) - base <= 3  # one generation
+        # hole assignment persists nothing
+        assert _n_persisted(spark) - base <= 0
+    # the retired "assign_holes" generation is still accepted, a no-op
     sp.release_operator_caches("assign_holes")
     # <= for the same async-unpersist reason as the PIP test
     assert _n_persisted(spark) <= base

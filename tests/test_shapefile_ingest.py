@@ -216,6 +216,22 @@ class TestOneSchemaRule:
         assert (a.N0, a.D0, a.L0, a.C0) == (7, dt.date(2020, 5, 17), True, "hi")
         assert (b.N0, b.D0, b.L0, b.C0) == (None, None, None, None)
 
+    def test_invalid_date_is_null(self, spark, tmp_path):
+        """A D value that is not a date reads as NULL in the date
+        column, through both readers, instead of failing the read."""
+        import datetime as dt  # noqa: PLC0415
+
+        _write_layer(tmp_path, "a", [(1.0, 2.0)],
+                     ([("D0", "D", 8, 0), ("N0", "N", 8, 0)],
+                      [[dt.date(2020, 5, 17), 7]]))
+        dbf = tmp_path / "a.dbf"
+        raw = dbf.read_bytes()
+        assert raw.count(b"20200517") == 1
+        dbf.write_bytes(raw.replace(b"20200517", b"2020XX17"))
+        df = self._both(spark, tmp_path)
+        assert dict(df.dtypes)["D0"] == "date"
+        assert [(r.D0, r.N0) for r in df.collect()] == [(None, 7)]
+
     def test_bbox_that_empties_the_first_file(self, spark, tmp_path):
         _write_layer(tmp_path, "a", [(10.0, 20.0)],
                      ([("COMMON", "N", 8, 0)], [[1]]))
@@ -262,3 +278,21 @@ def test_url_ingest_types_2d_layer_from_first_url(spark, tmp_path):
     assert types["COMMON"] == "bigint" and "ONLY_B" not in types
     rows = sorted((r.src, r.COMMON, r.xmin) for r in df.collect())
     assert rows == [(urls[0], 1, 1.0), (urls[1], 2, 3.0)]
+
+
+def test_url_ingest_zip_names_url_and_member(spark, tmp_path):
+    """A ``.zip`` URL reads every member; ``src`` is the URL, ``!/``
+    and the member name, in the one ``src`` column."""
+    import zipfile  # noqa: PLC0415
+
+    _write_layer(tmp_path, "layer", [(1.0, 2.0), (3.0, 4.0)],
+                 ([("V", "N", 8, 0)], [[1], [2]]))
+    zpath = tmp_path / "layer.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for ext in ("shp", "shx", "dbf"):
+            zf.write(tmp_path / f"layer.{ext}", f"layer.{ext}")
+    url = f"file://{zpath}"
+    df = read_shapefile_urls(spark, [url])
+    assert df.columns.count("src") == 1
+    rows = sorted((r.src, r.V, r.xmin) for r in df.collect())
+    assert rows == [(url + "!/layer.shp", 1, 1.0), (url + "!/layer.shp", 2, 3.0)]
